@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Funnel, GapFill}
-import graft.sources.Tables
+import graft.sources.Tables.{load => t}
 
 /** q95+: the analytics/cleaning tail — event funnels, time-series
   * gap fill, weighted sampling, text canonicalization, format
@@ -13,9 +13,6 @@ import graft.sources.Tables
   * decimal-summed and round-9'd; ranks break ties on ids.
   */
 object AnalyticsEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---------------------------------------------------------------
   // q95 — ordered-step event funnel (signup → view → click →

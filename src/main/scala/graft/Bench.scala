@@ -1,92 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = Runner.sfDir
     // min-of-N: a single wall-clock sample conflates host noise with plan
     // cost (round 6's one-shot run landed 3x the steady-state series in a
     // contiguous window). N runs, report per-query minimums.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    // scale-adaptive INITIAL shuffle partitioning (r15, guide §2.2):
-    // `shuffle.partitions` stays `cpus` (the driver's low-core
-    // comparability contract), but AQE can only COALESCE partitions,
-    // never split them, so the pre-coalesce count must track the DATA
-    // — a cpus-sized constant makes every post-shuffle partition
-    // input/cpus bytes at any scale (terabytes at 100 TB).
-    // initialPartitionNum = max(cpus, inputBytes / target) with
-    // target = SPARK_GRAFT_TARGET_PARTITION_MB (default 64 MB local;
-    // production: 128-256 MB per guide §2.2). At the bench SFs
-    // (sf0.1 = 17 MB) this resolves to exactly `cpus`, so the
-    // driver's bench numbers stay comparable; AQE's parallelism-first
-    // coalescing still merges sub-1MB fragments either way.
-    val targetMb =
-      sys.env.getOrElse("SPARK_GRAFT_TARGET_PARTITION_MB", "64").toLong
-    val inputBytes =
-      try {
-        import scala.jdk.CollectionConverters._
-        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(sfDir))
-        try walk.iterator().asScala
-          .filter(java.nio.file.Files.isRegularFile(_))
-          .map(java.nio.file.Files.size).sum
-        finally walk.close()
-      } catch { case _: Exception => 0L }
-    val initialParts =
-      math.max(cpus.toInt, (inputBytes / (targetMb << 20)).toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initialParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm up JVM + codegen + parquet reader so the first measured
-    // query isn't charged for session startup
-    try SparkEntry.queries("q01_full_scan_agg")(spark, sfDir).count()
-    catch { case _: Throwable => }
-    // fixed name order: Map iteration order is arbitrary, and stable
-    // ordering makes per-query timings comparable across rounds.
-    // SPARK_GRAFT_BENCH_ONLY=q89,q38 narrows to matching prefixes —
-    // for targeted noise-vs-regression re-measures; the driver never
-    // sets it, so official rounds always time the full registry.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
-    // SPARK_GRAFT_BENCH_SLICE=i/k — time only round-robin slice i of
-    // the sorted registry in THIS JVM. tools/bench_chunks.sh runs one
-    // JVM per slice and merges, so a 300+-query sweep's accumulated
-    // codegen/JIT-cache pressure can't tax late queries (BASELINE.md's
-    // q155 lesson: 1.57s standalone vs 3.86s at sweep position 150+).
-    // Round-robin (j % k == i) keeps each slice a cheap/expensive mix.
-    val slice = sys.env.get("SPARK_GRAFT_BENCH_SLICE").map { s =>
-      val Array(i, k) = s.split("/").map(_.trim.toInt)
-      require(k >= 1 && i >= 0 && i < k, s"slice i/k needs 0<=i<k: $s")
-      (i, k)
-    }
-    val names0 = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.isEmpty || only.exists(n.startsWith))
-    val names = slice.fold(names0) { case (i, k) =>
-      names0.zipWithIndex.collect { case (n, j) if j % k == i => n }
-    }
+    val spark = Runner.session(sfDir, "WARN")
+    Runner.warmUp(spark, sfDir)
+    // fixed name order: stable ordering makes per-query timings
+    // comparable across rounds. SPARK_GRAFT_BENCH_ONLY=q89,q38 narrows
+    // to matching prefixes, for targeted noise-vs-regression re-measures.
+    // SPARK_GRAFT_BENCH_SLICE=i/k times only slice i of k in THIS JVM:
+    // tools/bench_chunks.sh runs one JVM per slice and merges, so a
+    // 300+-query sweep's accumulated codegen/JIT-cache pressure can't tax
+    // late queries (BASELINE.md's q155 lesson: 1.57s standalone vs 3.86s
+    // at sweep position 150+).
+    val names = Runner.select(sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", ""),
+      sys.env.get("SPARK_GRAFT_BENCH_SLICE"))
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     val best = scala.collection.mutable.Map.empty[String, Double]
     val runTotals = (1 to runs).map { _ =>
       names.map { name =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
-            failed += name
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            false
-          }
-        val sec = (System.nanoTime() - t0) / 1e9
+        val (sec, ok) = Runner.run(spark, sfDir, name, "bench")(_.count())
         // a fast failure is not a fast query: only successful runs
         // compete for the per-query minimum
         if (ok) best(name) = math.min(best.getOrElse(name, Double.MaxValue), sec)
+        else failed += name
         sec
       }.sum
     }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.SegmentDedup
 import graft.ops.{Packing, Sampling}
-import graft.sources.Tables
+import graft.sources.Tables.{load => t}
 import graft.text.TextAnalysis
 
 /** q81–q84: the corpus-preparation tail of a pretraining data
@@ -16,9 +16,6 @@ import graft.text.TextAnalysis
   * split, mix30 avalanche, round-9 doubles, rank-on-rounded-score).
   */
 object CorpusEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---------------------------------------------------------------
   // q81 — paragraph-level exact dedup (C4/RefinedWeb boilerplate

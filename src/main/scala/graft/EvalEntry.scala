@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ml.{Eval, LogRegGd, NaiveBayes, Stump}
 import graft.ops.{IdentityStitch, Sampling}
 import graft.quality.Did
-import graft.sources.Tables
+import graft.sources.Tables.{load => t}
 
 /** q274+: model-evaluation and distributed-training operators — the
   * measurement-and-learning layer a corpus pipeline wraps around its
@@ -16,9 +16,6 @@ import graft.sources.Tables
   * generated from the SAME Scala constants as the Spark plans.
   */
 object EvalEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private val En = "en" // positive class of every doc-label fixture
 
@@ -1130,7 +1127,7 @@ object EvalEntry {
   // default takes the CovMoments moments path — one fused d² loop
   // per row instead of d² exploded rows (the exact path measured 14×
   // slower at this width — 42.0s vs 2.9s, sf0.1 min-of-3 via
-  // graft.tools.WidthBench; BASELINE.md r10). ORACLE-GATED since r11
+  // BASELINE.md r10). ORACLE-GATED since r11
   // (VERDICT r10 item 4): CovMoments accumulates exact integers
   // (6dp-quantized components, 128-bit totals), so the moments path
   // is bit-identical to the exact decimal chain in any merge order

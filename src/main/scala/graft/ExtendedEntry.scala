@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructT
 
 import graft.ops.{Sampling, Skew}
 import graft.sources.Tables
+import graft.sources.Tables.{load => t}
 import graft.streaming.Streams
 import graft.text.TextAnalysis
 
@@ -21,9 +22,6 @@ import graft.text.TextAnalysis
   * against a batch SQL oracle.
   */
 object ExtendedEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private def dec2(c: Column) = c.cast("decimal(18,2)")
 

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.Tables.{load => t}
 
 /** q183+: the round-8 mining/analytics/governance tail — span-level
   * excision, decay scoring, categorical drift, word blocklists, JSON
@@ -25,9 +25,6 @@ import graft.sources.Tables
   * Spark plan or restating the semantics in portable SQL.
   */
 object MiningEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---------------------------------------------------------------
   // q183 — exact-substring span excision (dedup/ExactSubstr): every

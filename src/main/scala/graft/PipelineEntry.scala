@@ -8,6 +8,7 @@ import graft.dag.Dag
 import graft.dedup.Dedup
 import graft.multimodal.Multimodal
 import graft.sources.{Catalog, CatalogEntries, Database, Incremental, Tables}
+import graft.sources.Tables.{load => t}
 import graft.text.TextAnalysis
 
 /** q22–q45: the LLM-training-data operators (dedup, similarity, text
@@ -21,9 +22,6 @@ import graft.text.TextAnalysis
   * checks stay meaningful.
   */
 object PipelineEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** documents ∪ exact copies of every 50th doc (ids offset 1e6). */
   private def exactCorpus(s: SparkSession, dir: String): DataFrame = {

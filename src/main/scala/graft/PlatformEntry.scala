@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dag.Dag
 import graft.ops.Snapshot
-import graft.sources.Tables
+import graft.sources.Tables.{load => t}
 
 /** q107+: the platform-surface tail — live JDBC database extraction,
   * dbt schema-YAML metadata round-trip, and the model/snapshot
@@ -14,9 +14,6 @@ import graft.sources.Tables
   * ordering.
   */
 object PlatformEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private def sanitize(dir: String): String =
     dir.replaceAll("[^0-9a-zA-Z.]", "_")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Cidr, Geo, Sampling}
-import graft.sources.Tables
+import graft.sources.Tables.{load => t}
 
 /** q247+: network / spatial / lifecycle signal operators — CIDR
   * longest-prefix IP classification, integer-grid spatial radius
@@ -15,9 +15,6 @@ import graft.sources.Tables
   * SQL generated from the SAME Scala constants as the Spark plan.
   */
 object SignalsEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** Shared q250/q270 oracle chain: the α=1/4, β=1/10 fixed-point
     * Holt recursion over `daily` (needs WITH RECURSIVE +

@@ -1,12 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev smoke main mirroring the driver's entry() rows>0 check. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     println(s"SMOKE rows=${df.count()}")

@@ -7,6 +7,7 @@ import graft.ops.{AsOfJoin, IncrementalModel, RangeJoin, RowFilters, SchemaContr
 import graft.ops.RowFilters._
 import graft.quality.{Checks, Freshness}
 import graft.sources.{Catalog, FileSource, Incremental, Tables}
+import graft.sources.Tables.{load => t}
 import graft.dag.Dag
 import graft.streaming.Streams
 
@@ -34,9 +35,6 @@ object SparkEntry {
     * double→decimal rounding is unambiguous.)
     */
   private def dec2(c: org.apache.spark.sql.Column) = c.cast("decimal(18,2)")
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(spark, dir, name)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

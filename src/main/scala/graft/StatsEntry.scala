@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.Tables.{load => t}
 
 /** q225+: the round-8 statistics/time-series/graph tail —
   * nonparametric two-sample tests (KS, Mann–Whitney) next to q189's
@@ -16,9 +16,6 @@ import graft.sources.Tables
   * constants as the Spark plan).
   */
 object StatsEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---------------------------------------------------------------
   // q225 — two-sample Kolmogorov–Smirnov per event type

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.Tables.{load => t}
 
 /** q113+: the training-data tail — leakage-safe splits, mergeable
   * sketch profiling, embedding quantization, HTML main-text
@@ -17,9 +17,6 @@ import graft.sources.Tables
   * randomized.
   */
 object TrainEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---------------------------------------------------------------
   // q113 — leakage-safe train/val/test split: exact copies are

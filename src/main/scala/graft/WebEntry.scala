@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.Tables.{load => t}
 
 /** q130+: the web-graph / warehouse-metadata / product-analytics
   * tail — link extraction into a domain graph, integer-exact
@@ -18,9 +18,6 @@ import graft.sources.Tables
   * the semantics in portable SQL.
   */
 object WebEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private def sqlLit(s: String): String = "'" + s.replace("'", "''") + "'"
 

@@ -38,7 +38,7 @@ object PcaPower {
     * contributes one xi for each j; fixed-width vectors, the same
     * assumption the iteration and the oracle already make), 26%
     * less q318 wall-clock at d=64 (6.22s → 4.62s) and 43% at d=256
-    * (73.7s → 42.0s, WidthBench).
+    * (73.7s → 42.0s, BASELINE.md r10).
     */
   private def covariance(df: DataFrame, vecCol: String): DataFrame = {
     val q = df.select(transform(col(vecCol),
@@ -104,7 +104,7 @@ object PcaPower {
     * cutoff assumed was explode-friendly: at d=64 (sf0.1, min-of-3)
     * the moments path wins 1.0s vs 3.4s — the explode path's
     * rows × d² decimal multiplies dominate at EVERY width we can
-    * measure (d=256: 42.0s vs 2.9s, WidthBench; BASELINE.md r10
+    * measure (d=256: 42.0s vs 2.9s; BASELINE.md r10
     * row), so the cutoff is now 0 and the auto default always takes
     * the moments aggregate. Both paths produce IDENTICAL covariance
     * entries since the r11 exact-integer CovMoments (re-verified

@@ -67,29 +67,6 @@ object Dedup {
   def hashedSet(features: Column): Column =
     array_sort(array_distinct(transform(features, f => xxhash64(f))))
 
-  /** Exact Jaccard between two hashed sets (unrounded — threshold
-    * filters must compare against this; round only for display).
-    *
-    * Native one-merge-pass since r14 (every caller passes the
-    * SORTED-DISTINCT arrays [[hashedSet]]/wordShingleHashes emit):
-    * the array_intersect/array_union form built two hash sets per
-    * candidate pair — the dominant task time of the threshold-sweep
-    * and pair-verify steps. |∩|/|∪| value-identical (|∪| =
-    * |A|+|B|−|∩| on distinct inputs, 0/0 stays NaN).
-    */
-  def setJaccard(a: Column, b: Column): Column =
-    graft.functions.TextHashes.sortedJaccard(a, b)
-
-  /** MinHash signature over a hashed feature set — HOF REFERENCE
-    * IMPLEMENTATION, kept for the measured comparison in SURVEY §4
-    * (102s vs 0.48s at sf0.1): the hot path uses the native
-    * `TextHashExprs.MinHashSignature`. Element s is min over features
-    * of xxhash64(feature_hash, s).
-    */
-  def minhashSignature(hashedFeatures: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      s => array_min(transform(hashedFeatures, h => xxhash64(h, s))))
-
   /** LSH banding of a signature: array of (band_id, band_hash) where
     * band_hash covers `rowsPerBand` consecutive signature slots.
     */
@@ -171,7 +148,10 @@ object Dedup {
       // reported value stays unrounded too: |∩|/|∪| is an exact small
       // int division, identical bitwise in any IEEE engine — rounding
       // would only ADD engine-specific half-way behavior.
-      .select(col("a"), col("b"), setJaccard(col("hs_a"), col("hs_b")).as("jaccard"))
+      // hs_a/hs_b are wordShingleHashes output: sorted and distinct, as
+      // sortedJaccard requires
+      .select(col("a"), col("b"),
+        graft.functions.TextHashes.sortedJaccard(col("hs_a"), col("hs_b")).as("jaccard"))
       .filter(col("jaccard") >= tau)
       .distinct()
   }
@@ -262,7 +242,7 @@ object Dedup {
       .filter(greatest(size(col("hs_a")), size(col("hs_b"))) * tau <=
         least(size(col("hs_a")), size(col("hs_b"))))
       .select(col("a"), col("b"),
-        setJaccard(col("hs_a"), col("hs_b")).as("jaccard"))
+        graft.functions.TextHashes.sortedJaccard(col("hs_a"), col("hs_b")).as("jaccard"))
       .filter(col("jaccard") >= tau)
       .distinct() // a pair may collide in several bands
   }
@@ -329,32 +309,6 @@ object Dedup {
   // ----------------------------------------------------------------
   // SimHash — q24
   // ----------------------------------------------------------------
-
-  private val BitMasks: Seq[Long] = Seq.tabulate(64)(1L << _)
-
-  /** 64-bit SimHash — HOF REFERENCE IMPLEMENTATION (see SURVEY §4
-    * measurement; hot path uses native `TextHashExprs.SimHash64`).
-    * Votes over word-BIGRAM features (see `simhashEval` for why
-    * bigrams: single-token votes collapse on low-vocabulary corpora);
-    * each bit of the feature hash votes ±1; fingerprint bit = sign of
-    * the tally. Disjoint-bit summation assembles the long without
-    * overflow (each addition touches one fresh bit).
-    */
-  def simhash(text: Column): Column = {
-    val toks = split(lower(text), "\\s+")
-    val feats = when(size(toks) <= 1, transform(toks, t => xxhash64(t)))
-      .otherwise(transform(sequence(lit(0), size(toks) - 2),
-        i => xxhash64(element_at(toks, i + 1), element_at(toks, i + 2))))
-    val masks = typedlit(BitMasks)
-    val tally = aggregate(
-      feats,
-      array_repeat(lit(0), 64),
-      (acc, h) => zip_with(acc, masks,
-        (a, m) => a + when(h.bitwiseAND(m) =!= 0, 1).otherwise(-1)))
-    aggregate(
-      zip_with(tally, masks, (s, m) => when(s > 0, m).otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc + x)
-  }
 
   /** Near-duplicate pairs with Hamming distance ≤ `maxHamming`,
     * found via the chunk pigeonhole (Manku/Jain/Sarma WWW'07): split

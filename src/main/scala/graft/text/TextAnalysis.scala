@@ -181,24 +181,6 @@ object TextAnalysis {
   def maxBigramMultiplicity(text: Column): Column =
     graft.functions.TextHashes.bigramMaxMultiplicity(text)
 
-  /** HOF REFERENCE IMPLEMENTATION of the same scan (sort + run-length
-    * fold) — kept for the native-vs-HOF parity spec, same pattern as
-    * Dedup.minhashSignature.
-    */
-  def maxBigramMultiplicityHof(text: Column): Column = {
-    val sorted = array_sort(wordBigrams(text))
-    val scanned = aggregate(
-      sorted,
-      struct(lit("").as("prev"), lit(0).as("run"), lit(0).as("best")),
-      (acc, x) => {
-        val run = when(x === acc.getField("prev"), acc.getField("run") + 1)
-          .otherwise(lit(1))
-        struct(x.as("prev"), run.as("run"),
-          greatest(acc.getField("best"), run).as("best"))
-      })
-    scanned.getField("best").cast("long")
-  }
-
   /** Fraction of bigram occurrences taken by the single most-repeated
     * bigram — the cheap repetition filter (a doc whose top 2-gram
     * covers >10–20% of it is boilerplate/spam under Gopher rules).

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 
 /** Diagnostic main measuring the BPE production-vocab path (VERDICT
@@ -40,18 +39,11 @@ import org.apache.spark.storage.StorageLevel
   */
 object BpeBench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = graft.Runner.sfDir
     val nMerges = sys.env.getOrElse("SPARK_GRAFT_BPE_MERGES", "1000").toInt
     val mode = sys.env.getOrElse("SPARK_GRAFT_BPE_MODE", "both")
     val vocabSpec = sys.env.getOrElse("SPARK_GRAFT_BPE_VOCAB", "corpus")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Runner.session(sfDir, "ERROR")
     import graft.text.Bpe
 
     val words = (if (vocabSpec == "corpus")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main dumping `.explain("formatted")` for registry
   * queries — the optimization-round evidence trail (plans/rNN/
   * <query>_before.txt / _after.txt). Not part of any gated artifact.
@@ -11,50 +9,34 @@ import org.apache.spark.sql.SparkSession
   *     sbt -batch "runMain graft.tools.PlanDump q282,q341"
   *
   * Args are comma/space-separated query-name prefixes; no args dumps
-  * every registry query. Uses the bench's session shape (same master,
-  * same shuffle partitions) so the dumped plan is the one the bench
-  * executes.
+  * every registry query. Uses the bench's session (graft.Runner), so
+  * the dumped plan is the one the bench executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = graft.Runner.sfDir
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_OUT", "plans/r14")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Runner.session(sfDir, "ERROR")
     // SPARK_GRAFT_PLAN_NOBARRIER=1 dumps the FULL operator shape:
     // barriers (localCheckpoint) otherwise cut explain at `Scan
     // ExistingRDD`, hiding everything upstream of the cut. The
     // barrier is semantics-neutral, so the no-barrier plan is the
     // executed plan with the cuts inlined.
     val noBarrier = sys.env.get("SPARK_GRAFT_PLAN_NOBARRIER").contains("1")
-    val prefixes = args.flatMap(_.split("[,\\s]+")).filter(_.nonEmpty).toSeq
-    val names = graft.SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => prefixes.isEmpty || prefixes.exists(n.startsWith))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     // explainMode is scoped (ADVICE r14): restored even on throw, so
     // no session can outlive a dump with identity barriers
     graft.plans.Plans.withExplainMode(noBarrier) {
-    names.foreach { name =>
-      try {
-        val df = graft.SparkEntry.queries(name)(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
-        println(s"[plandump] $name -> $outDir/${name}_$suffix.txt")
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
+      graft.Runner.select(args.mkString(",")).foreach { name =>
+        graft.Runner.run(spark, sfDir, name, "plandump") { df =>
+          val plan = df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)
+          java.nio.file.Files.writeString(
+            java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
+          println(s"[plandump] $name -> $outDir/${name}_$suffix.txt")
+        }
       }
-    }
     }
     spark.stop()
   }

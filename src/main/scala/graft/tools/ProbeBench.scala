@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Diagnostic main measuring the steady-state INDEXED-PROBE cost of
@@ -15,15 +14,8 @@ import org.apache.spark.sql.functions._
   */
 object ProbeBench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = graft.Runner.sfDir
+    val spark = graft.Runner.session(sfDir, "ERROR")
     import graft.ops.ArtifactIndex
 
     val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Diagnostic main profiling registry queries at the JOB/STAGE level —
@@ -10,79 +9,40 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * Spark jobs the action fired (driver-synchronous round trips), the
   * number of stages (≈ exchanges + scans), total tasks, and summed
   * task time. High jobs ⇒ eager scalars / barriers / metadata scans;
-  * high stages at fixed jobs ⇒ shuffle-heavy plans. Not part of any
-  * gated artifact.
+  * high stages at fixed jobs ⇒ shuffle-heavy plans. `perfbench
+  * --crosscheck` parses its `[profile]` lines.
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *     sbt -batch "runMain graft.tools.StageProfile q341,q282"
   */
 object StageProfile {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = graft.Runner.sfDir
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROFILE_RUNS", "3").toInt.max(1)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    // A/B experiment hook: SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      // skip malformed segments (no '=', trailing ';' empties) rather
-      // than MatchError-killing the profiling run (ADVICE r14)
-      kv.split("=", 2) match {
-        case Array(k, v) => builder.config(k.trim, v.trim)
-        case _           => ()
-      }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Runner.session(sfDir, "ERROR")
 
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)
     val taskMs = new AtomicLong(0L)
-    val detail = sys.env.get("SPARK_GRAFT_PROFILE_DETAIL").contains("1")
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
-        if (detail) {
-          val names = j.stageInfos.map(_.name.takeWhile(_ != '$')).distinct
-          println(s"[job] id=${j.jobId} stages=${j.stageInfos.size} " +
-            s"sites=${names.mkString("|").take(120)}")
-        }
-      }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         stages.incrementAndGet()
         tasks.addAndGet(s.stageInfo.numTasks)
-        if (detail) {
-          val i = s.stageInfo
-          val rt = i.taskMetrics.executorRunTime
-          if (rt > 100) println(f"[stage] id=${i.stageId} tasks=${i.numTasks} " +
-            f"runMs=$rt%d ${i.name.take(90)}")
-        }
       }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
         if (t.taskMetrics != null)
           taskMs.addAndGet(t.taskMetrics.executorRunTime)
     })
 
-    val prefixes = args.flatMap(_.split("[,\\s]+")).filter(_.nonEmpty).toSeq
-    val names = graft.SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => prefixes.isEmpty || prefixes.exists(n.startsWith))
-    // warm-up
-    try graft.SparkEntry.queries("q01_full_scan_agg")(spark, sfDir).count()
-    catch { case _: Throwable => }
+    val names = graft.Runner.select(args.mkString(","))
+    graft.Runner.warmUp(spark, sfDir)
     names.foreach { name =>
       val samples = (1 to runs).map { _ =>
         jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0L)
-        val t0 = System.nanoTime()
-        try graft.SparkEntry.queries(name)(spark, sfDir).count()
-        catch { case e: Throwable =>
-          System.err.println(s"[profile] $name FAILED: ${e.getMessage}")
-        }
-        val sec = (System.nanoTime() - t0) / 1e9
+        val (sec, _) = graft.Runner.run(spark, sfDir, name, "profile")(_.count())
         // listener is async — give it a beat to drain
         Thread.sleep(150)
         (sec, jobs.get(), stages.get(), tasks.get(), taskMs.get())

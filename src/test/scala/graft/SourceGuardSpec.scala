@@ -1,0 +1,87 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funspec.AnyFunSpec
+import org.scalatest.matchers.should.Matchers
+
+/** Keeps one session builder and a fixed set of mains: every session
+  * comes from `Session.local`, and no one-off diagnostic main creeps
+  * back into `src/`. Comment lines are ignored; code is not.
+  */
+class SourceGuardSpec extends AnyFunSpec with Matchers {
+
+  private val root = Paths.get("src")
+
+  private val keptMains = Set(
+    "main/scala/graft/Bench.scala",
+    "main/scala/graft/Verify.scala",
+    "main/scala/graft/Smoke.scala",
+    "main/scala/graft/tools/StageProfile.scala",
+    "main/scala/graft/tools/ProbeBench.scala",
+    "main/scala/graft/tools/PlanDump.scala",
+    "main/scala/graft/tools/BpeBench.scala")
+
+  private val Builder = """SparkSession\s*\.\s*builder"""
+  private val Main = """\bdef\s+main\s*\("""
+
+  /** Source path relative to `src/` (with `/` separators) → code. */
+  private lazy val sources: Map[String, String] = {
+    val walk = Files.walk(root)
+    try walk.iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .map(p => relative(p) -> codeLines(Files.readString(p)))
+      .toMap
+    finally walk.close()
+  }
+
+  private def relative(p: Path): String =
+    root.relativize(p).iterator().asScala.mkString("/")
+
+  /** `code` less its comment lines: those whose trimmed text starts with
+    * a line-comment, block-comment or Scaladoc marker. Line by line, so a
+    * comment marker inside a string literal cannot hide the code after it.
+    */
+  private def codeLines(code: String): String =
+    code.linesIterator.filterNot { line =>
+      val t = line.trim
+      t.startsWith("//") || t.startsWith("/*") || t.startsWith("*")
+    }.mkString("\n")
+
+  private def found(pattern: String, code: String): Boolean =
+    pattern.r.findFirstIn(code).isDefined
+
+  private def filesMatching(pattern: String): Set[String] =
+    sources.collect { case (f, code) if found(pattern, code) => f }.toSet
+
+  describe("src/") {
+    it("is where the guard looks") {
+      Files.isDirectory(root) shouldBe true
+      sources.keySet should contain("main/scala/graft/Session.scala")
+    }
+    it("builds sessions only in Session.scala") {
+      filesMatching(Builder) shouldBe Set("main/scala/graft/Session.scala")
+    }
+    it("has no mains beyond the kept ones") {
+      filesMatching(Main) shouldBe keptMains
+    }
+  }
+
+  describe("the comment filter") {
+    // split so that this file does not itself hold the patterns
+    val builder = "SparkSession" + ".builder()"
+    val main = "def " + "main(args: Array[String]): Unit = ()"
+    it("sees code after a comment marker inside a string literal") {
+      val code = s"""val rules = "Disallow: /articles/*7$$"\nval s = $builder.getOrCreate()\n$main\n"""
+      found(Builder, codeLines(code)) shouldBe true
+      found(Main, codeLines(code)) shouldBe true
+    }
+    it("ignores line and block comments") {
+      val code = s"// $builder\n/* $main\n * $builder\n */\nval x = 1\n"
+      found(Builder, codeLines(code)) shouldBe false
+      found(Main, codeLines(code)) shouldBe false
+    }
+  }
+}

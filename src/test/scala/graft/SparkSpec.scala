@@ -6,13 +6,10 @@ import org.scalatest.matchers.should.Matchers
 
 /** Shared local session for all suites (one JVM per `sbt test`). */
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** Fixed, not `SPARK_GRAFT_CPUS`: specs that assert partition counts
+    * must not depend on the host. */
+  val Cpus = 4
+  lazy val session: SparkSession = Session.local(Cpus)
 }
 
 trait SparkSpec extends AnyFunSpec with Matchers {

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import graft.{GraftExtensions, SparkSpec}
 
@@ -7,10 +8,15 @@ class GraftFunctionsSpec extends SparkSpec {
 
   describe("SQL registration") {
     it("registers graft_* functions usable from spark.sql") {
-      import spark.implicits._
-      GraftExtensions.register(spark)
+      // every session already holds the injected functions, so drop one
+      // from a new session: only register can bring it back
+      val fresh = spark.newSession()
+      import fresh.implicits._
+      fresh.sql("DROP TEMPORARY FUNCTION graft_simhash64")
+      an[AnalysisException] should be thrownBy fresh.sql("SELECT graft_simhash64('a')")
+      GraftExtensions.register(fresh)
       Seq("a b c d").toDF("text").createOrReplaceTempView("gfs_docs")
-      val viaSql = spark.sql(
+      val viaSql = fresh.sql(
         """SELECT graft_simhash64(text) AS fp,
           |  size(graft_word_shingle_hashes(text, 2)) AS n,
           |  size(graft_minhash_signature(
@@ -18,7 +24,7 @@ class GraftFunctionsSpec extends SparkSpec {
           |FROM gfs_docs""".stripMargin)
         .as[(Long, Int, Int)].head()
       // the full registered surface resolves from SQL
-      spark.sql(
+      fresh.sql(
         """SELECT graft_simhash_poly64(text), size(graft_word_bigrams(text)),
           |  graft_bigram_max_mult(text), graft_lang_predict(text)
           |FROM gfs_docs""".stripMargin).collect().length shouldBe 1

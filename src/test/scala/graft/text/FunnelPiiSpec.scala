@@ -6,6 +6,23 @@ import graft.SparkSpec
 class FunnelPiiSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Reference form of TextAnalysis.maxBigramMultiplicity as a Spark
+    * higher-order-function chain: sort the bigrams, then fold the runs.
+    */
+  private def maxBigramMultiplicityHof(text: org.apache.spark.sql.Column) = {
+    val sorted = array_sort(TextAnalysis.wordBigrams(text))
+    val scanned = aggregate(
+      sorted,
+      struct(lit("").as("prev"), lit(0).as("run"), lit(0).as("best")),
+      (acc, x) => {
+        val run = when(x === acc.getField("prev"), acc.getField("run") + 1)
+          .otherwise(lit(1))
+        struct(x.as("prev"), run.as("run"),
+          greatest(acc.getField("best"), run).as("best"))
+      })
+    scanned.getField("best").cast("long")
+  }
+
   describe("filterFunnel") {
     it("reports cumulative survivors per rule in one pass") {
       val docs = Seq(
@@ -61,7 +78,7 @@ class FunnelPiiSpec extends SparkSpec {
       val docs = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "documents")
       docs.select(
           TextAnalysis.maxBigramMultiplicity(col("text")).as("native"),
-          TextAnalysis.maxBigramMultiplicityHof(col("text")).as("hof"))
+          maxBigramMultiplicityHof(col("text")).as("hof"))
         .filter(col("native") =!= col("hof")).count() shouldBe 0L
     }
     it("finds the max bigram multiplicity per row") {
