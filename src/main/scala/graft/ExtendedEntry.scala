@@ -720,14 +720,14 @@ object ExtendedEntry {
         StructField("n_nationkey", IntegerType),
         StructField("n_name", StringType),
         StructField("n_regionkey", IntegerType)))
-      RestSource.readPaged(s, s"http://127.0.0.1:${server.getAddress.getPort}/nation",
-          schema,
-          RestSource.PageConfig(pageSize = pageSize,
-            headers = Map("Authorization" -> token)))
-        .orderBy("n_nationkey")
-        // materialize while the fixture server is still up — consumers
-        // evaluate after this function returns (and stops it)
-        .localCheckpoint(true)
+      // materialize while the fixture server is still up — consumers
+      // evaluate after this function returns (and stops it)
+      graft.plans.Plans.materialize(
+        RestSource.readPaged(s, s"http://127.0.0.1:${server.getAddress.getPort}/nation",
+            schema,
+            RestSource.PageConfig(pageSize = pageSize,
+              headers = Map("Authorization" -> token)))
+          .orderBy("n_nationkey"))
     } finally server.stop(0)
   }
 
@@ -809,12 +809,12 @@ object ExtendedEntry {
           "nation_dim" -> StructType(Seq(
             StructField("n_nationkey", IntegerType),
             StructField("n_name", StringType)))))
-      tables("supplier_dim")
+      // materialize while the fixture is up
+      graft.plans.Plans.materialize(tables("supplier_dim")
         .join(tables("nation_dim"),
           col("s_nationkey") === col("n_nationkey"))
         .groupBy("n_name").agg(count(lit(1)).as("n_suppliers"))
-        .orderBy("n_name")
-        .localCheckpoint(true) // materialize while the fixture is up
+        .orderBy("n_name"))
     } finally server.stop(0)
   }
 

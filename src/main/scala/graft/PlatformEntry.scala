@@ -288,7 +288,7 @@ object PlatformEntry {
     // EAGER checkpoint: the pre-OPTIMIZE probe must materialize NOW —
     // a lazy plan would re-read the directory after the rewrite and
     // vacuously "agree" with itself
-    val before = probe().localCheckpoint(true)
+    val before = graft.plans.Plans.materialize(probe())
     // plant crash debris from a failed OPTIMIZE of a since-dropped
     // sibling table, aged past retention, then compact + vacuum —
     // the full maintenance cycle. (Debris under the LIVE index's own
@@ -308,7 +308,7 @@ object PlatformEntry {
     // EAGER checkpoint here too (r15, guide §1.2): `after` feeds both
     // exceptAll legs AND the gated output — unchecked, the LSH probe
     // join against the index ran 3× (once per consumer)
-    val after = probe().localCheckpoint(true)
+    val after = graft.plans.Plans.materialize(probe())
     // distributed equality — no driver collect: the multiset of probe
     // pairs must survive the rewrite exactly
     val diff = before.exceptAll(after).count() + after.exceptAll(before).count()

@@ -279,15 +279,14 @@ object TrainEntry {
         StructField("s_suppkey", LongType),
         StructField("s_name", StringType),
         StructField("s_nationkey", IntegerType)))
-      RestSource.readOffset(s,
+      // materialize while the fixture server is still up — consumers
+      // evaluate after this function returns (and stops it)
+      graft.plans.Plans.materialize(RestSource.readOffset(s,
           s"http://127.0.0.1:${server.getAddress.getPort}/supplier",
           schema,
           RestSource.OffsetConfig(limit = 13,
             headers = Map("Authorization" -> token)))
-        .orderBy("s_suppkey")
-        // materialize while the fixture server is still up — consumers
-        // evaluate after this function returns (and stops it)
-        .localCheckpoint(true)
+        .orderBy("s_suppkey"))
     } finally server.stop(0)
   }
 
@@ -647,9 +646,9 @@ object TrainEntry {
   // ---------------------------------------------------------------
   private def q144(s: SparkSession, dir: String): DataFrame = {
     import graft.text.Bpe
-    val words = Bpe.wordCounts(
-        t(s, dir, "documents").select("text"), "text")
-      .persist() // train makes N passes; encode one more
+    // train makes N passes; encode one more
+    val words = graft.plans.Plans.barrier(Bpe.wordCounts(
+      t(s, dir, "documents").select("text"), "text"))
     val merges = Bpe.train(s, words, BpeMerges)
     Bpe.tokenCensus(Bpe.applyMerges(words, merges))
       .orderBy(col("n").desc, col("token")).limit(30)

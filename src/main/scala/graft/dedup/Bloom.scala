@@ -79,10 +79,8 @@ object Bloom {
           .as("gram"))
 
     // evalGrams feeds three passes (count, sketch build, exact join);
-    // cache covers the two eager ones here so eval texts tokenize+hash
-    // once for them. The lazy join pass recomputes the (small) eval
-    // side at consumer evaluation — cheap next to the train scan.
-    val evalGrams = grams(eval, "eval_id").cache()
+    // the barrier tokenizes and hashes the eval texts once for all three
+    val evalGrams = graft.plans.Plans.barrier(grams(eval, "eval_id"))
     // one cheap count over the (small) eval side sizes the sketch;
     // bitsPerKey=16 ≈ 0.05% fp at the optimal hash count
     val items = math.max(evalGrams.count(), 1L)
@@ -96,7 +94,6 @@ object Bloom {
         (1L << 26).toString).toLong
     val sketch = build(evalGrams, col("gram"), items,
       math.min(items * bitsPerKey.toLong, maxNumBits))
-    evalGrams.unpersist(blocking = false)
 
     grams(train, "train_id")
       .filter(mightContain(sketch, col("gram")))

@@ -301,7 +301,9 @@ object TextHashExprs {
     * lowercase, then maximal runs of non-`\s` chars where `\s` is the
     * JAVA REGEX class [ \t\n\x0B\f\r] — NOT Character.isWhitespace,
     * which is wider and would drift from split(lower(c), "\\s+") and
-    * from DuckDB's string_split_regex('\s+').
+    * from DuckDB's string_split_regex('\s+'). It lowercases with
+    * `Locale.ROOT`, so equality with Spark's `lower` (which uses the
+    * JVM default locale) relies on the en_US locale pinned in build.sbt.
     *
     * `joinFallback` pins the under-n-tokens rule the two HOF families
     * use: false → empty array (LmFilter.bigrams/trigrams, Rouge);

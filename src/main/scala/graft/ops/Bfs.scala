@@ -2,7 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.plans.Plans
 
 /** Multi-source BFS hop distance over an undirected edge list —
   * "how many clicks from the seed set is every node?" — the reach
@@ -20,14 +21,13 @@ import org.apache.spark.storage.StorageLevel
   * what lets the DuckDB oracle UNROLL a fixed round count while
   * Spark iterates to an empty frontier ([[KCore]]'s contract).
   *
-  * Scale shape: edges symmetrize + dedupe once and persist
-  * hash-partitioned; each round is one keyed join (edges ⋈
-  * frontier) + an anti-join against the labeled set — frontier and
-  * labeled sets carry (node, hop) only, never payloads. Driver
-  * state per round: one frontier-size scalar. Rounds are bounded by
-  * the graph diameter, which for web/social graphs is small (the
-  * small-world property is exactly why BFS-from-seeds is usable at
-  * 100 TB).
+  * Scale shape: edges symmetrize + dedupe once and are barriered;
+  * each round is one keyed join (edges ⋈ frontier) + an anti-join
+  * against the labeled set — frontier and labeled sets carry
+  * (node, hop) only, never payloads. Driver state per round: one
+  * frontier-size scalar. Rounds are bounded by the graph diameter,
+  * which for web/social graphs is small (the small-world property is
+  * exactly why BFS-from-seeds is usable at 100 TB).
   */
 object Bfs {
 
@@ -43,34 +43,27 @@ object Bfs {
     val dir = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull &&
         col("a") =!= col("b"))
-    val sym = dir.union(dir.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .repartition(col("a"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    sym.count() // materialize once; every round reuses the partitioning
+    val sym = Plans.barrier(dir.union(dir.select(col("b").as("a"), col("a").as("b")))
+      .distinct())
+    sym.count() // materialize once; every round reuses it
 
-    var labeled = seeds.select(col("node")).distinct()
-      .withColumn("hops", lit(0))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    var labeled = Plans.barrier(seeds.select(col("node")).distinct()
+      .withColumn("hops", lit(0)))
     var frontier = labeled
     var nFrontier = frontier.count()
     var hop = 0
     while (nFrontier > 0 && hop < maxHops) {
       hop += 1
-      val next = sym
+      val next = Plans.barrier(sym
         .join(frontier.select(col("node").as("a")), "a")
         .select(col("b").as("node")).distinct()
         .join(labeled, Seq("node"), "left_anti")
-        .withColumn("hops", lit(hop))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .withColumn("hops", lit(hop)))
       nFrontier = next.count()
-      // labeled stays a LAZY union of the persisted per-hop levels
-      // (r15): every leaf is already cached and level row sets are
-      // disjoint, so re-materializing the union each round (persist +
-      // count) paid one extra job and a duplicate copy of the whole
-      // labeled set per hop for nothing — the anti-join reads the
-      // same cached bytes either way (guide §5: cache competes with
-      // execution memory; diameter is small, so the union stays flat)
+      // labeled stays a LAZY union of the barriered per-hop levels
+      // (r15): level row sets are disjoint and each is already
+      // materialized, so re-materializing the union each round paid
+      // one extra job and a second copy of the labeled set per hop
       labeled = labeled.union(next)
       frontier = next
     }

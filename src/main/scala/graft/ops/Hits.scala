@@ -2,7 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.plans.Plans
 
 /** HITS hubs & authorities (Kleinberg 1999, "Authoritative sources
   * in a hyperlinked environment") over a directed link graph — the
@@ -19,8 +20,8 @@ import org.apache.spark.storage.StorageLevel
   * graph (the classic `(raw * scale) div total` form overflows at
   * ~10^6 edges with scale 10^6).
   *
-  * Scale shape: edges persist hash-partitioned once; each iteration
-  * is two map-combined keyed aggregations (by dst, then by src), two
+  * Scale shape: edges are barriered once; each iteration is two
+  * map-combined keyed aggregations (by dst, then by src), two
   * nodes-sized left joins, and two 1-row total aggregates that join
   * back via broadcast cross-join (never a driver collect). The raw
   * sums are BARRIERED (lazy localCheckpoint) each half-round: the
@@ -39,15 +40,12 @@ object Hits {
       iters: Int,
       scale: Long = 1000000L): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e = Plans.barrier(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
+      .distinct())
+    val nodes = Plans.barrier(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
 
     // one normalized step: raw sums keyed by `outKey` from scores on
     // `inKey`, then L1-normalize into [0, ~scale] with floor
@@ -59,7 +57,7 @@ object Hits {
     // zeros; the zeros now appear once, in the final densify below.
     def step(scores: DataFrame, scoreCol: String, inKey: String,
         outKey: String, outCol: String): DataFrame = {
-      val raw = graft.plans.Plans.barrier(
+      val raw = Plans.barrier(
         e.join(scores, e(inKey) === scores("node"))
           .groupBy(col(outKey).as("node")).agg(sum(scoreCol).as("raw")))
       val total = raw.agg(

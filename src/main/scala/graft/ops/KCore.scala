@@ -2,7 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.plans.Plans
 
 /** k-core decomposition over an undirected edge list — the
   * graph-hygiene peel next to [[PageRank]]'s authority ranks: the
@@ -21,10 +22,10 @@ import org.apache.spark.storage.StorageLevel
   * convergence, the oracle unrolls a fixed round count ≥ the
   * convergence round.
   *
-  * Scale shape: edges symmetrize + dedupe once (one exchange),
-  * persist hash-partitioned; each round is the alive-filtered degree
-  * count — two keyed semi-joins + one partial-aggregated groupBy —
-  * and rounds are bounded (each one removes ≥ 1 node or stops).
+  * Scale shape: edges symmetrize + dedupe once (one exchange) and
+  * are barriered; each round is the alive-filtered degree count —
+  * two keyed semi-joins + one partial-aggregated groupBy — and
+  * rounds are bounded (each one removes ≥ 1 node or stops).
   * Driver state per round: one count scalar (the [[graft.dedup.Dedup]]
   * convergence-signature discipline).
   */
@@ -41,18 +42,15 @@ object KCore {
     val dir = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull &&
         col("a") =!= col("b"))
-    val sym = dir.union(dir.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .repartition(col("a"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sym = Plans.barrier(dir.union(dir.select(col("b").as("a"), col("a").as("b")))
+      .distinct())
 
     def degrees(alive: DataFrame): DataFrame = sym
       .join(alive.select(col("node").as("a")), "a")
       .join(alive.select(col("node").as("b")), "b")
       .groupBy("a").agg(count(lit(1)).as("deg"))
 
-    var alive = sym.select(col("a").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    var alive = Plans.barrier(sym.select(col("a").as("node")).distinct())
     var nAlive = alive.count() // bounded driver scalar
     var round = 0
     var stable = false
@@ -69,15 +67,10 @@ object KCore {
       val degs =
         if (round == 0) sym.groupBy("a").agg(count(lit(1)).as("deg"))
         else degrees(alive)
-      val next = degs.filter(col("deg") >= k)
-        .select(col("a").as("node"), col("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val next = Plans.barrier(degs.filter(col("deg") >= k)
+        .select(col("a").as("node"), col("deg")))
       val nNext = next.count()
       stable = nNext == nAlive
-      // unpersist the frame that actually holds the previous round's
-      // cache: round 0's alive, afterwards the previous `next`
-      // (alive is a lazy projection of it since r15)
-      if (aliveDeg == null) alive.unpersist() else aliveDeg.unpersist()
       alive = next.select("node")
       aliveDeg = next
       nAlive = nNext

@@ -2,7 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.plans.Plans
 
 /** Synchronous label propagation (Raghavan et al. 2007) — community
   * detection over an undirected graph, completing the local-graph
@@ -21,12 +22,12 @@ import org.apache.spark.storage.StorageLevel
   *  bit-for-bit (the q131/q147 integer-loop discipline, with string
   *  labels instead of fixed-point scores).
   *
-  * Scale shape: edges symmetrize + dedup once and persist
-  * hash-partitioned; each round is one keyed join (edges × labels on
-  * the 8-byte-hashable node id), one partial-aggregated
-  * (node, label) count, and one NODE-keyed window over each node's
-  * distinct neighbor labels (bounded by degree — never a global
-  * sort). Rounds are barriered so the analyzed plan stays linear in
+  * Scale shape: edges symmetrize + dedup once and are barriered.
+  * Round 1 is one partial-aggregated min per node; each later round
+  * is one keyed join (edges × labels on the node id), one
+  * partial-aggregated (node, label) count and one per-node min over
+  * (−count, label) structs — never a global sort. Every round but
+  * the last is barriered, so the analyzed plan stays linear in
   * iterations (q147's lesson).
   */
 object LabelProp {
@@ -39,10 +40,10 @@ object LabelProp {
   def run(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int): DataFrame = runWithEdges(edges, srcCol, dstCol, iters)._1
 
-  /** [[run]], also returning the symmetric deduped persisted edge set
+  /** [[run]], also returning the symmetric deduped barriered edge set
     * `ed(src, dst)` the rounds iterate over — so a caller that needs
     * the same undirected edges after propagation (e.g.
-    * [[Modularity.census]]'s two label joins) reads the one cached
+    * [[Modularity.census]]'s two label joins) reads the one stored
     * copy instead of re-evaluating the raw edge lineage from scratch
     * (r15, guide §2.4: for q306 that lineage is a lineitem-sized
     * window plus two joins, previously executed twice per query).
@@ -51,15 +52,19 @@ object LabelProp {
       dstCol: String, iters: Int): (DataFrame, DataFrame) = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val fwd = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val ed = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
+    val ed = Plans.barrier(fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
         col("src") =!= col("dst"))
-      .distinct()
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = ed.select(col("src").as("node")).distinct()
-    var labels = nodes.select(col("node"), col("node").as("label"))
-    for (_ <- 1 to iters) {
+      .distinct())
+    // the last round stays lazy, so the caller's query runs it
+    def cut(labels: DataFrame, round: Int) =
+      if (round < iters) Plans.barrier(labels) else labels
+    // round 1 needs no join: every node starts labelled by its own id
+    // and `ed` is deduped, so each neighbor's label counts once and the
+    // election is the smallest neighbor id
+    var labels = cut(
+      ed.groupBy(col("dst").as("node")).agg(min(col("src")).as("label")), 1)
+    for (round <- 2 to iters) {
       val counted = ed.join(labels.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node"), col("label"))
         .agg(count(lit(1)).as("c"))
@@ -74,7 +79,7 @@ object LabelProp {
         .groupBy("node")
         .agg(min(struct((-col("c")).as("nc"), col("label"))).as("e"))
         .select(col("node"), col("e.label").as("label"))
-      labels = graft.plans.Plans.barrier(elected)
+      labels = cut(elected, round)
     }
     (labels, ed)
   }

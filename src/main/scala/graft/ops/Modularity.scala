@@ -34,14 +34,13 @@ object Modularity {
       srcCol: String,
       dstCol: String,
       iters: Int): DataFrame = {
-    // share LabelProp's persisted symmetric edge set (r15, guide
+    // share LabelProp's barriered symmetric edge set (r15, guide
     // §2.4): the census joins consume the IDENTICAL union-reverse →
     // null/self-loop filter → distinct set the rounds iterate over,
     // but rebuilding it here re-evaluated the caller's raw edge
     // lineage from scratch — for q306 a lineitem-sized lag window
     // plus two broadcast joins, paid twice per query. runWithEdges
-    // hands back the one cached copy (already src-partitioned, so
-    // the src-keyed label join below reuses its layout).
+    // hands back the one materialized copy.
     val (labels, ed) = LabelProp.runWithEdges(edges, srcCol, dstCol, iters)
     val joined = ed
       .join(labels.select(col("node").as("src"), col("label").as("ls")),

@@ -2,7 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.plans.Plans
 
 /** Link-graph PageRank over a DataFrame edge list — crawl-frontier
   * prioritization (which domains to fetch deeper) and corpus-mix
@@ -26,14 +27,13 @@ import org.apache.spark.storage.StorageLevel
   * buys nothing for ranking). All arithmetic stays in BIGINT:
   * 85·rank ≤ 85·scale « 2^63.
   *
-  * Scale shape: edges dedupe once (one exchange on the pair), then
-  * persist HASH-PARTITIONED BY src — every iteration's
-  * edges⋈ranks(src) join reuses that layout, so the per-iteration
-  * cost is one shuffle of (dst, contrib) partials (map-side
-  * combined) plus the nodes-sized left join. Ranks materialize
-  * per iteration (persist + count) to cut the lineage chain —
-  * K iterations are K bounded jobs, not one 2^K-deep plan. Driver
-  * state: the node count N, one scalar.
+  * Scale shape: edges dedupe once (one exchange on the pair) and are
+  * barriered, so the per-iteration cost is the edges⋈ranks(src)
+  * join, one shuffle of (dst, contrib) partials (map-side combined)
+  * and the nodes-sized left join. Every
+  * `checkpointInterval` rounds the ranks are barriered to cut the
+  * plan — K iterations stay a bounded plan, not one K-deep chain.
+  * Driver state: the node count N, one scalar.
   */
 object PageRank {
 
@@ -51,31 +51,24 @@ object PageRank {
     require(checkpointInterval >= 1,
       s"checkpointInterval must be >= 1, got $checkpointInterval")
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e = Plans.barrier(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
 
-    val nodes = e.select(col("src").as("node"))
+    val nodes = Plans.barrier(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val n = nodes.count() // bounded driver scalar
     require(n > 0, "empty graph")
 
-    // outdeg is a function of src alone — join it into the persisted
-    // edge list ONCE (r15, guide §2.4): the groupBy and the join both
-    // key on src, so on the src-partitioned persisted edges this is
-    // one co-partitioned pass, and every iteration then pays a single
-    // join (edges ⋈ ranks) instead of two
-    val ed = e.join(
-        e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // outdeg is a function of src alone — join it into the barriered
+    // edge list ONCE (r15, guide §2.4), so every iteration then pays a
+    // single join (edges ⋈ ranks) instead of two
+    val ed = Plans.barrier(e.join(
+      e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src"))
 
     val teleport = (15L * scale) / (100L * n)
     var ranks = nodes.withColumn("rank", lit(scale / n))
-    var lastPersisted: Option[DataFrame] = None
 
     for (i <- 1 to iters) {
       val contrib = ed
@@ -86,28 +79,20 @@ object PageRank {
         .select(col("dst"),
           expr("(85 * rank) div (100 * outdeg)").as("c"))
         .groupBy("dst").agg(sum("c").as("contrib"))
-      var next = nodes
+      val next = nodes
         .join(contrib, nodes("node") === contrib("dst"), "left")
         .select(col("node"),
           (lit(teleport) + coalesce(col("contrib"), lit(0L))).as("rank"))
-      // cut the lineage every `checkpointInterval` rounds: persist +
-      // count (an eager barrier) bounds the plan depth for long runs
-      // while short runs stay a single lazy job with zero extra
-      // materializations
-      if (i % checkpointInterval == 0 && i < iters) {
-        next = next.persist(StorageLevel.MEMORY_AND_DISK)
-        next.count()
-        lastPersisted.foreach(_.unpersist())
-        lastPersisted = Some(next)
-      }
-      ranks = next
+      // cut the plan every `checkpointInterval` rounds, so long runs
+      // stay bounded while short runs stay one lazy plan
+      ranks = cutEvery(checkpointInterval, i, iters, next)
     }
     ranks.select(col("node"), col("rank").as("rank_u"))
-    // NOTE: e/nodes/outdeg (and the last barrier frame) stay
-    // persisted until the result is consumed — they back the lazy
-    // final plan; Spark evicts them LRU, and callers that loop can
-    // spark.catalog.clearCache() between runs.
   }
+
+  private def cutEvery(interval: Int, i: Int, iters: Int,
+      next: DataFrame): DataFrame =
+    if (i % interval == 0 && i < iters) Plans.barrier(next) else next
 
   /** Personalized (topic-sensitive) PageRank — Haveliwala 2002: the
     * teleport mass lands ONLY on the seed set instead of uniformly,
@@ -138,51 +123,40 @@ object PageRank {
       iters: Int,
       scale: Long = 1000000000L,
       checkpointInterval: Int = 5): DataFrame = {
+    require(checkpointInterval >= 1,
+      s"checkpointInterval must be >= 1, got $checkpointInterval")
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e = Plans.barrier(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
+      .distinct())
+    val nodes = Plans.barrier(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val s = seeds.select(col("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
+    val s = Plans.barrier(seeds.select(col("node")).distinct())
     val nSeeds = s.count() // bounded driver scalar
     require(nSeeds > 0, "empty seed set")
-    // outdeg pre-joined into the persisted edges once, as in [[run]]
-    val ed = e.join(
-        e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // outdeg pre-joined into the barriered edges once, as in [[run]]
+    val ed = Plans.barrier(e.join(
+      e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src"))
 
-    val flagged = nodes
+    val flagged = Plans.barrier(nodes
       .join(broadcast(s.withColumn("is_seed", lit(1L))), Seq("node"), "left")
-      .select(col("node"), coalesce(col("is_seed"), lit(0L)).as("is_seed"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("node"), coalesce(col("is_seed"), lit(0L)).as("is_seed")))
     val tele = (15L * scale) / (100L * nSeeds)
     var ranks = flagged.select(col("node"),
       (col("is_seed") * lit(scale / nSeeds)).as("rank"))
-    var lastPersisted: Option[DataFrame] = None
     for (i <- 1 to iters) {
       val contrib = ed
         .join(ranks, ed("src") === ranks("node"))
         .select(col("dst"),
           expr("(85 * rank) div (100 * outdeg)").as("c"))
         .groupBy("dst").agg(sum("c").as("contrib"))
-      var next = flagged
+      val next = flagged
         .join(contrib, flagged("node") === contrib("dst"), "left")
         .select(col("node"), col("is_seed"),
           (col("is_seed") * lit(tele)
             + coalesce(col("contrib"), lit(0L))).as("rank"))
-      if (i % checkpointInterval == 0 && i < iters) {
-        next = next.persist(StorageLevel.MEMORY_AND_DISK)
-        next.count()
-        lastPersisted.foreach(_.unpersist())
-        lastPersisted = Some(next)
-      }
-      ranks = next
+      ranks = cutEvery(checkpointInterval, i, iters, next)
     }
     ranks.select(col("node"), col("rank").as("rank_u"))
   }

@@ -2,7 +2,15 @@ package graft.plans
 
 import org.apache.spark.sql.DataFrame
 
-/** Plan-shaping utilities. */
+/** Plan-shaping utilities, and the only code in graft that
+  * materializes a DataFrame.
+  *
+  * Lifetime rule: a materialization lives exactly as long as some
+  * DataFrame still references it. Both primitives below are local
+  * checkpoints, whose blocks live at MEMORY_AND_DISK and are reclaimed
+  * by the ContextCleaner once the frame is unreferenced; nothing enters
+  * the CacheManager, so no caller does `unpersist` bookkeeping.
+  */
 object Plans {
 
   /** Materialization barrier: cuts the Catalyst plan here (lazy local
@@ -13,17 +21,27 @@ object Plans {
     *  2. `InferFiltersFromGenerate` / predicate pushdown can no
     *     longer inline an expensive Project alias (e.g. a shingle
     *     set) into scan filters, which would evaluate it 2–3× per
-    *     row.
+    *     row, and
+    *  3. an iterative operator's plan stays bounded in its rounds.
     *
-    * The checkpoint blocks live at MEMORY_AND_DISK and are reclaimed
-    * by the ContextCleaner when the frame is no longer referenced —
-    * unlike `persist()`, nothing leaks into the CacheManager. Use
-    * after expensive per-row sketch columns and before
-    * explode/self-join fan-out; the materialized slice should be the
-    * compact sketch projection (ids + hashes), never raw documents.
+    * The rows are computed by the first job that reads the frame, and
+    * later jobs read the stored blocks. Use after expensive per-row
+    * sketch columns, before explode/self-join fan-out, and on frames
+    * a loop reads every round; the materialized slice should be the
+    * compact projection (ids + hashes), never raw documents. Under
+    * AQE, building the barrier already runs the upstream shuffle
+    * stages (see `SkewReport.topKeys`).
     */
   def barrier(df: DataFrame): DataFrame =
     if (explainMode) df else df.localCheckpoint(eager = false)
+
+  /** Eager barrier: computes the rows NOW, before the caller goes on —
+    * for results that must not be re-read later, such as a source
+    * served by a fixture that stops when the function returns, or a
+    * probe taken before the data it reads is rewritten. Unaffected by
+    * [[explainMode]]: skipping it would change what the query returns.
+    */
+  def materialize(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
 
   /** DIAGNOSTIC ONLY (graft.tools.PlanDump): a localCheckpoint cuts
     * `explain` at the barrier — the dumped plan shows `Scan
@@ -35,12 +53,13 @@ object Plans {
     */
   @volatile private[graft] var explainMode: Boolean = false
 
-  /** The ONLY sanctioned way to set [[explainMode]] (ADVICE r14):
-    * scopes the flag to `f` and restores the prior value even on
-    * throw, so a diagnostic dump can never leave a live session with
-    * identity barriers (which would silently recompute every
-    * self-join branch's upstream). `f` must not execute Spark
-    * actions — explain/plan inspection only.
+  /** The ONLY sanctioned way to set [[explainMode]]: scopes the flag to
+    * `f` and restores the prior value even on throw, so a diagnostic
+    * dump can never leave a live session with identity barriers.
+    * Inside `f`, every [[barrier]] is the identity, but Spark actions
+    * still run — a query build's eager counts execute as usual, only
+    * without the shared materialization — and [[materialize]] still
+    * checkpoints.
     */
   private[graft] def withExplainMode[T](on: Boolean)(f: => T): T = {
     val prev = explainMode

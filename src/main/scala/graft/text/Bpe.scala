@@ -2,7 +2,8 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.plans.Plans
 
 /** Distributed byte-pair-encoding vocabulary training (Sennrich et
   * al. 2016, "Neural Machine Translation of Rare Words with Subword
@@ -17,12 +18,12 @@ import org.apache.spark.storage.StorageLevel
   * corpus scale, never corpus-sized). Per iteration: one
   * partial-aggregated pair count → a 1-row argmax collect (a bounded
   * driver scalar, the same pattern as PageRank's node count) → a
-  * codegen'd string replace over the word table. Lineage is cut by
-  * re-persisting the word table each round (predecessor unpersisted),
-  * so N merges never build an N-deep replay chain. At PRODUCTION
-  * vocabulary sizes (30k merges) use [[trainBatched]] — one
-  * pair-count pass commits a whole provably-serial-equal batch of
-  * symbol-disjoint merges — and [[applyMerges]]'s chunked encode,
+  * codegen'd string replace over the word table. The plan is cut by
+  * a barrier every few rounds, so N merges never build an N-deep
+  * replay chain. At PRODUCTION vocabulary sizes (30k merges) use
+  * [[trainBatched]] — one pair-count pass commits a whole
+  * provably-serial-equal batch of symbol-disjoint merges — and
+  * [[applyMerges]]'s chunked encode,
   * which bounds any single projection's replace depth.
   *
   * Exactness: symbol sequences are strings with TWO-space
@@ -69,27 +70,25 @@ object Bpe {
     * rhs, cnt) — nMerges driver-side rows by construction.
     *
     * Each round costs ONE job (the pair-count argmax); the replace
-    * chain stays lazy on top of the persisted base and is re-folded
+    * chain stays lazy on top of the barriered base and is re-folded
     * into the next round's scan (replaces are codegen'd projections —
     * replaying k of them is cheaper than materializing each round).
-    * Every `checkpointInterval` rounds the chain is cut with an
-    * EAGER localCheckpoint — unlike persist() (which only short-
-    * circuits RDD recompute), the checkpoint replaces the LOGICAL
-    * plan with a LogicalRDD, so a production-sized merge count (30k)
-    * never builds an unbounded Project chain. The distinction is
-    * load-bearing: a persist-only cut left the analyzed plan (and
-    * every AQE explain-string of it) growing one Project per merge,
-    * which OOMed the driver near merge ~900 at 100k vocab
-    * (BpeBench, r12) while the executors were perfectly healthy.
+    * Every `checkpointInterval` rounds the chain is cut with a
+    * barrier, which replaces the LOGICAL plan with a LogicalRDD, so a
+    * production-sized merge count (30k) never builds an unbounded
+    * Project chain. The cut is load-bearing: a persist-only cut left
+    * the analyzed plan (and every AQE explain-string of it) growing
+    * one Project per merge, which ran the planning JVM out of heap
+    * near merge ~900 at 100k vocab (BpeBench, r12) while the
+    * executors were healthy.
     */
   def train(spark: SparkSession, words: DataFrame, nMerges: Int,
       checkpointInterval: Int = 16): Seq[Merge] = {
     require(nMerges >= 0, s"nMerges must be >= 0, got $nMerges")
     require(checkpointInterval >= 1,
       s"checkpointInterval must be >= 1, got $checkpointInterval")
-    var cur = words.select(col("cnt"), symbolize(col("word")).as("sym"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val base = cur
+    var cur = Plans.barrier(
+      words.select(col("cnt"), symbolize(col("word")).as("sym")))
     val out = Seq.newBuilder[Merge]
     var stop = false
     for (k <- 1 to nMerges if !stop) {
@@ -102,16 +101,10 @@ object Bpe {
         out += Merge(k, l, r, c)
         cur = cur.withColumn("sym",
           replace(col("sym"), lit(s" $l  $r "), lit(s" $l$r ")))
-        if (k % checkpointInterval == 0 && k < nMerges) {
-          // materializes the chunk AND truncates the logical plan;
-          // superseded checkpoint blocks are reclaimed by the
-          // ContextCleaner once the old frame is unreferenced
-          cur = cur.localCheckpoint(eager = true)
-          base.unpersist() // the persisted base is no longer read
-        }
+        if (k % checkpointInterval == 0 && k < nMerges)
+          cur = Plans.barrier(cur) // truncates the logical plan
       }
     }
-    base.unpersist()
     out.result()
   }
 
@@ -468,9 +461,8 @@ object Bpe {
     require(scanWidth >= 1, s"scanWidth must be >= 1, got $scanWidth")
     require(checkpointInterval >= 1,
       s"checkpointInterval must be >= 1, got $checkpointInterval")
-    var cur = words.select(col("cnt"), symbolize(col("word")).as("sym"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val base = cur
+    var cur = Plans.barrier(
+      words.select(col("cnt"), symbolize(col("word")).as("sym")))
     // every multi-char symbol in play is the fusion of a COMMITTED
     // merge (training starts from single chars), so this set is the
     // complete alphabet-of-fusions for the conflation guard
@@ -510,17 +502,12 @@ object Bpe {
         }
         sinceCkpt += commit.length
         if (sinceCkpt >= checkpointInterval && k < nMerges) {
-          // eager localCheckpoint: materializes AND truncates the
-          // logical plan (see [[train]] — persist alone lets the
-          // Project chain grow one node per merge until the driver
-          // OOMs building plan strings)
-          cur = cur.localCheckpoint(eager = true)
-          base.unpersist()
+          // truncates the logical plan (see [[train]])
+          cur = Plans.barrier(cur)
           sinceCkpt = 0
         }
       }
     }
-    base.unpersist()
     BatchTrainStats(out.result(), passes, largestBatch)
   }
 
@@ -706,7 +693,7 @@ object Bpe {
     * Every stage CTE is AS MATERIALIZED: w_{k-1} is referenced by
     * both pc_k and w_k, so INLINING would re-evaluate the whole
     * prefix 2^k times — materialization keeps the oracle linear in
-    * nMerges, mirroring the Spark side's per-round persist.
+    * nMerges, mirroring the Spark side's barriered word table.
     */
   def trainSql(wordsCte: String, nMerges: Int): String = {
     require(nMerges >= 1, // 0 rounds would generate an empty UNION body

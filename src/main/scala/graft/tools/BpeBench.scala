@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.storage.StorageLevel
-
 /** Diagnostic main measuring the BPE production-vocab path (VERDICT
   * r11 item 2): serial [[graft.text.Bpe.train]] (one Spark job per
   * merge) vs [[graft.text.Bpe.trainBatched]] (one job per PASS, each
@@ -46,7 +44,7 @@ object BpeBench {
     val spark = graft.Runner.session(sfDir, "ERROR")
     import graft.text.Bpe
 
-    val words = (if (vocabSpec == "corpus")
+    val words = graft.plans.Plans.barrier(if (vocabSpec == "corpus")
       Bpe.wordCounts(
         graft.sources.Tables.load(spark, sfDir, "documents")
           .select("text"), "text")
@@ -79,7 +77,7 @@ object BpeBench {
         "cast(1000000 / (id + 1) as bigint) + 1 AS cnt")
         .groupBy("word").agg(
           org.apache.spark.sql.functions.sum("cnt").as("cnt"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     println(s"[bpebench] vocab=${words.count()} (spec=$vocabSpec) " +
       s"nMerges=$nMerges sf=$sfDir")
 

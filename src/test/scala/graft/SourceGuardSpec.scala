@@ -7,9 +7,11 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funspec.AnyFunSpec
 import org.scalatest.matchers.should.Matchers
 
-/** Keeps one session builder and a fixed set of mains: every session
-  * comes from `Session.local`, and no one-off diagnostic main creeps
-  * back into `src/`. Comment lines are ignored; code is not.
+/** Keeps one session builder, a fixed set of mains and one
+  * materialization primitive: every session comes from `Session.local`,
+  * no one-off diagnostic main creeps back into `src/`, and only
+  * `graft.plans.Plans` persists, caches or checkpoints a DataFrame in
+  * `src/main`. Comment lines are ignored; code is not.
   */
 class SourceGuardSpec extends AnyFunSpec with Matchers {
 
@@ -26,6 +28,8 @@ class SourceGuardSpec extends AnyFunSpec with Matchers {
 
   private val Builder = """SparkSession\s*\.\s*builder"""
   private val Main = """\bdef\s+main\s*\("""
+  private val Materialize =
+    """\.\s*(persist|unpersist|localCheckpoint)\s*\(|\.\s*cache\s*\(\s*\)"""
 
   /** Source path relative to `src/` (with `/` separators) → code. */
   private lazy val sources: Map[String, String] = {
@@ -67,6 +71,12 @@ class SourceGuardSpec extends AnyFunSpec with Matchers {
     it("has no mains beyond the kept ones") {
       filesMatching(Main) shouldBe keptMains
     }
+    it("materializes DataFrames only in plans/Plans.scala") {
+      filesMatching(Materialize).filter(_.startsWith("main/")) shouldBe
+        Set("main/scala/graft/plans/Plans.scala")
+      filesMatching("""\bStorageLevel\b""").filter(_.startsWith("main/")) shouldBe
+        empty
+    }
   }
 
   describe("the comment filter") {
@@ -77,6 +87,13 @@ class SourceGuardSpec extends AnyFunSpec with Matchers {
       val code = s"""val rules = "Disallow: /articles/*7$$"\nval s = $builder.getOrCreate()\n$main\n"""
       found(Builder, codeLines(code)) shouldBe true
       found(Main, codeLines(code)) shouldBe true
+    }
+    it("sees every materialization call form, but not in comments") {
+      val calls = Seq("df.persist()", "df.cache()", "df.unpersist()",
+        "df.localCheckpoint(eager = false)", "df\n  .persist(level)")
+      calls.filterNot(c => found(Materialize, codeLines(s"val x = $c"))) shouldBe empty
+      found(Materialize, codeLines("// df.persist()\n * df.cache()")) shouldBe false
+      found(Materialize, codeLines("val cache = Cache.cached()")) shouldBe false
     }
     it("ignores line and block comments") {
       val code = s"// $builder\n/* $main\n * $builder\n */\nval x = 1\n"

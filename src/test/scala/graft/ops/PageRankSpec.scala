@@ -60,6 +60,16 @@ class PageRankSpec extends SparkSpec {
       every shouldBe reference(g, 6)
     }
 
+    it("both entry points reject checkpointInterval = 0") {
+      val edges = g.toDF("s", "d")
+      val seeds = Seq("a").toDF("node")
+      an[IllegalArgumentException] should be thrownBy
+        PageRank.run(edges, "s", "d", 6, checkpointInterval = 0)
+      an[IllegalArgumentException] should be thrownBy
+        PageRank.runPersonalized(edges, "s", "d", seeds, 6,
+          checkpointInterval = 0)
+    }
+
     it("null endpoints are dropped, not propagated") {
       val edges = Seq(("a", Some("b")), ("b", None), ("b", Some("a")))
         .toDF("s", "d")
