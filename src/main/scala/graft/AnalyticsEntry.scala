@@ -160,7 +160,7 @@ object AnalyticsEntry {
   // ---------------------------------------------------------------
   private def q101(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.FileSource
-    val base = s"target/scratch/q101_${ExtendedEntry.sanitize(dir)}"
+    val base = s"target/scratch/q101_${Scratch.key(dir)}"
     t(s, dir, "documents").select("doc_id", "lang", "source", "n_chars")
       .write.mode("overwrite").orc(base)
     FileSource.read(s, "orc", base, Some("*.orc"))

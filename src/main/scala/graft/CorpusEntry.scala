@@ -169,15 +169,12 @@ object CorpusEntry {
   // swap might still own. Retention = 1h: the three expired go, the
   // fresh one and the live table survive. Contract-gated.
   // ---------------------------------------------------------------
-  private def sanitize(dir: String): String = ExtendedEntry.sanitize(dir)
-
   private def q88(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.Vacuum
     import org.apache.hadoop.fs.Path
-    val base = s"target/scratch/q88_${sanitize(dir)}"
-    val root = new Path(base)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(root, true)
+    val base = Scratch.fresh(s, "q88", dir)
+    val fs = new Path(base)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
     val docs = t(s, dir, "documents")
     docs.coalesce(2).write.parquet(s"$base/docs")
     val debris = docs.limit(10).coalesce(1)

@@ -354,7 +354,7 @@ object EvalEntry {
     val cutoff = graft.sources.Tables.epochNs("2024-01-15T00:00:00Z")
     val keys = Seq("event_type")
     val s1 = Moments.state(ev.filter(col("ts") < cutoff), keys, "cents")
-    val path = s"target/scratch/q292_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    val path = s"target/scratch/q292_${Scratch.key(dir)}"
     s1.write.mode("overwrite").parquet(path)
     val merged = Moments.merge(
       Seq(s.read.parquet(path),
@@ -444,9 +444,6 @@ object EvalEntry {
         .as("recall_ok"))
   }
 
-  private def sanitize(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_")
-
   // ---------------------------------------------------------------
   // q297 — Avro container ingest (sources/AvroSource): the nation
   // dim exported once to a real .avro Object Container (fixture,
@@ -458,7 +455,7 @@ object EvalEntry {
   private def q297(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.AvroSource
     import org.apache.spark.sql.types._
-    val base = s"target/scratch/q297_${sanitize(dir)}"
+    val base = s"target/scratch/q297_${Scratch.key(dir)}"
     val file = s"$base/nation.avro"
     if (!new java.io.File(file).exists()) {
       // 25-row DIMENSION export — bounded by the nation taxonomy,
@@ -543,11 +540,9 @@ object EvalEntry {
   // fail the oracle, so the idempotence IS the gated semantics.
   // ---------------------------------------------------------------
   private def q300(s: SparkSession, dir: String): DataFrame = {
-    val base = s"target/scratch/q300_${sanitize(dir)}"
+    val base = Scratch.fresh(s, "q300", dir)
     val (target, ckpt, ledger) =
       (s"$base/table", s"$base/ckpt", s"$base/ledger")
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     val q = graft.streaming.StreamSink.writeExactlyOnceAppend(
       graft.streaming.Streams.readEvents(s, dir).drop("event_time"),
       target, ckpt, ledger)
@@ -574,9 +569,7 @@ object EvalEntry {
   // ---------------------------------------------------------------
   private def q301(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.VersionedTable
-    val path = s"target/scratch/q301_${sanitize(dir)}"
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val path = Scratch.fresh(s, "q301", dir)
     val orders = t(s, dir, "orders")
     def slice(v: Int) = orders.filter(pmod(col("o_orderkey"), lit(7)) <= v)
     (0 to 3).foreach(v => VersionedTable.commit(s, path, slice(v),
@@ -1020,29 +1013,29 @@ object EvalEntry {
     * one artifact path per freshness mode, so the modes never
     * thrash each other. */
   private[graft] def lmIndexPath(dir: String): String =
-    s"target/scratch/lm_index_${sanitize(dir)}"
+    s"target/scratch/lm_index_${Scratch.key(dir)}"
 
   /** The KN-family artifact path — q332 gates it (fingerprint
     * mode); a family switch must never thrash the add-one index,
     * which lives at [[lmIndexPath]]. */
   private[graft] def lmKnIndexPath(dir: String): String =
-    s"target/scratch/lm_index_kn_${sanitize(dir)}"
+    s"target/scratch/lm_index_kn_${Scratch.key(dir)}"
 
   /** Token-signed twin of [[lmIndexPath]] — q263's steady-state
     * CCNet probe (no corpus scan; fileToken freshness). */
   private[graft] def lmTokIndexPath(dir: String): String =
-    s"target/scratch/lm_index_tok_${sanitize(dir)}"
+    s"target/scratch/lm_index_tok_${Scratch.key(dir)}"
 
   /** Token-signed twin of [[lmKnIndexPath]] — q334's KN probe. */
   private[graft] def lmKnTokIndexPath(dir: String): String =
-    s"target/scratch/lm_index_kn_tok_${sanitize(dir)}"
+    s"target/scratch/lm_index_kn_tok_${Scratch.key(dir)}"
 
   /** The ORDER-3 KN artifact path (token-signed) — q341 gates it;
     * q342's CCNet twin probes the same artifact (same order, same
     * family, same freshness mode — one model, two consumers). An
     * order switch must never thrash the order-2 artifacts above. */
   private[graft] def lm3TokIndexPath(dir: String): String =
-    s"target/scratch/lm_index_kn3_tok_${sanitize(dir)}"
+    s"target/scratch/lm_index_kn3_tok_${Scratch.key(dir)}"
 
   // ---------------------------------------------------------------
   // q341 — ORDER-3 Kneser-Ney LM scoring through the persisted-index
@@ -1087,7 +1080,7 @@ object EvalEntry {
   private def q330(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").select("doc_id", "text")
     graft.text.LmFilter.indexedBigramLogprob(s,
-        s"target/scratch/lm_index_jm_${sanitize(dir)}",
+        s"target/scratch/lm_index_jm_${Scratch.key(dir)}",
         docs.filter(col("doc_id") % 2 === 0),
         docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
         smoothing = graft.text.LmFilter.Interpolated(
@@ -1173,7 +1166,7 @@ object EvalEntry {
   private def q333(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     ml.Rouge.indexedRougeN(s,
-        s"target/scratch/rouge_index_tok_${sanitize(dir)}",
+        s"target/scratch/rouge_index_tok_${Scratch.key(dir)}",
         docs.filter(pmod(col("doc_id"), lit(2)) === 0)
           .withColumn("pair_id", expr("doc_id div 2")),
         docs.filter(pmod(col("doc_id"), lit(2)) === 1 &&
@@ -1203,7 +1196,7 @@ object EvalEntry {
   private def q337(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     ml.Rouge.indexedRougeN(s,
-        s"target/scratch/rouge_index_xxh_${sanitize(dir)}",
+        s"target/scratch/rouge_index_xxh_${Scratch.key(dir)}",
         docs.filter(pmod(col("doc_id"), lit(2)) === 0)
           .withColumn("pair_id", expr("doc_id div 2")),
         docs.filter(pmod(col("doc_id"), lit(2)) === 1 &&

@@ -25,12 +25,6 @@ object ExtendedEntry {
 
   private def dec2(c: Column) = c.cast("decimal(18,2)")
 
-  /** Scratch-path key for an SF dir — shared by every entry object
-    * so per-query scratch dirs follow one naming scheme.
-    */
-  private[graft] def sanitize(dir: String): String =
-    dir.replaceAll("[^0-9a-zA-Z]", "_")
-
   /** Stateful streaming queries commit one state-store file PER
     * shuffle partition PER stateful operator PER micro-batch — so
     * their partition count should be sized to STATE volume, not to
@@ -219,7 +213,7 @@ object ExtendedEntry {
   // a memory sink. The batch oracle is SELECT DISTINCT.
   // ---------------------------------------------------------------
   private def q56(s: SparkSession, dir: String): DataFrame = {
-    val name = s"q56_dedup_${sanitize(dir)}"
+    val name = s"q56_dedup_${Scratch.key(dir)}"
     s.catalog.dropTempView(name)
     withShufflePartitions(s, 8) {
       val q = Streams.dedupStream(Streams.readEvents(s, dir), Seq("user_id"))
@@ -242,7 +236,7 @@ object ExtendedEntry {
   private def q57(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     implicit val spark: SparkSession = s
-    val name = s"q57_sess_${sanitize(dir)}"
+    val name = s"q57_sess_${Scratch.key(dir)}"
     s.catalog.dropTempView(name)
     val ev = Streams.readEvents(s, dir)
       .select(col("user_id"), col("ts"), col("value"), col("event_time"))
@@ -272,10 +266,8 @@ object ExtendedEntry {
   // oracle aggregates the source directly — landing must be lossless.
   // ---------------------------------------------------------------
   private def q59(s: SparkSession, dir: String): DataFrame = {
-    val base = s"target/scratch/q59_${sanitize(dir)}"
+    val base = Scratch.fresh(s, "q59", dir)
     val (target, ckpt) = (s"$base/table", s"$base/ckpt")
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     withShufflePartitions(s, 8) {
       val q = graft.streaming.StreamSink.writeWithDisposition(
         Streams.readEvents(s, dir).drop("event_time"),
@@ -296,7 +288,7 @@ object ExtendedEntry {
   // aggregated per nation. Oracle = the equivalent batch join.
   // ---------------------------------------------------------------
   private def q60(s: SparkSession, dir: String): DataFrame = {
-    val name = s"q60_enrich_${sanitize(dir)}"
+    val name = s"q60_enrich_${Scratch.key(dir)}"
     s.catalog.dropTempView(name)
     val cust = t(s, dir, "customer").select(
       col("c_custkey"), col("c_nationkey"))
@@ -388,14 +380,13 @@ object ExtendedEntry {
   // any model.
   // ---------------------------------------------------------------
   private def q63(s: SparkSession, dir: String): DataFrame = {
-    val base = s"target/scratch/q63_${sanitize(dir)}"
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val base = Scratch.fresh(s, "q63", dir)
     for (name <- Seq("region", "nation"))
       t(s, dir, name).coalesce(1).write.mode("overwrite")
         .option("header", "true").csv(s"$base/seeds/$name")
     // flatten the spark csv dirs into <seedsDir>/<name>.csv files
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$base/csv"))
     for (name <- Seq("region", "nation")) {
       val src = fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/seeds/$name"))
@@ -444,7 +435,7 @@ object ExtendedEntry {
   // emits, so the plain batch join is the oracle.
   // ---------------------------------------------------------------
   private def q66(s: SparkSession, dir: String): DataFrame = {
-    val name = s"q66_ssj_${sanitize(dir)}"
+    val name = s"q66_ssj_${Scratch.key(dir)}"
     s.catalog.dropTempView(name)
     // ms-quantized event time: the join range must evaluate at the
     // SAME precision as the oracle's epoch-ms arithmetic (a purchase
@@ -497,9 +488,7 @@ object ExtendedEntry {
   // ---------------------------------------------------------------
   private def q67(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.RunLedger
-    val path = s"target/scratch/q67_${sanitize(dir)}"
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val path = Scratch.fresh(s, "q67", dir)
     val ledger = new RunLedger(s, path)
     // pipeline_a: two successes; the fresh one at 5_000_000
     ledger.record(1L, "pipeline_a", "success", Some(900_000L), Some(1_000_000L), Some(100L))
@@ -547,9 +536,7 @@ object ExtendedEntry {
   private def q69(s: SparkSession, dir: String): DataFrame = {
     import graft.dag.{Dag, SqlModels}
     import graft.dag.SqlModels.SqlModel
-    val wh = s"target/scratch/q69_${sanitize(dir)}"
-    val p = new org.apache.hadoop.fs.Path(wh)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val wh = Scratch.fresh(s, "q69", dir)
     val models = Seq(
       SqlModel("stg_orders",
         """SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority
@@ -583,10 +570,9 @@ object ExtendedEntry {
   // ---------------------------------------------------------------
   private def q70(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.{Archive, FileSource}
-    val base = s"target/scratch/q70_${sanitize(dir)}"
-    val p = new org.apache.hadoop.fs.Path(base)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
+    val base = Scratch.fresh(s, "q70", dir)
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
     // the "upload": dimension tables exported as CSVs, bundled tar.gz
     val entries = Seq("nation", "region").map { name =>
       val stage = s"$base/stage/$name"
@@ -625,9 +611,7 @@ object ExtendedEntry {
   private def q71(s: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
     import graft.dag.{Packages, SqlModels}
-    val base = s"target/scratch/q71_${sanitize(dir)}"
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val base = Scratch.fresh(s, "q71", dir)
     // author the package: two chained SQL-text models
     val pkgModels = Paths.get(s"$base/graft_metrics/models")
     Files.createDirectories(pkgModels)
@@ -831,9 +815,7 @@ object ExtendedEntry {
   private def q76(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.MongoSource
     import org.apache.spark.sql.types.{DoubleType, LongType, TimestampType}
-    val base = s"target/scratch/q76_${sanitize(dir)}"
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val base = Scratch.fresh(s, "q76", dir)
     // the "dump": mongodump canonical EJSON, one doc per line,
     // generated distributed (string concat is codegen'd)
     t(s, dir, "orders").filter(col("o_orderkey") < 6000)
@@ -882,7 +864,7 @@ object ExtendedEntry {
       (st.getDouble(0), st.getDouble(1), st.getDouble(2), st.getDouble(3))
     val laid = ZOrder.assign(orders, "o_custkey", "o_totalprice",
       xlo, xhi, ylo, yhi, bits = 8, partitionBits = 4)
-    val base = s"target/scratch/q78_${sanitize(dir)}"
+    val base = s"target/scratch/q78_${Scratch.key(dir)}"
     laid.repartition(col("pid")).sortWithinPartitions("zv")
       .write.mode("overwrite").partitionBy("pid").parquet(base)
     // the skipping index is computed over the layout AS WRITTEN
@@ -929,9 +911,7 @@ object ExtendedEntry {
   // ---------------------------------------------------------------
   private def q80(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.Compaction
-    val base = s"target/scratch/q80_${sanitize(dir)}/documents"
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val base = Scratch.fresh(s, "q80", dir) + "/documents"
     val docs = t(s, dir, "documents")
     docs.repartition(64).write.parquet(base) // the "streaming ingest debris"
     val st = Compaction.compact(s, base, targetBytes = 64L * 1024 * 1024)
@@ -952,9 +932,7 @@ object ExtendedEntry {
   // ---------------------------------------------------------------
   private def q90(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.ZOrder
-    val base = s"target/scratch/q90_${sanitize(dir)}"
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val base = Scratch.fresh(s, "q90", dir)
     val li = t(s, dir, "lineitem").select("l_orderkey", "l_extendedprice")
     val b = li.agg(min(col("l_extendedprice")).cast("double"),
       max(col("l_extendedprice")).cast("double")).head()

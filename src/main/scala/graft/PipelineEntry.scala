@@ -113,7 +113,7 @@ object PipelineEntry {
   // ---------------------------------------------------------------
   private def q40(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.Bucketing
-    val suffix = dir.replaceAll("[^0-9a-zA-Z.]", "_").replace(".", "_")
+    val suffix = Scratch.key(dir)
     val (tO, tL) = (s"q40_orders_$suffix", s"q40_lineitem_$suffix")
     // the POINT of bucketing: the shuffle is paid once at write time
     // and amortized over every later join. The source dirs are
@@ -140,9 +140,7 @@ object PipelineEntry {
   // entries, update one, soft-delete one, list the live set.
   // ---------------------------------------------------------------
   private def q39(s: SparkSession, dir: String): DataFrame = {
-    val path = s"target/scratch/q39_${dir.replaceAll("[^0-9a-zA-Z.]", "_")}"
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val path = Scratch.fresh(s, "q39", dir)
 
     val store = new CatalogEntries(s, path)
     val tables = Catalog.discoverTables(s, dir).take(4)
@@ -349,9 +347,7 @@ object PipelineEntry {
   // merges into the persisted state on unique_key).
   // ---------------------------------------------------------------
   private def q35(s: SparkSession, dir: String): DataFrame = {
-    val wh = s"target/scratch/q35_${dir.replaceAll("[^0-9a-zA-Z.]", "_")}"
-    val whPath = new org.apache.hadoop.fs.Path(wh)
-    whPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(whPath, true)
+    val wh = Scratch.fresh(s, "q35", dir)
 
     def models(cutLo: String, cutHi: String) = Seq(
       Dag.Model("stg", Nil,
@@ -385,7 +381,7 @@ object PipelineEntry {
   // and extracts strictly above it (dlt pipeline-state semantics).
   // ---------------------------------------------------------------
   private def q36(s: SparkSession, dir: String): DataFrame = {
-    val statePath = s"target/scratch/q36_state_${dir.replaceAll("[^0-9a-zA-Z.]", "_")}"
+    val statePath = s"target/scratch/q36_state_${Scratch.key(dir)}"
     val orders = t(s, dir, "orders")
     val batch1 = orders.filter(col("o_orderdate") < lit("1999-01-01").cast("timestamp"))
     Incremental.saveState(batch1, "o_orderdate", statePath)

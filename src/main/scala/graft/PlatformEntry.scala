@@ -15,9 +15,6 @@ import graft.sources.Tables.{load => t}
   */
 object PlatformEntry {
 
-  private def sanitize(dir: String): String =
-    dir.replaceAll("[^0-9a-zA-Z.]", "_")
-
   // ---------------------------------------------------------------
   // q107 — live JDBC database extraction (the reference's DEFAULT
   // source: sql_table()/sql_database(), dlt_runner.py:167-189) over
@@ -35,7 +32,7 @@ object PlatformEntry {
   private def q107(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.JdbcSource
     import graft.sources.JdbcSource.TableConfig
-    val url = s"jdbc:derby:target/scratch/q107_db_${sanitize(dir)};create=true"
+    val url = s"jdbc:derby:target/scratch/q107_db_${Scratch.key(dir)};create=true"
     val opts = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
     def up(df: DataFrame): DataFrame = df.toDF(df.columns.map(_.toUpperCase): _*)
     // pay the fixture load once per warehouse (like q40's bucketing:
@@ -84,9 +81,7 @@ object PlatformEntry {
     import graft.dag.{ModelYaml, SqlModels}
     import graft.dag.ModelYaml._
     import graft.quality.Checks
-    val proj = s"target/scratch/q108_${sanitize(dir)}"
-    val p = new org.apache.hadoop.fs.Path(proj)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val proj = Scratch.fresh(s, "q108", dir)
 
     val built = SqlModels.runMaterialized(s,
       Seq(SqlModels.SqlModel("stg_orders", Q108ModelSql, Dag.Table)),
@@ -141,10 +136,9 @@ object PlatformEntry {
   // ---------------------------------------------------------------
   private def q109(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val wh = s"target/scratch/q109_${sanitize(dir)}"
-    val p = new org.apache.hadoop.fs.Path(wh)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
+    val wh = Scratch.fresh(s, "q109", dir)
+    val fs = new org.apache.hadoop.fs.Path(wh)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
 
     val models = Seq(
       Dag.Model("stg", Nil, _ => t(s, dir, "orders")
@@ -202,7 +196,7 @@ object PlatformEntry {
   // ---------------------------------------------------------------
   private def q110(s: SparkSession, dir: String): DataFrame = {
     import graft.dedup.Dedup
-    val idxPath = s"target/scratch/q110_index_${sanitize(dir)}"
+    val idxPath = s"target/scratch/q110_index_${Scratch.key(dir)}"
     val docs = t(s, dir, "documents").select("doc_id", "text")
     // corpus sketched once; persisted as the reusable index artifact
     Dedup.minhashIndex(docs, "doc_id", "text")
@@ -225,7 +219,7 @@ object PlatformEntry {
   private def q111(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.Export
     import graft.text.TextAnalysis
-    val out = s"target/scratch/q111_${sanitize(dir)}"
+    val out = s"target/scratch/q111_${Scratch.key(dir)}"
     val docs = t(s, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"),
         TextAnalysis.wsTokenCount(col("text")).cast("long").as("n_tokens"))
@@ -265,11 +259,10 @@ object PlatformEntry {
   private def q326(s: SparkSession, dir: String): DataFrame = {
     import graft.dedup.Dedup
     import graft.ops.{Compaction, Vacuum}
-    val root = s"target/scratch/q326_opt_${sanitize(dir)}"
+    val root = Scratch.fresh(s, "q326_opt", dir)
     val idxDir = s"$root/minhash_index"
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(rootPath, true)
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
     val docs = t(s, dir, "documents").select("doc_id", "text")
     // fragmented ingest fixture: the same 32-file layout the r13
     // 8-appends-×-repartition(4) loop produced, built in ONE write
@@ -291,9 +284,10 @@ object PlatformEntry {
     val before = graft.plans.Plans.materialize(probe())
     // plant crash debris from a failed OPTIMIZE of a since-dropped
     // sibling table, aged past retention, then compact + vacuum —
-    // the full maintenance cycle. (Debris under the LIVE index's own
-    // staging name needs no vacuum: compact reclaims its staging
-    // path itself on the next run.)
+    // the full maintenance cycle. (A crash inside this compact would
+    // leave `minhash_index.staging-<tag>` / `.old-<tag>` beside the
+    // live index; the same sweep reclaims those once they age past
+    // retention.)
     val debris = new org.apache.hadoop.fs.Path(s"$root/retired_index__compact_tmp")
     fs.mkdirs(debris)
     fs.create(new org.apache.hadoop.fs.Path(debris, "part-junk"), true).close()

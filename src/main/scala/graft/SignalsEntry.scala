@@ -686,7 +686,7 @@ object SignalsEntry {
   // ---------------------------------------------------------------
   private def q269(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.Streams
-    val name = s"q269_upsert_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    val name = s"q269_upsert_${Scratch.key(dir)}"
     s.catalog.dropTempView(name)
     val q = Streams.upsertStream(Streams.readEventsRaw(s, dir))
       .writeStream.format("memory").queryName(name)
@@ -730,10 +730,7 @@ object SignalsEntry {
   private def q271(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.VersionedTable
     import s.implicits._
-    val path = s"target/scratch/q271_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    val path = Scratch.fresh(s, "q271", dir)
     val orders = t(s, dir, "orders")
     def slice(k: Int) = orders.filter(pmod(col("o_orderkey"), lit(4)) === k)
       .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -768,10 +765,7 @@ object SignalsEntry {
   // ---------------------------------------------------------------
   private def q272(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.VersionedTable
-    val base = s"target/scratch/q272_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = Scratch.fresh(s, "q272", dir)
     val src = s"$base/src"; val dst = s"$base/clone"
     val orders = t(s, dir, "orders")
     def census(df: DataFrame): DataFrame =

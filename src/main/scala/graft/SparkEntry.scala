@@ -346,7 +346,7 @@ object SparkEntry {
   // FileSource with explicit schemas, snake_case-normalize, join+agg.
   // ---------------------------------------------------------------
   private def q15(s: SparkSession, dir: String): DataFrame = {
-    val scratch = s"target/scratch/q15_${dir.replaceAll("[^0-9a-zA-Z.]", "_")}"
+    val scratch = s"target/scratch/q15_${Scratch.key(dir)}"
     val nation = t(s, dir, "nation")
     val region = t(s, dir, "region")
     // two independent write jobs — submit concurrently

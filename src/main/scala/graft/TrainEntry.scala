@@ -203,10 +203,7 @@ object TrainEntry {
   // ---------------------------------------------------------------
   private def q118(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.VersionedTable
-    val path = s"target/scratch/q118_${ExtendedEntry.sanitize(dir)}"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    val path = Scratch.fresh(s, "q118", dir)
 
     val orders = t(s, dir, "orders")
     def census(df: DataFrame): DataFrame =
@@ -393,10 +390,7 @@ object TrainEntry {
   // ---------------------------------------------------------------
   private def q122(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.{Cdc, VersionedTable}
-    val path = s"target/scratch/q122_${ExtendedEntry.sanitize(dir)}"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    val path = Scratch.fresh(s, "q122", dir)
 
     val orders = t(s, dir, "orders")
     def census(df: DataFrame): DataFrame =
@@ -517,7 +511,7 @@ object TrainEntry {
   private def q125(s: SparkSession, dir: String): DataFrame = {
     import graft.dedup.Dedup
     import graft.text.HtmlExtract
-    val idxPath = s"target/scratch/q125_index_${ExtendedEntry.sanitize(dir)}"
+    val idxPath = s"target/scratch/q125_index_${Scratch.key(dir)}"
     val docs = t(s, dir, "documents").select("doc_id", "text")
     def extracted(pages: DataFrame): DataFrame = pages.select(col("doc_id"),
       HtmlExtract.mainText(
@@ -1010,7 +1004,7 @@ object TrainEntry {
     import graft.text.Dsir
     val docs = t(s, dir, "documents").select("doc_id", "text")
     Dsir.indexedScore(s,
-        s"target/scratch/dsir_index_${ExtendedEntry.sanitize(dir)}",
+        s"target/scratch/dsir_index_${Scratch.key(dir)}",
         corpus = docs,
         target = docs.filter(col("doc_id") % 31 === 7),
         batch = docs.filter(col("doc_id") % 3 === 1),
@@ -1039,7 +1033,7 @@ object TrainEntry {
     import graft.text.Dsir
     val docs = t(s, dir, "documents").select("doc_id", "text")
     Dsir.indexedScore(s,
-        s"target/scratch/dsir_index_tok_${ExtendedEntry.sanitize(dir)}",
+        s"target/scratch/dsir_index_tok_${Scratch.key(dir)}",
         corpus = docs,
         target = docs.filter(col("doc_id") % 31 === 7),
         batch = docs.filter(col("doc_id") % 3 === 2),

@@ -247,7 +247,7 @@ object WebEntry {
   // ---------------------------------------------------------------
   private def q132(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.ZoneMap
-    val path = s"target/scratch/q132_zonemap_${ExtendedEntry.sanitize(dir)}"
+    val path = s"target/scratch/q132_zonemap_${Scratch.key(dir)}"
     ZoneMap.write(t(s, dir, "orders"), path, "o_orderdate", 12)
     val from = lit("1995-01-01").cast("timestamp")
     val until = lit("1996-01-01").cast("timestamp")
@@ -503,7 +503,7 @@ object WebEntry {
   private def q138(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.Warc
     import graft.text.{HtmlExtract, Urls}
-    val path = s"target/scratch/q138_warc_${ExtendedEntry.sanitize(dir)}"
+    val path = s"target/scratch/q138_warc_${Scratch.key(dir)}"
     val pages = t(s, dir, "documents").select(
       concat(lit("https://"), srcDomainCol, lit("/p/"),
         col("doc_id").cast("string")).as("url"),
@@ -898,7 +898,7 @@ object WebEntry {
   // ---------------------------------------------------------------
   private def q160(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.HivePartitions
-    val path = s"target/scratch/q160_${ExtendedEntry.sanitize(dir)}"
+    val path = s"target/scratch/q160_${Scratch.key(dir)}"
     val ev = t(s, dir, "events")
       .withColumn("day", expr("(ts div 1000000) div 86400000"))
     HivePartitions.write(

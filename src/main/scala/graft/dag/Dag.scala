@@ -1,6 +1,7 @@
 package graft.dag
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ops.Writer
 
 /** DAG orchestration — the reference's dependency graph with
   * topological execution and cycle detection (datanika
@@ -254,13 +255,11 @@ object Dag {
           frame.createOrReplaceTempView(m.name)
           frame
         case Table =>
-          frame.write.mode("overwrite").parquet(path)
+          Writer.write(spark, frame, path, "replace")
           spark.read.parquet(path)
         case Incremental(uniqueKey) =>
-          // Writer's merge disposition stages the merged table and
-          // swaps — never overwrites the parquet it is reading
           val disposition = if (fullRefresh) "replace" else "merge"
-          graft.ops.Writer.write(spark, frame, path, disposition, uniqueKey)
+          Writer.write(spark, frame, path, disposition, uniqueKey)
           spark.read.parquet(path)
       }
       built + (m.name -> result)

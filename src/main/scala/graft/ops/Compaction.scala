@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.hadoop.fs.Path
 
 /** Small-file compaction — the lakehouse OPTIMIZE/bin-pack
@@ -14,9 +14,9 @@ import org.apache.hadoop.fs.Path
   * total/target — the same arithmetic Delta's bin-packing uses for
   * its file groups), then rewrite through `coalesce`, which merges
   * read-partitions WITHOUT a shuffle — compaction is IO-bound by
-  * construction and must not pay an exchange. The rewrite is staged
-  * next to the source and swapped in by rename, so readers never see
-  * a half-compacted directory.
+  * construction and must not pay an exchange. The rewrite goes
+  * through `StagedSwap`, so readers never see a half-compacted
+  * directory and a failed rewrite leaves the source as it was.
   */
 object Compaction {
 
@@ -42,17 +42,8 @@ object Compaction {
     val df = spark.read.parquet(dir)
     if (before.length <= want)
       return Stats(before.length, bytes, before.length, df.count())
-
-    val staged = s"${dir.stripSuffix("/")}__compact_tmp"
-    val stagedPath = new Path(staged)
-    val fs = stagedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(stagedPath, true)
     // coalesce, not repartition: partition merge without an exchange
-    df.coalesce(want).write.mode("overwrite").parquet(staged)
-    val dirPath = new Path(dir)
-    fs.delete(dirPath, true)
-    if (!fs.rename(stagedPath, dirPath))
-      throw new java.io.IOException(s"rename $staged -> $dir failed")
+    StagedSwap.overwrite(spark, dir)(df.coalesce(want).write.parquet(_))
     val after = dataFiles(spark, dir)
     Stats(before.length, bytes, after.length,
       spark.read.parquet(dir).count())

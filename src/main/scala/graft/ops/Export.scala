@@ -13,10 +13,10 @@ import org.apache.spark.sql.functions._
   * (key mod nShards — deterministic and restatable in SQL, unlike a
   * round-robin or a hash whose seed varies by engine), the write is
   * ONE `partitionBy(shard)` job (each shard lands as its own
-  * directory, loaders stream shard_i independently), and the
-  * manifest is one aggregate over the written files — read BACK from
-  * disk, so the manifest certifies what actually landed, not what
-  * was submitted.
+  * directory, loaders stream shard_i independently) swapped in over
+  * any earlier export by `StagedSwap`, and the manifest is one
+  * aggregate over the written files — read BACK from disk, so the
+  * manifest certifies what actually landed, not what was submitted.
   */
 object Export {
 
@@ -32,13 +32,11 @@ object Export {
       nShards: Int,
       path: String): DataFrame = {
     require(nShards > 0, s"nShards must be positive, got $nShards")
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    docs
+    StagedSwap.overwrite(spark, path)(docs
       .withColumn("shard", pmod(col(idCol), lit(nShards.toLong)))
       // one file per shard dir: loaders address shard_i/part-*.json
       .repartition(nShards, col("shard"))
-      .write.partitionBy("shard").json(path)
+      .write.partitionBy("shard").json(_))
     manifest(spark, path, idCol, tokensCol)
   }
 

@@ -2,43 +2,51 @@ package graft.ops
 
 import org.apache.spark.sql.SparkSession
 
-/** The repo's staged-swap discipline as one reusable primitive
-  * (extracted r10 from Writer.merge / LmFilter.indexedBigramLogprob;
-  * Compaction keeps its source-preserving variant): write the new
-  * artifact NEXT TO the target and swap by rename — an in-place
-  * mode(overwrite) deletes the live files first and hands a
-  * concurrent reader a torn directory; here a reader of `path` sees
-  * the OLD complete artifact or (for the instant between the two
-  * renames) a missing path, never a torn one, and readers built on
-  * the treat-any-failure-as-rebuild rule recover from both. A crash
-  * mid-swap leaves the old, the new, or a suffixed aside — never
-  * nothing.
+/** The one way graft replaces what is at a path: `Writer.write`'s
+  * `replace` and `merge`, Dag `Table` models, seeds, incremental
+  * state, `Compaction` and `Export` all go through [[overwrite]]. It
+  * writes the new artifact NEXT TO the target and swaps it in by
+  * rename. An in-place mode(overwrite) deletes the live files first:
+  * a failed job then leaves an empty table, a batch that reads its
+  * own target loses its input, and a concurrent reader sees a torn
+  * directory. Here a reader of `path` sees the OLD complete artifact
+  * or (for the instant between the two renames) a missing path, never
+  * a torn one, and readers built on the treat-any-failure-as-rebuild
+  * rule recover from both. A failed write leaves the target as it
+  * was; a crash mid-swap leaves the old, the new, or a suffixed aside
+  * — never nothing.
   *
   * Concurrency contract: single writer per target (the
   * VersionedTable run model). Staging/aside paths carry a unique
   * per-invocation suffix, so two racing rebuilds cannot rename or
   * delete EACH OTHER'S directories — the loser's rename of target
   * simply fails loudly (or its aside is orphaned, reclaimable by
-  * prefix) rather than corrupting the winner's swap; last-rename-wins
+  * `Vacuum`) rather than corrupting the winner's swap; last-rename-wins
   * ordering of the final artifact is still unspecified, which is why
   * multi-writer coordination stays the caller's job.
   */
 object StagedSwap {
 
-  /** Run `write` against a staging path, then swap it into `path`
-    * via rename-aside. `write` must produce a complete artifact at
-    * the staging path it is given (e.g. `df.write.mode("overwrite")
-    * .parquet(staging)`).
+  /** Run `write` against a fresh staging path, then swap it into
+    * `path` via rename-aside. `write` must produce a complete artifact
+    * at the staging path it is given (e.g. `df.write.parquet(_)`); if
+    * it throws, the staging path is removed and `path` is untouched.
     */
   def overwrite(spark: SparkSession, path: String)(
       write: String => Unit): Unit = {
     import org.apache.hadoop.fs.Path
+    // Path drops a trailing `/`, so the siblings never land inside
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tag = java.util.UUID.randomUUID().toString.take(8)
-    val staging = new Path(s"$path.staging-$tag")
-    write(staging.toString)
-    val old = new Path(s"$path.old-$tag")
+    val staging = new Path(s"$target.staging-$tag")
+    try write(staging.toString)
+    catch {
+      case e: Throwable =>
+        fs.delete(staging, true)
+        throw e
+    }
+    val old = new Path(s"$target.old-$tag")
     val hadTarget = fs.exists(target)
     if (hadTarget && !fs.rename(target, old))
       throw new java.io.IOException(

@@ -4,15 +4,17 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Warehouse vacuum — the lakehouse VACUUM / retention sweep that
-  * pairs with Compaction's OPTIMIZE: staged-swap writers
-  * (ops/Writer.scala merge: `<table>.staging` → rename; `<table>.old`
-  * kept until the swap lands; ops/Compaction.scala:
-  * `<table>__compact_tmp`) leave debris behind when a run crashes
-  * between the write and the swap. At 100 TB that debris is real
-  * money and real LIST latency, but deleting it eagerly would race a
-  * concurrent in-flight swap — hence the retention window: only
-  * debris older than `retentionMs` goes, exactly Delta VACUUM's
-  * contract.
+  * pairs with Compaction's OPTIMIZE: every current writer replaces a
+  * path through `StagedSwap` (`<table>.staging-<tag>` written, then
+  * swapped in; `<table>.old-<tag>` kept until the swap lands), which
+  * leaves debris behind when a run crashes between the write and the
+  * swap. The untagged `<table>.staging` / `<table>.old` and
+  * `<table>__compact_tmp` names are debris from earlier writers and
+  * from fixtures; the sweep still reclaims them. At 100 TB that
+  * debris is real money and real LIST latency, but deleting it
+  * eagerly would race a concurrent in-flight swap — hence the
+  * retention window: only debris older than `retentionMs` goes,
+  * exactly Delta VACUUM's contract.
   *
   * Driver-side metadata op by design (one directory listing + a
   * delete per expired entry) — the data plane is never touched and
@@ -21,10 +23,10 @@ import org.apache.spark.sql.SparkSession
   */
 object Vacuum {
 
-  /** RESERVED warehouse suffixes — `Writer`'s staged-swap (`.staging`,
-    * `.old`), `StagedSwap`'s per-invocation tagged variants
-    * (`.staging-<tag>` / `.old-<tag>`, 8-hex tag), and `Compaction`'s
-    * rewrite temp (`__compact_tmp`) own these names; user tables must
+  /** RESERVED warehouse suffixes — `StagedSwap`'s per-invocation
+    * tagged names (`.staging-<tag>` / `.old-<tag>`, 8-hex tag) and the
+    * untagged `.staging`, `.old` and `__compact_tmp` that earlier
+    * writers left behind own these names; user tables must
     * not end with them. These are the suffix STEMS; the AUTHORITATIVE
     * contract of everything the sweep may delete is [[DebrisNameRe]]
     * (which also covers the tagged `-<8hex>` variants) — reserved-name

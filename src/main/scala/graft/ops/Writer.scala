@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * `existing ANTI-JOIN batch-keys  UNION ALL  batch` — one hash
   * shuffle on the PK, no driver-side row loops, so it scales to any
   * number of executors. With a transactional table format this maps
-  * to MERGE INTO; on raw parquet we rewrite via a staging dir.
+  * to MERGE INTO; on raw parquet the merged table is rewritten through
+  * `StagedSwap`.
   */
 object Writer {
 
@@ -33,9 +34,11 @@ object Writer {
   /** Logical replace: the batch is the new table. */
   def replace(existing: DataFrame, batch: DataFrame): DataFrame = batch
 
-  /** Physical write honoring a disposition. `merge` reads the current
-    * table, merges, writes to a staging path, then swaps — parquet has
-    * no transactional MERGE, and writing over a path being read races.
+  /** Physical write honoring a disposition. `append` adds files in
+    * place; `replace` and `merge` rewrite the table through
+    * [[StagedSwap.overwrite]], so a failed batch leaves the old table
+    * readable and a batch may read the table it replaces. `merge` reads
+    * the current table (if any) and merges the batch into it.
     *
     * `batchSize` mirrors dlt's batch-size-controlled chunked loading
     * (reference `services/dlt_runner.py:8`): Spark-side it bounds
@@ -53,32 +56,19 @@ object Writer {
       val base = df.write
       batchSize.fold(base)(n => base.option("maxRecordsPerFile", n))
     }
+    def swap(frame: DataFrame): Unit =
+      StagedSwap.overwrite(spark, path)(w(frame).parquet(_))
     disposition match {
     case "append"  => w(batch).mode("append").parquet(path)
-    case "replace" => w(batch).mode("overwrite").parquet(path)
+    case "replace" => swap(batch)
     case "merge" =>
-      import org.apache.hadoop.fs.Path
-      val target = new Path(path)
+      val target = new org.apache.hadoop.fs.Path(path)
       // path-scheme-aware FS (s3a:// target must not resolve against
       // a file:// or hdfs:// defaultFS)
       val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val merged =
+      swap(
         if (fs.exists(target)) merge(spark.read.parquet(path), batch, primaryKey)
-        else batch
-      val staging = new Path(path + ".staging")
-      w(merged).mode("overwrite").parquet(staging.toString)
-      // swap via rename-aside: the old table survives until the new
-      // one is in place, so a crash mid-swap never loses the target
-      val old = new Path(path + ".old")
-      if (fs.exists(old)) fs.delete(old, true)
-      val hadTarget = fs.exists(target)
-      if (hadTarget && !fs.rename(target, old))
-        throw new java.io.IOException(s"merge swap: rename $target -> $old failed")
-      if (!fs.rename(staging, target)) {
-        if (hadTarget) fs.rename(old, target) // restore
-        throw new java.io.IOException(s"merge swap: rename $staging -> $target failed")
-      }
-      if (hadTarget) fs.delete(old, true)
+        else batch)
     case other => throw new IllegalArgumentException(s"Unknown write_disposition: $other")
     }
   }

@@ -73,11 +73,12 @@ object Incremental {
         batch.select(greatest(col("last_value"), lit(prev)).as("last_value"))
       case None => batch
     }
-    // materialize BEFORE overwriting: `merged` reads the same path
+    // head() decides whether there is a watermark to store at all
     val row = merged.head()
     if (!row.isNullAt(0))
-      spark.createDataFrame(java.util.Collections.singletonList(row), merged.schema)
-        .coalesce(1).write.mode("overwrite").parquet(statePath)
+      graft.ops.StagedSwap.overwrite(spark, statePath)(
+        spark.createDataFrame(java.util.Collections.singletonList(row), merged.schema)
+          .coalesce(1).write.parquet(_))
   }
 
   /** Load the persisted watermark; None when no state exists yet

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ops.Writer
 
 /** dbt seeds — CSV files materialized as warehouse tables (the
   * reference runs `dbt seed`, VALID_COMMANDS in
@@ -28,7 +29,7 @@ object Seeds {
       .map { name =>
         val df = FileSource.normalizeColumns(
           FileSource.read(spark, "csv", s"$seedsDir/$name.csv"))
-        df.write.mode("overwrite").parquet(s"$warehouseDir/$name")
+        Writer.write(spark, df, s"$warehouseDir/$name", "replace")
         name -> spark.read.parquet(s"$warehouseDir/$name")
       }.toMap
   }

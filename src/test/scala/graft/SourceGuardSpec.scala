@@ -7,11 +7,14 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funspec.AnyFunSpec
 import org.scalatest.matchers.should.Matchers
 
-/** Keeps one session builder, a fixed set of mains and one
-  * materialization primitive: every session comes from `Session.local`,
-  * no one-off diagnostic main creeps back into `src/`, and only
-  * `graft.plans.Plans` persists, caches or checkpoints a DataFrame in
-  * `src/main`. Comment lines are ignored; code is not.
+/** Keeps one session builder, a fixed set of mains, one
+  * materialization primitive and one way to replace a path: every
+  * session comes from `Session.local`, no one-off diagnostic main
+  * creeps back into `src/`, only `graft.plans.Plans` persists, caches
+  * or checkpoints a DataFrame in `src/main`, and only `StagedSwap`
+  * renames a path there (besides `VersionedTable`'s put-if-absent log
+  * commits and the q63 seed fixture). Comment lines are ignored; code
+  * is not.
   */
 class SourceGuardSpec extends AnyFunSpec with Matchers {
 
@@ -26,10 +29,16 @@ class SourceGuardSpec extends AnyFunSpec with Matchers {
     "main/scala/graft/tools/PlanDump.scala",
     "main/scala/graft/tools/BpeBench.scala")
 
+  private val renamers = Set(
+    "main/scala/graft/ops/StagedSwap.scala",
+    "main/scala/graft/ops/VersionedTable.scala",
+    "main/scala/graft/ExtendedEntry.scala")
+
   private val Builder = """SparkSession\s*\.\s*builder"""
   private val Main = """\bdef\s+main\s*\("""
   private val Materialize =
     """\.\s*(persist|unpersist|localCheckpoint)\s*\(|\.\s*cache\s*\(\s*\)"""
+  private val Rename = """\.\s*rename\s*\("""
 
   /** Source path relative to `src/` (with `/` separators) → code. */
   private lazy val sources: Map[String, String] = {
@@ -77,6 +86,9 @@ class SourceGuardSpec extends AnyFunSpec with Matchers {
       filesMatching("""\bStorageLevel\b""").filter(_.startsWith("main/")) shouldBe
         empty
     }
+    it("renames paths only in StagedSwap, VersionedTable and the q63 fixture") {
+      filesMatching(Rename).filter(_.startsWith("main/")) shouldBe renamers
+    }
   }
 
   describe("the comment filter") {
@@ -94,6 +106,12 @@ class SourceGuardSpec extends AnyFunSpec with Matchers {
       calls.filterNot(c => found(Materialize, codeLines(s"val x = $c"))) shouldBe empty
       found(Materialize, codeLines("// df.persist()\n * df.cache()")) shouldBe false
       found(Materialize, codeLines("val cache = Cache.cached()")) shouldBe false
+    }
+    it("sees every rename call form, but not in comments") {
+      val calls = Seq("fs.rename(a, b)", "fs\n  .rename(a, b)", "fs . rename (a, b)")
+      calls.filterNot(c => found(Rename, codeLines(s"val ok = $c"))) shouldBe empty
+      found(Rename, codeLines("// fs.rename(a, b)\n * fs.rename(a, b)")) shouldBe false
+      found(Rename, codeLines("df.withColumnRenamed(a, b).renamed(c)")) shouldBe false
     }
     it("ignores line and block comments") {
       val code = s"// $builder\n/* $main\n * $builder\n */\nval x = 1\n"

@@ -15,4 +15,13 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSpec with Matchers {
   lazy val spark: SparkSession = SparkSpec.session
   System.setProperty("derby.stream.error.file", "target/derby.log")
+
+  /** Names in `path`'s parent directory that `Vacuum` would sweep as
+    * staged-swap or compaction debris. */
+  def debrisNextTo(path: String): Seq[String] = {
+    val parent = new org.apache.hadoop.fs.Path(path).getParent
+    parent.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(parent).toSeq.map(_.getPath.getName)
+      .filter(graft.ops.Vacuum.DebrisNameRe.pattern.matcher(_).matches())
+  }
 }

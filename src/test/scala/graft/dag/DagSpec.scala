@@ -143,6 +143,24 @@ class DagSpec extends SparkSpec {
       // table model persisted: run 2 overwrote with its own count
       out("stats").head().getLong(0) shouldBe 3
       spark.read.parquet(s"$wh/stats").head().getLong(0) shouldBe 3
+      debrisNextTo(s"$wh/stats") shouldBe empty
+    }
+    it("keeps a table model readable when its rebuild fails") {
+      val wh = "target/scratch/dag-spec-fail"
+      val p = new org.apache.hadoop.fs.Path(wh)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      def models(fail: Boolean) = Seq(Dag.Model("t", Nil, _ => {
+        val ids = spark.range(3).toDF("id")
+        if (!fail) ids
+        else ids.select(when(col("id") === 2L, raise_error(lit("boom")))
+          .otherwise(col("id")).as("id"))
+      }, Dag.Table))
+
+      Dag.runMaterialized(spark, models(fail = false), wh)
+      an[Exception] should be thrownBy
+        Dag.runMaterialized(spark, models(fail = true), wh)
+      spark.read.parquet(s"$wh/t").count() shouldBe 3
+      debrisNextTo(s"$wh/t") shouldBe empty
     }
   }
 

@@ -10,7 +10,7 @@ class CompactionSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshDir(name: String): String = {
-    val dir = s"target/scratch/compact_spec_$name"
+    val dir = s"target/scratch/compact_spec/$name"
     val p = new Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     dir
@@ -37,9 +37,7 @@ class CompactionSpec extends SparkSpec {
     val after = spark.read.parquet(dir).collect().map(_.toString).sorted
     after shouldBe before
     // staged dir swapped away cleanly
-    val tmp = new Path(dir + "__compact_tmp")
-    tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(tmp) shouldBe false
+    debrisNextTo(dir) shouldBe empty
   }
 
   it("splits toward the byte target instead of always producing one file") {

@@ -27,6 +27,12 @@ class ExportSpec extends SparkSpec {
         .select("doc_id").collect()
         .foreach(_.getLong(0) % 4 shouldBe sId)
     }
+    debrisNextTo(path) shouldBe empty
+    // a re-export replaces the earlier shards instead of mixing in
+    Export.jsonlShards(spark, docs(), "doc_id", "n_tokens", 2, path)
+      .collect().map(_.getLong(0)) shouldBe Array(0L, 1L)
+    new java.io.File(s"$path/shard=3").exists() shouldBe false
+    debrisNextTo(path) shouldBe empty
   }
 
   it("manifest() re-certifies an existing export") {

@@ -20,7 +20,7 @@ class WriterIncrementalSpec extends SparkSpec {
   describe("Writer.write merge disposition") {
     it("stages and swaps without leaving .staging/.old behind") {
       import spark.implicits._
-      val path = "target/scratch/writer-spec-table"
+      val path = "target/scratch/writer-spec/table"
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(path), true)
@@ -32,8 +32,36 @@ class WriterIncrementalSpec extends SparkSpec {
 
       val out = spark.read.parquet(path).as[(Long, String)].collect().sorted
       out shouldBe Array((1L, "a"), (2L, "B"), (3L, "c"))
-      fs.exists(new org.apache.hadoop.fs.Path(path + ".staging")) shouldBe false
-      fs.exists(new org.apache.hadoop.fs.Path(path + ".old")) shouldBe false
+      debrisNextTo(path) shouldBe empty
+    }
+  }
+
+  describe("Writer.write replace disposition") {
+    import spark.implicits._
+    def fresh(name: String): String = {
+      val path = s"target/scratch/writer-spec-replace/$name"
+      val p = new org.apache.hadoop.fs.Path(path)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      path
+    }
+
+    it("keeps the old table when the new batch fails") {
+      val path = fresh("failed")
+      Writer.write(spark, Seq(1L, 2L).toDF("id"), path, "replace")
+      val failing = spark.range(3).select(
+        when(col("id") === 2L, raise_error(lit("boom"))).otherwise(col("id")).as("id"))
+      an[Exception] should be thrownBy Writer.write(spark, failing, path, "replace")
+      spark.read.parquet(path).as[Long].collect().sorted shouldBe Array(1L, 2L)
+      debrisNextTo(path) shouldBe empty
+    }
+    it("replaces a table with a batch that reads the table") {
+      val path = fresh("self-read")
+      Writer.write(spark, spark.range(10).toDF("id"), path, "replace")
+      Writer.write(spark, spark.read.parquet(path).filter(col("id") % 3 === 0),
+        path, "replace")
+      spark.read.parquet(path).as[Long].collect().sorted shouldBe
+        Array(0L, 3L, 6L, 9L)
+      debrisNextTo(path) shouldBe empty
     }
   }
 
@@ -72,9 +100,12 @@ class WriterIncrementalSpec extends SparkSpec {
         .as[Long].collect().sorted shouldBe Array(3L, 4L)
     }
     it("state round-trips through the typed parquet store") {
-      val sp = "target/scratch/incremental-spec-state"
+      val sp = "target/scratch/incremental-spec/state"
       Incremental.saveState(df, "c", sp)
       Incremental.loadState(spark, sp).lastValue shouldBe Some(4L)
+      Incremental.saveState(df, "c", sp) // rewrite over the stored state
+      Incremental.loadState(spark, sp).lastValue shouldBe Some(4L)
+      debrisNextTo(sp) shouldBe empty
       Incremental.loadState(spark, sp + "-missing").lastValue shouldBe None
     }
   }
