@@ -107,34 +107,9 @@ object GraftExtensions {
           "graft_mix30(k) takes 1 argument")
       }),
 
-    // ---- mergeable sketch family (aggregates return sketch BYTES;
-    // ---- the registry wraps AggregateFunctions automatically) ----
-    (FunctionIdentifier("graft_kll_sketch"),
-      info("graft_kll_sketch",
-        "_FUNC_(x[, k]) - mergeable KLL quantile sketch bytes of a numeric column"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => graft.functions.KllSketchAgg(castDouble(c))
-        case Seq(c, k) => graft.functions.KllSketchAgg(castDouble(c), intLit(k, "k"))
-        case _ => throw new IllegalArgumentException(
-          "graft_kll_sketch(x[, k]) takes 1-2 arguments")
-      }),
-    (FunctionIdentifier("graft_kll_merge"),
-      info("graft_kll_merge",
-        "_FUNC_(sketch[, k]) - merge previously-built KLL sketches (bytes only)"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => graft.functions.KllMergeAgg(c)
-        case Seq(c, k) => graft.functions.KllMergeAgg(c, intLit(k, "k"))
-        case _ => throw new IllegalArgumentException(
-          "graft_kll_merge(sketch[, k]) takes 1-2 arguments")
-      }),
-    (FunctionIdentifier("graft_kll_quantiles"),
-      info("graft_kll_quantiles",
-        "_FUNC_(sketch, array(p1, p2, ...)) - quantiles from KLL sketch bytes"),
-      (children: Seq[Expression]) => children match {
-        case Seq(sk, ps) => graft.functions.KllQuantilesExpr(sk, doubleArrayLit(ps, "probs"))
-        case _ => throw new IllegalArgumentException(
-          "graft_kll_quantiles(sketch, probs) takes 2 arguments")
-      }),
+    // ---- heavy-hitters sketch (aggregates return sketch BYTES; the
+    // ---- registry wraps AggregateFunctions automatically). KLL and
+    // ---- theta sketches are Spark's own kll_*/theta_* functions. ----
     (FunctionIdentifier("graft_freq_sketch"),
       info("graft_freq_sketch",
         "_FUNC_(item[, maxMapSize]) - mergeable Misra-Gries heavy-hitters sketch bytes"),
@@ -160,101 +135,7 @@ object GraftExtensions {
         case Seq(sk, k) => graft.functions.FreqTopKExpr(sk, intLit(k, "k"))
         case _ => throw new IllegalArgumentException(
           "graft_freq_top_k(sketch, k) takes 2 arguments")
-      }),
-    (FunctionIdentifier("graft_theta_sketch"),
-      info("graft_theta_sketch",
-        "_FUNC_(x[, lgK]) - mergeable theta distinct sketch bytes (set algebra capable)"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => graft.functions.ThetaSketchAgg(c)
-        case Seq(c, lgK) => graft.functions.ThetaSketchAgg(c, intLit(lgK, "lgK"))
-        case _ => throw new IllegalArgumentException(
-          "graft_theta_sketch(x[, lgK]) takes 1-2 arguments")
-      }),
-    (FunctionIdentifier("graft_theta_union"),
-      info("graft_theta_union",
-        "_FUNC_(sketch[, lgK]) - union previously-built theta sketches (bytes only)"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => graft.functions.ThetaUnionAgg(c)
-        case Seq(c, lgK) => graft.functions.ThetaUnionAgg(c, intLit(lgK, "lgK"))
-        case _ => throw new IllegalArgumentException(
-          "graft_theta_union(sketch[, lgK]) takes 1-2 arguments")
-      }),
-    (FunctionIdentifier("graft_theta_estimate"),
-      info("graft_theta_estimate",
-        "_FUNC_(sketch) - distinct estimate of theta sketch bytes (long)"),
-      (children: Seq[Expression]) => children match {
-        case Seq(sk) => graft.functions.ThetaEstimateExpr(sk)
-        case _ => throw new IllegalArgumentException(
-          "graft_theta_estimate(sketch) takes 1 argument")
-      }),
-    (FunctionIdentifier("graft_theta_intersect"),
-      info("graft_theta_intersect",
-        "_FUNC_(a, b) - intersection of two theta sketches (bytes)"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b) => graft.functions.ThetaSetOpExpr(a, b, "intersect")
-        case _ => throw new IllegalArgumentException(
-          "graft_theta_intersect(a, b) takes 2 arguments")
-      }),
-    (FunctionIdentifier("graft_theta_a_not_b"),
-      info("graft_theta_a_not_b",
-        "_FUNC_(a, b) - difference a \\ b of two theta sketches (bytes)"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b) => graft.functions.ThetaSetOpExpr(a, b, "a_not_b")
-        case _ => throw new IllegalArgumentException(
-          "graft_theta_a_not_b(a, b) takes 2 arguments")
-      }),
-    (FunctionIdentifier("graft_theta_union_of"),
-      info("graft_theta_union_of",
-        "_FUNC_(a, b[, lgK]) - pairwise union of two theta sketches (bytes); " +
-          "lgK must cover the inputs' build size"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b) => graft.functions.ThetaSetOpExpr(a, b, "union")
-        case Seq(a, b, lgK) =>
-          graft.functions.ThetaSetOpExpr(a, b, "union", intLit(lgK, "lgK"))
-        case _ => throw new IllegalArgumentException(
-          "graft_theta_union_of(a, b[, lgK]) takes 2-3 arguments")
       }))
-
-  private def castDouble(e: Expression): Expression =
-    org.apache.spark.sql.catalyst.expressions.Cast(
-      e, org.apache.spark.sql.types.DoubleType)
-
-  /** Evaluate a foldable array expression to literal probs (cast to
-    * array<double> first so decimal literals like 0.5 work).
-    */
-  private def doubleArrayLit(e: Expression, what: String): Seq[Double] = {
-    import org.apache.spark.sql.catalyst.expressions.Cast
-    import org.apache.spark.sql.catalyst.util.ArrayData
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    require(e.foldable, s"$what must be a literal array of doubles, got: $e")
-    Cast(e, ArrayType(DoubleType)).eval() match {
-      case a: ArrayData =>
-        val n = a.numElements()
-        require((0 until n).forall(i => !a.isNullAt(i)),
-          s"$what must not contain nulls or non-numeric values")
-        a.toDoubleArray().toSeq
-      case other => throw new IllegalArgumentException(
-        s"$what must be a literal array of doubles, got: $other")
-    }
-  }
-
-  /** TextHashExprs.mix30 as a resolved catalyst tree (the registry
-    * builder can't analyze Column-form unresolved functions, so the
-    * composition is spelled in catalyst nodes here; constants mirror
-    * TextHashExprs.mix30 and Sampling.mix30 — GraftFunctionsSpec pins
-    * all three equal).
-    */
-  private def mix30Expr(k: Expression): Expression = {
-    import org.apache.spark.sql.catalyst.expressions.{BitwiseXor, Cast, Multiply, Pmod, ShiftRight}
-    import org.apache.spark.sql.types.LongType
-    val p = Literal(1073741789L) // largest prime < 2^30
-    val x0 = Cast(k, LongType)
-    val x1 = BitwiseXor(x0, ShiftRight(x0, Literal(16)))
-    val x2 = Pmod(Multiply(x1, Literal(0x9E3779B1L)), p)
-    val x3 = BitwiseXor(x2, ShiftRight(x2, Literal(13)))
-    val x4 = Pmod(Multiply(x3, Literal(0x85EBCA77L)), p)
-    BitwiseXor(x4, ShiftRight(x4, Literal(16)))
-  }
 
   /** Imperative registration into a live session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =

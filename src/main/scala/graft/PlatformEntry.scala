@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dag.Dag
-import graft.ops.Snapshot
+import graft.ops.{Snapshot, StagedSwap}
 import graft.sources.Tables.{load => t}
 
 /** q107+: the platform-surface tail — live JDBC database extraction,
@@ -199,8 +199,8 @@ object PlatformEntry {
     val idxPath = s"target/scratch/q110_index_${Scratch.key(dir)}"
     val docs = t(s, dir, "documents").select("doc_id", "text")
     // corpus sketched once; persisted as the reusable index artifact
-    Dedup.minhashIndex(docs, "doc_id", "text")
-      .write.mode("overwrite").parquet(idxPath)
+    StagedSwap.overwrite(s, idxPath)(
+      Dedup.minhashIndex(docs, "doc_id", "text").write.parquet(_))
     val index = s.read.parquet(idxPath)
     val batch = docs.filter(col("doc_id") % 25 === 0)
       .withColumn("doc_id", col("doc_id") + 1000000L)

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.StagedSwap
 import graft.sources.Tables.{load => t}
 
 /** q113+: the training-data tail — leakage-safe splits, mergeable
@@ -475,16 +476,16 @@ object TrainEntry {
     def seg(name: String, est: org.apache.spark.sql.Column) =
       struct(lit(name).as("segment"), est.as("n_users"))
     one.crossJoin(anyEv).select(explode(array(
-        seg("click", ThetaAgg.thetaEstimate(col("click"))),
-        seg("purchase", ThetaAgg.thetaEstimate(col("purchase"))),
-        seg("signup", ThetaAgg.thetaEstimate(col("signup"))),
-        seg("view", ThetaAgg.thetaEstimate(col("view"))),
-        seg("error", ThetaAgg.thetaEstimate(col("error"))),
-        seg("click_and_purchase", ThetaAgg.thetaEstimate(
-          ThetaAgg.thetaIntersect(col("click"), col("purchase")))),
-        seg("click_not_purchase", ThetaAgg.thetaEstimate(
-          ThetaAgg.thetaANotB(col("click"), col("purchase")))),
-        seg("any_event", ThetaAgg.thetaEstimate(col("all_sk"))))).as("r"))
+        seg("click", theta_sketch_estimate(col("click"))),
+        seg("purchase", theta_sketch_estimate(col("purchase"))),
+        seg("signup", theta_sketch_estimate(col("signup"))),
+        seg("view", theta_sketch_estimate(col("view"))),
+        seg("error", theta_sketch_estimate(col("error"))),
+        seg("click_and_purchase", theta_sketch_estimate(
+          theta_intersection(col("click"), col("purchase")))),
+        seg("click_not_purchase", theta_sketch_estimate(
+          theta_difference(col("click"), col("purchase")))),
+        seg("any_event", theta_sketch_estimate(col("all_sk"))))).as("r"))
       .select(col("r.segment").as("segment"), col("r.n_users").as("n_users"))
       .orderBy("segment")
   }
@@ -517,9 +518,8 @@ object TrainEntry {
       HtmlExtract.mainText(
         concat(lit(PageHead), col("text"), lit(HtmlD))).as("text"))
     // corpus pages extracted + sketched once; persisted index artifact
-    extracted(docs).transform(d =>
-        Dedup.minhashIndex(d, "doc_id", "text"))
-      .write.mode("overwrite").parquet(idxPath)
+    StagedSwap.overwrite(s, idxPath)(
+      Dedup.minhashIndex(extracted(docs), "doc_id", "text").write.parquet(_))
     val index = s.read.parquet(idxPath)
     // the new crawl: near-dup re-crawls under fresh crawl ids
     val batch = extracted(

@@ -31,11 +31,14 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   * The state is a roaring-style two-level bitmap over signed 64-bit
   * values (chunk key = value >> 16; within a chunk, cardinality
   * ≤ 4096 keeps a sorted u16 array, beyond that an 8 KiB bit set —
-  * Chambi et al. 2016's array/bitmap container split, reimplemented
-  * minimally since the RoaringBitmap library isn't on Spark's
-  * classpath). Dense id spaces cost ~1 bit per id; sparse ones ~2
-  * bytes per id — always ≤ the equivalent sorted id list, and
-  * independent of row count (a user with 10k events is one bit).
+  * Chambi et al. 2016's array/bitmap container split). Dense id
+  * spaces cost ~1 bit per id; sparse ones ~2 bytes per id — always ≤
+  * the equivalent sorted id list, and independent of row count (a
+  * user with 10k events is one bit). The container is written here,
+  * not taken from the RoaringBitmap jar Spark ships, because of its
+  * BYTES: the canonical serialization below is the persisted state
+  * format (`BitmapAggSpec` pins it), and RoaringBitmap's own
+  * serialization is a different one.
   *
   * Serialization is canonical (chunks ascending, array containers
   * sorted), so equal SETS produce equal BYTES regardless of insertion
@@ -405,7 +408,7 @@ case class BitmapAndCardinalityExpr(left: Expression, right: Expression)
 }
 
 /** Exact cardinality of serialized state. Evaluated once per GROUP
-  * row, so CodegenFallback costs nothing (q114's KllQuantilesExpr
+  * row, so CodegenFallback costs nothing (FreqTopKExpr's
   * precedent).
   */
 case class BitmapCardinalityExpr(child: Expression)

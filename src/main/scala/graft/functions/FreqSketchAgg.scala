@@ -199,3 +199,14 @@ case class FreqTopKExpr(child: Expression, k: Int)
   override protected def withNewChildInternal(c: Expression): FreqTopKExpr =
     copy(child = c)
 }
+
+/** Minimal UnaryLike for graft's aggregates (FreqSketchAgg, BitmapAgg,
+  * CovMomentsAgg): TypedImperativeAggregate doesn't fix arity.
+  */
+private[functions] trait UnaryLike { self: TypedImperativeAggregate[_] =>
+  def child: Expression
+  final override def children: Seq[Expression] = Seq(child)
+  protected def withNewChildInternal(c: Expression): Expression
+  final override protected def withNewChildrenInternal(
+      cs: IndexedSeq[Expression]): Expression = withNewChildInternal(cs.head)
+}

@@ -1,17 +1,9 @@
 package graft.functions
 
-import org.apache.datasketches.kll.{KllDoublesSketch, KllSketch}
-import org.apache.datasketches.memory.Memory
-import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
+import org.apache.datasketches.kll.KllSketch
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
+import org.apache.spark.sql.functions._
 
 /** Mergeable quantile sketches (KLL, Karnin-Lall-Liberty 2016) as
   * first-class aggregates — the 100 TB profiling shape that exact
@@ -27,163 +19,48 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
   *    yesterday's sketches with today's partial", not a rescan.
   *
   * Spark's own `percentile_approx` hides its summary inside the
-  * aggregate; exposing the sketch BYTES as the aggregate value is
-  * what makes the artifact persistable and re-mergeable across jobs
-  * (`kll_merge` aggregates previously-built sketches). Implementation
-  * is DataSketches' KLL (ships with Spark's jars), wrapped in
-  * `TypedImperativeAggregate` exactly like Spark's own
-  * BloomFilterAggregate.
+  * aggregate; the sketch BYTES as the aggregate value are what make
+  * the artifact persistable and re-mergeable across jobs. The
+  * aggregates are Spark's DataSketches KLL functions
+  * (`kll_sketch_agg_double`, `kll_merge_agg_double`,
+  * `kll_sketch_get_quantile_double`, the names SQL users call); these
+  * wrappers add graft's contract on top: NULL for a group with no
+  * non-null input, and NULL quantiles for an empty sketch.
   */
 object SketchAgg {
 
   val DefaultK = 200
 
-  /** One-pass sketch build over a numeric column → binary sketch. */
-  def kllSketch(c: Column, k: Int = DefaultK): Column =
-    column(KllSketchAgg(expression(c.cast("double")), k)
-      .toAggregateExpression())
+  /** One-pass sketch build over a numeric column → binary sketch,
+    * null when the group has no non-null value.
+    */
+  def kllSketch(c: Column, k: Int = DefaultK): Column = {
+    val x = c.cast("double")
+    when(count(x) > 0, kll_sketch_agg_double(x, k))
+  }
 
-  /** Merge previously-built sketches (binary column) → binary sketch.
-    * This is the re-aggregation path: partial sketches from other
-    * jobs/partitions combine without seeing any raw value.
+  /** Merge previously-built sketches (binary column) → binary sketch,
+    * null when the group has no non-null sketch. This is the
+    * re-aggregation path: partial sketches from other jobs/partitions
+    * combine without seeing any raw value.
     */
   def kllMerge(sketches: Column, k: Int = DefaultK): Column =
-    column(KllMergeAgg(expression(sketches), k).toAggregateExpression())
+    when(count(sketches) > 0, kll_merge_agg_double(sketches, k))
 
   /** Extract quantiles (INCLUSIVE search, the library default) from a
-    * built sketch: binary → array<double>, null for an empty sketch.
+    * built sketch: binary → array<double>, null for an empty sketch
+    * (Spark's getter throws on one).
     */
-  def kllQuantiles(sketch: Column, probs: Seq[Double]): Column =
-    column(KllQuantilesExpr(expression(sketch), probs))
+  def kllQuantiles(sketch: Column, probs: Seq[Double]): Column = {
+    require(probs.nonEmpty && probs.forall(p => p >= 0 && p <= 1),
+      s"ranks must be within [0,1], got $probs")
+    when(kll_sketch_get_n_double(sketch) > 0,
+      kll_sketch_get_quantile_double(sketch, array(probs.map(lit): _*)))
+  }
 
   /** Normalized single-sided rank-error bound for a given k (~1.65%
     * at k=200, 99% confidence) — callers size contract checks off it.
     */
   def rankError(k: Int = DefaultK): Double =
     KllSketch.getNormalizedRankError(k, false)
-
-  private[functions] def heapified(bytes: Array[Byte]): KllDoublesSketch =
-    KllDoublesSketch.heapify(Memory.wrap(bytes))
-}
-
-/** Build aggregate: update with doubles, partials merge associatively,
-  * result is the serialized sketch (null when no non-null input —
-  * same convention as Spark's BloomFilterAggregate).
-  */
-case class KllSketchAgg(
-    child: Expression,
-    k: Int = SketchAgg.DefaultK,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllDoublesSketch] with UnaryLike {
-
-  override def createAggregationBuffer(): KllDoublesSketch =
-    KllDoublesSketch.newHeapInstance(k)
-
-  override def update(buf: KllDoublesSketch, input: InternalRow): KllDoublesSketch = {
-    val v = child.eval(input)
-    if (v != null) buf.update(v.asInstanceOf[Double])
-    buf
-  }
-
-  override def merge(buf: KllDoublesSketch, other: KllDoublesSketch): KllDoublesSketch = {
-    buf.merge(other)
-    buf
-  }
-
-  override def eval(buf: KllDoublesSketch): Any =
-    if (buf.isEmpty) null else buf.toByteArray
-
-  override def serialize(buf: KllDoublesSketch): Array[Byte] = buf.toByteArray
-  override def deserialize(bytes: Array[Byte]): KllDoublesSketch =
-    SketchAgg.heapified(bytes)
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "kll_sketch"
-  override def withNewMutableAggBufferOffset(o: Int): KllSketchAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KllSketchAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): KllSketchAgg =
-    copy(child = c)
-}
-
-/** Merge aggregate over already-serialized sketches: the input rows
-  * ARE sketches (binary), so a fleet of per-shard profiling jobs can
-  * be combined later without re-reading any shard.
-  */
-case class KllMergeAgg(
-    child: Expression,
-    k: Int = SketchAgg.DefaultK,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllDoublesSketch] with UnaryLike {
-
-  override def createAggregationBuffer(): KllDoublesSketch =
-    KllDoublesSketch.newHeapInstance(k)
-
-  override def update(buf: KllDoublesSketch, input: InternalRow): KllDoublesSketch = {
-    val v = child.eval(input)
-    if (v != null) buf.merge(SketchAgg.heapified(v.asInstanceOf[Array[Byte]]))
-    buf
-  }
-
-  override def merge(buf: KllDoublesSketch, other: KllDoublesSketch): KllDoublesSketch = {
-    buf.merge(other)
-    buf
-  }
-
-  override def eval(buf: KllDoublesSketch): Any =
-    if (buf.isEmpty) null else buf.toByteArray
-
-  override def serialize(buf: KllDoublesSketch): Array[Byte] = buf.toByteArray
-  override def deserialize(bytes: Array[Byte]): KllDoublesSketch =
-    SketchAgg.heapified(bytes)
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "kll_merge"
-  override def withNewMutableAggBufferOffset(o: Int): KllMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KllMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): KllMergeAgg =
-    copy(child = c)
-}
-
-/** Quantile extraction from sketch bytes. Evaluated once per GROUP
-  * (not per source row), so CodegenFallback costs nothing — the
-  * per-row hot path is the aggregate above.
-  */
-case class KllQuantilesExpr(child: Expression, probs: Seq[Double])
-  extends UnaryExpression with CodegenFallback {
-
-  require(probs.nonEmpty && probs.forall(p => p >= 0 && p <= 1),
-    s"ranks must be within [0,1], got $probs")
-  private lazy val ranks = probs.toArray
-
-  override def nullSafeEval(input: Any): Any = {
-    val sk = SketchAgg.heapified(input.asInstanceOf[Array[Byte]])
-    if (sk.isEmpty) null
-    else new GenericArrayData(
-      sk.getQuantiles(ranks, QuantileSearchCriteria.INCLUSIVE))
-  }
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "kll_quantiles"
-  override protected def withNewChildInternal(c: Expression): KllQuantilesExpr =
-    copy(child = c)
-}
-
-/** Minimal UnaryLike for the aggregates (TypedImperativeAggregate
-  * doesn't fix arity).
-  */
-private[functions] trait UnaryLike { self: TypedImperativeAggregate[_] =>
-  def child: Expression
-  final override def children: Seq[Expression] = Seq(child)
-  protected def withNewChildInternal(c: Expression): Expression
-  final override protected def withNewChildrenInternal(
-      cs: IndexedSeq[Expression]): Expression = withNewChildInternal(cs.head)
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Mergeable sketches for incremental/distributed distinct counting
@@ -13,15 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object Sketches {
 
-  /** Per-group HLL sketch of `col` (binary, mergeable). */
-  def hllSketch(c: Column, lgK: Int = 12): Column =
-    hll_sketch_agg(c, lit(lgK))
-
-  /** Merge sketch columns produced by hllSketch. */
-  def hllMerge(sketch: Column): Column = hll_union_agg(sketch, lit(false))
-
-  def hllEstimate(sketch: Column): Column = hll_sketch_estimate(sketch)
-
   /** Incremental distinct-count state: per group, sketch each batch,
     * union with the persisted state, estimate. Returns the new state
     * frame (group cols + sketch + estimate).
@@ -32,14 +23,14 @@ object Sketches {
       groupCols: Seq[String],
       valueCol: String): DataFrame = {
     val batchSketch = batch.groupBy(groupCols.map(col): _*)
-      .agg(hllSketch(col(valueCol)).as("sketch"))
+      .agg(hll_sketch_agg(col(valueCol)).as("sketch"))
     val combined = state match {
       case None => batchSketch
       case Some(st) => st.select((groupCols :+ "sketch").map(col): _*)
         .unionByName(batchSketch)
         .groupBy(groupCols.map(col): _*)
-        .agg(hllMerge(col("sketch")).as("sketch"))
+        .agg(hll_union_agg(col("sketch")).as("sketch"))
     }
-    combined.withColumn("distinct_est", hllEstimate(col("sketch")))
+    combined.withColumn("distinct_est", hll_sketch_estimate(col("sketch")))
   }
 }

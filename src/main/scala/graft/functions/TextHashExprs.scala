@@ -3,7 +3,7 @@ package graft.functions
 import java.util.Arrays
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BitwiseXor, Cast, Expression, Literal, Multiply, Pmod, ShiftRight, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -204,6 +204,22 @@ object TextHashExprs {
     x = x ^ (x >>> 13)
     x = (x * 0x85EBCA77L) % p
     x ^ (x >>> 16)
+  }
+
+  /** [[mix30]] as a Catalyst tree, for `Sampling.mix30` and the
+    * `graft_mix30` SQL function (the function registry's builder
+    * needs resolved Catalyst nodes, not Column-form unresolved
+    * functions). Same constants and operations, with pmod in place of
+    * `%`: equal for the non-negative keys mix30 takes.
+    */
+  private[graft] def mix30Expr(k: Expression): Expression = {
+    val p = Literal(1073741789L) // largest prime < 2^30
+    val x0 = Cast(k, LongType)
+    val x1 = BitwiseXor(x0, ShiftRight(x0, Literal(16)))
+    val x2 = Pmod(Multiply(x1, Literal(0x9E3779B1L)), p)
+    val x3 = BitwiseXor(x2, ShiftRight(x2, Literal(13)))
+    val x4 = Pmod(Multiply(x3, Literal(0x85EBCA77L)), p)
+    BitwiseXor(x4, ShiftRight(x4, Literal(16)))
   }
 
   /** Lowercase whitespace tokenization of a UTF8String, hashed to

@@ -1,20 +1,10 @@
 package graft.functions
 
-import org.apache.datasketches.memory.Memory
-import org.apache.datasketches.theta.{CompactSketch, SetOperation, Sketch, Sketches, Union}
-
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.functions._
 
 /** Theta sketches (Agarwal et al., KMV/theta family) as first-class
-  * aggregates + set-operation expressions — the distinct-count
-  * algebra HLL (q45) cannot do:
+  * aggregates — the distinct-count algebra HLL (q45) cannot do:
   *
   *  - HLL unions, but cannot INTERSECT or DIFFERENCE: "users who
   *    clicked AND purchased", "documents seen today but NOT in the
@@ -30,6 +20,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * once (a few KB each); every subsequent audience/overlap/novelty
   * question is pure sketch algebra on the driver or in a tiny
   * follow-up job — no rescan, no giant distinct shuffle.
+  *
+  * The aggregates are Spark's `theta_sketch_agg`/`theta_union_agg`;
+  * these wrappers add graft's NULL for a group with no non-null input.
+  * The set operations and the estimate are Spark's own
+  * `theta_intersection`, `theta_difference`, `theta_union` (give it an
+  * lgK that covers the inputs' build size, or exact-mode inputs are
+  * downsampled) and `theta_sketch_estimate`.
   */
 object ThetaAgg {
 
@@ -38,180 +35,9 @@ object ThetaAgg {
 
   /** One-pass distinct sketch over a long or string column. */
   def thetaSketch(c: Column, lgK: Int = DefaultLgK): Column =
-    column(ThetaSketchAgg(expression(c), lgK).toAggregateExpression())
+    when(count(c) > 0, theta_sketch_agg(c, lgK))
 
   /** Merge previously-built sketches (binary column) → binary. */
   def thetaUnion(sketches: Column, lgK: Int = DefaultLgK): Column =
-    column(ThetaUnionAgg(expression(sketches), lgK).toAggregateExpression())
-
-  /** Pairwise set operations on sketch bytes (null-propagating).
-    * `lgK` on the union must be >= the inputs' build lgK — a smaller
-    * gadget would silently downsample exact-mode sketches into
-    * estimation mode (intersection/difference carry no gadget and
-    * need no size).
-    */
-  def thetaUnionOf(a: Column, b: Column, lgK: Int = DefaultLgK): Column =
-    column(ThetaSetOpExpr(expression(a), expression(b), "union", lgK))
-  def thetaIntersect(a: Column, b: Column): Column =
-    column(ThetaSetOpExpr(expression(a), expression(b), "intersect"))
-  def thetaANotB(a: Column, b: Column): Column =
-    column(ThetaSetOpExpr(expression(a), expression(b), "a_not_b"))
-
-  /** Distinct estimate of a sketch, rounded to long (exact — no
-    * rounding at all — while the sketch is in exact mode).
-    */
-  def thetaEstimate(sketch: Column): Column =
-    column(ThetaEstimateExpr(expression(sketch)))
-
-  private[functions] def wrapped(bytes: Array[Byte]): Sketch =
-    Sketches.wrapSketch(Memory.wrap(bytes))
-
-  private[functions] def newUnion(lgK: Int): Union =
-    SetOperation.builder().setLogNominalEntries(lgK).buildUnion()
-}
-
-/** Build aggregate: the buffer is a theta Union (which accepts raw
-  * item updates), partials merge associatively, the value is the
-  * compact sketch bytes (null when no non-null input).
-  */
-case class ThetaSketchAgg(
-    child: Expression,
-    lgK: Int = ThetaAgg.DefaultLgK,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Union] with UnaryLike {
-
-  override def createAggregationBuffer(): Union = ThetaAgg.newUnion(lgK)
-
-  override def update(buf: Union, input: InternalRow): Union = {
-    child.eval(input) match {
-      case null => buf
-      case l: java.lang.Long => buf.update(l.longValue()); buf
-      case i: java.lang.Integer => buf.update(i.longValue()); buf
-      case s: UTF8String => buf.update(s.toString); buf
-      case other => buf.update(other.toString); buf
-    }
-  }
-
-  override def merge(buf: Union, other: Union): Union = {
-    buf.union(other.getResult)
-    buf
-  }
-
-  override def eval(buf: Union): Any = {
-    val r = buf.getResult
-    if (r.isEmpty) null else r.toByteArray
-  }
-
-  override def serialize(buf: Union): Array[Byte] =
-    buf.getResult.toByteArray
-  override def deserialize(bytes: Array[Byte]): Union = {
-    val u = ThetaAgg.newUnion(lgK)
-    u.union(ThetaAgg.wrapped(bytes))
-    u
-  }
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "theta_sketch"
-  override def withNewMutableAggBufferOffset(o: Int): ThetaSketchAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): ThetaSketchAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): ThetaSketchAgg =
-    copy(child = c)
-}
-
-/** Merge aggregate over already-serialized sketches. */
-case class ThetaUnionAgg(
-    child: Expression,
-    lgK: Int = ThetaAgg.DefaultLgK,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Union] with UnaryLike {
-
-  override def createAggregationBuffer(): Union = ThetaAgg.newUnion(lgK)
-
-  override def update(buf: Union, input: InternalRow): Union = {
-    val v = child.eval(input)
-    if (v != null) buf.union(ThetaAgg.wrapped(v.asInstanceOf[Array[Byte]]))
-    buf
-  }
-
-  override def merge(buf: Union, other: Union): Union = {
-    buf.union(other.getResult)
-    buf
-  }
-
-  override def eval(buf: Union): Any = {
-    val r = buf.getResult
-    if (r.isEmpty) null else r.toByteArray
-  }
-
-  override def serialize(buf: Union): Array[Byte] =
-    buf.getResult.toByteArray
-  override def deserialize(bytes: Array[Byte]): Union = {
-    val u = ThetaAgg.newUnion(lgK)
-    u.union(ThetaAgg.wrapped(bytes))
-    u
-  }
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "theta_union"
-  override def withNewMutableAggBufferOffset(o: Int): ThetaUnionAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): ThetaUnionAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): ThetaUnionAgg =
-    copy(child = c)
-}
-
-/** Pairwise union/intersection/difference on sketch bytes. Evaluated
-  * once per combined pair (not per source row) — CodegenFallback is
-  * free here.
-  */
-case class ThetaSetOpExpr(left: Expression, right: Expression, op: String,
-    lgK: Int = ThetaAgg.DefaultLgK)
-  extends BinaryExpression with CodegenFallback {
-
-  require(Seq("union", "intersect", "a_not_b").contains(op),
-    s"unknown theta set op: $op")
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val sa = ThetaAgg.wrapped(a.asInstanceOf[Array[Byte]])
-    val sb = ThetaAgg.wrapped(b.asInstanceOf[Array[Byte]])
-    val r: CompactSketch = op match {
-      case "union" =>
-        val u = ThetaAgg.newUnion(lgK)
-        u.union(sa); u.union(sb); u.getResult
-      case "intersect" =>
-        val i = SetOperation.builder().buildIntersection()
-        i.intersect(sa); i.intersect(sb); i.getResult
-      case "a_not_b" =>
-        val d = SetOperation.builder().buildANotB()
-        d.setA(sa); d.notB(sb); d.getResult(true, null, true)
-    }
-    r.toByteArray // empty results serialize fine; estimate reads 0
-  }
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = s"theta_$op"
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): ThetaSetOpExpr = copy(left = l, right = r)
-}
-
-/** Distinct estimate of sketch bytes, rounded to long. */
-case class ThetaEstimateExpr(child: Expression)
-  extends UnaryExpression with CodegenFallback {
-
-  override def nullSafeEval(input: Any): Any =
-    math.round(ThetaAgg.wrapped(input.asInstanceOf[Array[Byte]]).getEstimate)
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "theta_estimate"
-  override protected def withNewChildInternal(c: Expression): ThetaEstimateExpr =
-    copy(child = c)
+    when(count(sketches) > 0, theta_union_agg(sketches, lgK))
 }

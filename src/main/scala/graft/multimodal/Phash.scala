@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.TextHashExprs
+
 /** Perceptual near-duplicate detection for image assets — the
   * multimodal complement of MinHash text dedup (q23): decode →
   * 64-bit average-hash → banded bucket join → Hamming verify.
@@ -136,12 +138,6 @@ object Phash {
   // mean — a near-dup within ≤ 2 hash bits of the base).
   // ----------------------------------------------------------------
 
-  // the one scalar mix30 (bit-identical to Sampling.mix30 /
-  // mix30Sql for the non-negative keys used here) — never a fourth
-  // copy of the constant-sensitive hash
-  private[graft] def mix30Jvm(key: Long): Long =
-    graft.functions.TextHashExprs.mix30(key)
-
   private[graft] def fixturePixels(docId: Long): Array[Int] = {
     val g = docId / 5
     val r = (docId % 5).toInt
@@ -150,7 +146,7 @@ object Phash {
         if (r >= 1 && r <= 3 && i == 2 * r) 2 * r + 1
         else if (r >= 1 && r <= 3 && i == 2 * r + 1) 2 * r
         else i
-      (mix30Jvm(g * 101 + j) % 256).toInt
+      (TextHashExprs.mix30(g * 101 + j) % 256).toInt
     }
   }
 
@@ -180,7 +176,7 @@ object Phash {
         if (r >= 1 && r <= 3 && i == 2 * r) 2 * r + 1
         else if (r >= 1 && r <= 3 && i == 2 * r + 1) 2 * r
         else i
-      (mix30Jvm(g * 131 + j) % 65536).toInt - 32768
+      (TextHashExprs.mix30(g * 131 + j) % 65536).toInt - 32768
     }
   }
 

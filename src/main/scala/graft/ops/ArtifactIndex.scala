@@ -157,7 +157,8 @@ object ArtifactIndex {
     * IO/permission misconfiguration as an eternal retrain loop
     * (ADVICE r10) — the log line is how an operator tells the two
     * apart. A plain metadata/signature mismatch is the NORMAL stale
-    * path and stays quiet.
+    * path and stays quiet, and so does a path that does not exist yet
+    * (a first build: nothing is torn).
     */
   def buildOrReuse(spark: SparkSession, path: String,
       metaCols: Seq[String], accept: Row => Boolean)(
@@ -178,8 +179,12 @@ object ArtifactIndex {
   def buildOrReuseMeta(spark: SparkSession, path: String,
       metaCols: Seq[String], accept: Row => Boolean)(
       build: String => Unit): (DataFrame, Option[Row]) = {
+    val target = new org.apache.hadoop.fs.Path(path)
+    val exists = target.getFileSystem(
+      spark.sparkContext.hadoopConfiguration).exists(target)
     val reused: Option[(DataFrame, Row)] =
-      try {
+      if (!exists) None
+      else try {
         val idx = spark.read.parquet(path)
         if (metaCols.forall(idx.columns.contains))
           idx.select(metaCols.map(col): _*).head(1).find(accept)

@@ -1,7 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.functions._
+
+import graft.functions.TextHashExprs
 
 /** Deterministic sampling operators.
   *
@@ -173,24 +176,18 @@ object Sampling {
       s"CAST(1.0 AS DOUBLE) / $weight), 9)"
 
   /** Cross-engine deterministic 30-bit avalanche of a non-negative
-    * integral column — TextHashExprs.mix30 restated as Column
-    * arithmetic (xor-shift + multiply mod the largest prime < 2³⁰,
-    * twice). Every intermediate fits signed 64-bit, so ANSI Spark and
-    * DuckDB BIGINT arithmetic agree bit-for-bit — this is the hash to
-    * use when the sampling decision itself must be reproducible in
-    * plain SQL (oracles, cross-engine handoffs). Input must be
-    * < 2³⁰; pre-fold wider keys (e.g. `pmod(xxhash64(k), 1 << 30)`)
-    * when reproducibility only needs to hold within one engine.
+    * integral column — TextHashExprs.mix30 as a Column, built from
+    * `TextHashExprs.mix30Expr` (xor-shift + multiply mod the largest
+    * prime < 2³⁰, twice). Every intermediate fits signed 64-bit, so
+    * ANSI Spark and DuckDB BIGINT arithmetic agree bit-for-bit — this
+    * is the hash to use when the sampling decision itself must be
+    * reproducible in plain SQL (oracles, cross-engine handoffs). Input
+    * must be < 2³⁰; pre-fold wider keys (e.g.
+    * `pmod(xxhash64(k), 1 << 30)`) when reproducibility only needs to
+    * hold within one engine.
     */
-  def mix30(key: Column): Column = {
-    val p = lit(1073741789L) // largest prime < 2^30
-    val x0 = key.cast("long")
-    val x1 = x0.bitwiseXOR(shiftright(x0, 16))
-    val x2 = pmod(x1 * lit(0x9E3779B1L), p)
-    val x3 = x2.bitwiseXOR(shiftright(x2, 13))
-    val x4 = pmod(x3 * lit(0x85EBCA77L), p)
-    x4.bitwiseXOR(shiftright(x4, 16))
-  }
+  def mix30(key: Column): Column =
+    column(TextHashExprs.mix30Expr(expression(key)))
 
   /** SQL text of the same mix, for oracle authorship. */
   def mix30Sql(key: String): String = {

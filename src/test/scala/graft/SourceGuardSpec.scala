@@ -13,8 +13,10 @@ import org.scalatest.matchers.should.Matchers
   * creeps back into `src/`, only `graft.plans.Plans` persists, caches
   * or checkpoints a DataFrame in `src/main`, and only `StagedSwap`
   * renames a path there (besides `VersionedTable`'s put-if-absent log
-  * commits and the q63 seed fixture). Comment lines are ignored; code
-  * is not.
+  * commits and the q63 seed fixture). KLL and theta sketches are
+  * Spark's own functions: no `src/main` file touches DataSketches'
+  * theta classes, and only `SketchAgg` (for its rank-error bound) its
+  * KLL ones. Comment lines are ignored; code is not.
   */
 class SourceGuardSpec extends AnyFunSpec with Matchers {
 
@@ -39,6 +41,8 @@ class SourceGuardSpec extends AnyFunSpec with Matchers {
   private val Materialize =
     """\.\s*(persist|unpersist|localCheckpoint)\s*\(|\.\s*cache\s*\(\s*\)"""
   private val Rename = """\.\s*rename\s*\("""
+  private val ThetaLib = """\borg\.apache\.datasketches\.theta\b"""
+  private val KllLib = """\borg\.apache\.datasketches\.kll\b"""
 
   /** Source path relative to `src/` (with `/` separators) → code. */
   private lazy val sources: Map[String, String] = {
@@ -88,6 +92,12 @@ class SourceGuardSpec extends AnyFunSpec with Matchers {
     }
     it("renames paths only in StagedSwap, VersionedTable and the q63 fixture") {
       filesMatching(Rename).filter(_.startsWith("main/")) shouldBe renamers
+    }
+    it("uses DataSketches theta and KLL only through Spark's functions, " +
+        "besides SketchAgg's rank-error bound") {
+      filesMatching(ThetaLib).filter(_.startsWith("main/")) shouldBe empty
+      filesMatching(KllLib).filter(_.startsWith("main/")) shouldBe
+        Set("main/scala/graft/functions/SketchAgg.scala")
     }
   }
 

@@ -71,8 +71,8 @@ class GraftFunctionsSpec extends SparkSpec {
 
       // KLL: group partials → merge bytes → quantiles
       val med = spark.sql(
-        """SELECT graft_kll_quantiles(graft_kll_merge(sk), array(0.5))[0]
-          |FROM (SELECT g, graft_kll_sketch(x) AS sk FROM gfs_sk GROUP BY g)"""
+        """SELECT kll_sketch_get_quantile_double(kll_merge_agg_double(sk), 0.5)
+          |FROM (SELECT g, kll_sketch_agg_double(x) AS sk FROM gfs_sk GROUP BY g)"""
           .stripMargin).as[Double].head()
       med should (be >= 40.0 and be <= 60.0)
 
@@ -83,12 +83,12 @@ class GraftFunctionsSpec extends SparkSpec {
           .stripMargin).as[String].head()
       top shouldBe "tok0" // 1..100 % 5: each tok 20x; tie → item asc
 
-      // theta: distinct + intersection via set-op expressions
+      // theta: distinct + intersection via Spark's set-op functions
       val (n, inter) = spark.sql(
-        """SELECT graft_theta_estimate(a), graft_theta_estimate(
-          |    graft_theta_intersect(a, b))
-          |FROM (SELECT graft_theta_sketch(u) AS a FROM gfs_sk WHERE g < 2),
-          |     (SELECT graft_theta_sketch(u) AS b FROM gfs_sk WHERE g >= 2)"""
+        """SELECT theta_sketch_estimate(a), theta_sketch_estimate(
+          |    theta_intersection(a, b))
+          |FROM (SELECT theta_sketch_agg(u) AS a FROM gfs_sk WHERE g < 2),
+          |     (SELECT theta_sketch_agg(u) AS b FROM gfs_sk WHERE g >= 2)"""
           .stripMargin).as[(Long, Long)].head()
       n shouldBe 10L
       inter shouldBe 10L // both halves cover all residues mod 10

@@ -1,13 +1,18 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.datasketches.kll.KllDoublesSketch
+import org.apache.datasketches.memory.Memory
 import org.apache.spark.sql.functions._
 
 class SketchAggSpec extends SparkSpec {
   import spark.implicits._
 
+  private def heapified(bytes: Array[Byte]): KllDoublesSketch =
+    KllDoublesSketch.heapify(Memory.wrap(bytes))
+
   private def quantilesOf(bytes: Array[Byte], ps: Seq[Double]): Seq[Double] = {
-    val sk = SketchAgg.heapified(bytes)
+    val sk = heapified(bytes)
     sk.getQuantiles(ps.toArray,
       org.apache.datasketches.quantilescommon.QuantileSearchCriteria.INCLUSIVE).toSeq
   }
@@ -20,12 +25,12 @@ class SketchAggSpec extends SparkSpec {
       val eps = SketchAgg.rankError()
       for ((p, est) <- Seq(0.1, 0.5, 0.9).zip(quantilesOf(bytes, Seq(0.1, 0.5, 0.9))))
         math.abs(est / n - p) should be <= 2 * eps
-      SketchAgg.heapified(bytes).getN shouldBe n.toLong
+      heapified(bytes).getN shouldBe n.toLong
     }
     it("ignores nulls and yields null on an all-null/empty input") {
       val df = Seq(Some(1.0), None, Some(3.0)).toDF("x")
       val bytes = df.agg(SketchAgg.kllSketch($"x")).head().getAs[Array[Byte]](0)
-      SketchAgg.heapified(bytes).getN shouldBe 2L
+      heapified(bytes).getN shouldBe 2L
       val empty = df.filter($"x".isNull)
         .agg(SketchAgg.kllSketch($"x")).head()
       empty.isNullAt(0) shouldBe true
@@ -45,7 +50,7 @@ class SketchAggSpec extends SparkSpec {
       val df = (1 to 20000).map(i => (i % 7, i.toDouble)).toDF("g", "x")
       val parts = df.groupBy("g").agg(SketchAgg.kllSketch($"x").as("sk"))
       val merged = parts.agg(SketchAgg.kllMerge($"sk")).head().getAs[Array[Byte]](0)
-      SketchAgg.heapified(merged).getN shouldBe 20000L
+      heapified(merged).getN shouldBe 20000L
       val eps = SketchAgg.rankError()
       math.abs(quantilesOf(merged, Seq(0.5)).head / 20000 - 0.5) should be <= 2 * eps
     }
@@ -56,7 +61,7 @@ class SketchAggSpec extends SparkSpec {
         .write.mode("overwrite").parquet(dir)
       val merged = spark.read.parquet(dir)
         .agg(SketchAgg.kllMerge($"sk")).head().getAs[Array[Byte]](0)
-      SketchAgg.heapified(merged).getN shouldBe 5000L
+      heapified(merged).getN shouldBe 5000L
     }
   }
 
@@ -68,6 +73,17 @@ class SketchAggSpec extends SparkSpec {
         .head().getSeq[Double](0)
       out.head shouldBe 1.0   // rank 0 → min
       out.last shouldBe 1000.0 // rank 1 → max
+    }
+    it("returns NULL, not an error, for an empty sketch built by Spark SQL") {
+      // Spark's kll_sketch_agg_double yields a non-null EMPTY sketch
+      // for a group with no non-null input, and its quantile getter
+      // throws on one
+      val sk = spark.sql(
+        "SELECT kll_sketch_agg_double(CAST(NULL AS DOUBLE)) AS sk")
+      sk.head().isNullAt(0) shouldBe false
+      val out = sk.select(SketchAgg.kllQuantiles($"sk", Seq(0.5))).collect()
+      out.length shouldBe 1
+      out.head.isNullAt(0) shouldBe true
     }
     it("rejects out-of-range ranks") {
       val df = Seq(1.0).toDF("x")

@@ -10,7 +10,7 @@ class ThetaSpec extends AnyFunSpec with Matchers with SparkSpec {
 
   import spark.implicits._
 
-  private def est(c: org.apache.spark.sql.Column) = ThetaAgg.thetaEstimate(c)
+  private def est(c: org.apache.spark.sql.Column) = theta_sketch_estimate(c)
 
   describe("ThetaAgg") {
     it("is exact below 2^lgK: counts, intersection, difference") {
@@ -21,9 +21,9 @@ class ThetaSpec extends AnyFunSpec with Matchers with SparkSpec {
       val row = a.select(col("sk").as("a")).crossJoin(b.select(col("sk").as("b")))
         .select(
           est(col("a")).as("na"), est(col("b")).as("nb"),
-          est(ThetaAgg.thetaIntersect(col("a"), col("b"))).as("nab"),
-          est(ThetaAgg.thetaANotB(col("a"), col("b"))).as("nanotb"),
-          est(ThetaAgg.thetaUnionOf(col("a"), col("b"))).as("nu"))
+          est(theta_intersection(col("a"), col("b"))).as("nab"),
+          est(theta_difference(col("a"), col("b"))).as("nanotb"),
+          est(theta_union(col("a"), col("b"))).as("nu"))
         .as[(Long, Long, Long, Long, Long)].head()
       row shouldBe ((300L, 300L, 100L, 200L, 500L))
     }
@@ -65,7 +65,7 @@ class ThetaSpec extends AnyFunSpec with Matchers with SparkSpec {
       val b = spark.range(10000, 20000)
         .agg(ThetaAgg.thetaSketch(col("id"), 14).as("sk"))
       a.select(col("sk").as("a")).crossJoin(b.select(col("sk").as("b")))
-        .select(est(ThetaAgg.thetaUnionOf(col("a"), col("b"), lgK = 15)))
+        .select(est(theta_union(col("a"), col("b"), 15)))
         .as[Long].head() shouldBe 20000L
     }
 
@@ -82,7 +82,7 @@ class ThetaSpec extends AnyFunSpec with Matchers with SparkSpec {
       val a = Seq(1L, 2L).toDF("id").agg(ThetaAgg.thetaSketch(col("id")).as("sk"))
       val b = Seq(9L, 10L).toDF("id").agg(ThetaAgg.thetaSketch(col("id")).as("sk"))
       a.select(col("sk").as("a")).crossJoin(b.select(col("sk").as("b")))
-        .select(est(ThetaAgg.thetaIntersect(col("a"), col("b"))))
+        .select(est(theta_intersection(col("a"), col("b"))))
         .as[Long].head() shouldBe 0L
     }
   }

@@ -196,6 +196,31 @@ class ArtifactIndexSpec extends SparkSpec {
     }
   }
 
+  describe("ArtifactIndex.buildOrReuse read-failure log") {
+    it("a first build logs nothing; a non-parquet file at the path " +
+        "still logs and rebuilds") {
+      def stderrOf(body: => Unit): String = {
+        val buf = new java.io.ByteArrayOutputStream()
+        val saved = System.err
+        System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+        try body finally System.setErr(saved)
+        buf.toString("UTF-8")
+      }
+      def indexed(path: String): Long =
+        ArtifactIndex.buildOrReuse(spark, path, Seq("id"), _ => true)(
+          corpus.toDF("id", "text").write.parquet(_)).count()
+
+      val first = fresh("first_build")
+      stderrOf(indexed(first) shouldBe 3L) should not include "[graft]"
+
+      val torn = fresh("not_parquet")
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(fsRoot))
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(torn), "not parquet")
+      stderrOf(indexed(torn) shouldBe 3L) should include(
+        s"[graft] artifact index at $torn unreadable")
+    }
+  }
+
   describe("StagedSwap unique staging suffix (ADVICE r10)") {
     it("tagged debris from a crashed swap is Vacuum-recognizable and " +
         "does not block the next swap") {
