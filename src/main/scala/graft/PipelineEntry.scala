@@ -381,7 +381,7 @@ object PipelineEntry {
   // and extracts strictly above it (dlt pipeline-state semantics).
   // ---------------------------------------------------------------
   private def q36(s: SparkSession, dir: String): DataFrame = {
-    val statePath = s"target/scratch/q36_state_${Scratch.key(dir)}"
+    val statePath = Scratch.fresh(s, "q36_state", dir)
     val orders = t(s, dir, "orders")
     val batch1 = orders.filter(col("o_orderdate") < lit("1999-01-01").cast("timestamp"))
     Incremental.saveState(batch1, "o_orderdate", statePath)

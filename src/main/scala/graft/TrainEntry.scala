@@ -611,13 +611,13 @@ object TrainEntry {
   // ---------------------------------------------------------------
   // q143 — BPE vocabulary training (Sennrich 2016; the tokenizer-
   // building step of an LLM data pipeline): ONE corpus-sized pass
-  // aggregates (word, cnt); every merge round then runs on the
-  // vocabulary-sized word table — a partial-aggregated pair count, a
-  // 1-row argmax collect (bounded driver scalar), and a codegen'd
-  // replace. The oracle is GENERATED by the same loop (Bpe.trainSql,
-  // PageRank.sql's pattern) with MATERIALIZED stage CTEs so the two
-  // engines walk identical merge sequences; ties break (cnt DESC,
-  // lhs, rhs) — total order, cross-engine deterministic.
+  // aggregates (word, cnt); Bpe.train collects that vocabulary-sized
+  // table in one bounded job and runs the serial merges in driver
+  // memory. The oracle is the serial loop as SQL (Bpe.trainSql,
+  // PageRank.sql's pattern) with MATERIALIZED stage CTEs, one per
+  // merge, so the two engines walk identical merge sequences; ties
+  // break (cnt DESC, lhs, rhs) — total order, cross-engine
+  // deterministic.
   // ---------------------------------------------------------------
   private val BpeMerges = 8
 
@@ -640,7 +640,7 @@ object TrainEntry {
   // ---------------------------------------------------------------
   private def q144(s: SparkSession, dir: String): DataFrame = {
     import graft.text.Bpe
-    // train makes N passes; encode one more
+    // train collects the table once; encode reads it again
     val words = graft.plans.Plans.barrier(Bpe.wordCounts(
       t(s, dir, "documents").select("text"), "text"))
     val merges = Bpe.train(s, words, BpeMerges)
@@ -691,20 +691,19 @@ object TrainEntry {
   }
 
   // ---------------------------------------------------------------
-  // q338 — PRODUCTION BPE training entry point driver-gated on real
-  // data (VERDICT r11 item 2 + r12 item 2): text/Bpe.trainAuto
-  // dispatches on the vocabulary size — the (word, cnt) table is
-  // Zipf-bounded (millions of rows at ANY corpus scale), so below
-  // the collect threshold the serial merge loop runs DRIVER-RESIDENT
-  // with incremental pair-count updates (classic-trainer shape, 30k
-  // merges in minutes — Bpe.trainDriver), and above it the
+  // q338 — BPE training at a deeper merge count, gated on real data:
+  // Bpe.train picks its half from the vocabulary size — the (word,
+  // cnt) table is Zipf-bounded (millions of rows at ANY corpus
+  // scale), so below the collect threshold the serial merge loop runs
+  // DRIVER-RESIDENT with incremental pair-count updates (classic-
+  // trainer shape, 30k merges in minutes), and above it the
   // distributed symbol-disjoint batched path takes over
-  // (Bpe.trainBatched, serial-equality proof at its scaladoc). Both
-  // paths are property-pinned identical to serial (BpeSpec /
-  // BpeBatchPropertySpec); HERE the in-memory path runs 48 merges on
-  // the real corpus word distribution while the ORACLE walks the
-  // 48-stage SERIAL CTE chain (Bpe.trainSql) — any pick serial would
-  // not have made, in any position, breaks parity.
+  // (serial-equality proof at Bpe.trainBatched's scaladoc). Both halves are pinned identical
+  // to a serial simulator (BpeSpec / BpeBatchPropertySpec); HERE the
+  // in-memory half runs 48 merges on the real corpus word
+  // distribution while the ORACLE walks the 48-stage SERIAL CTE
+  // chain (Bpe.trainSql) — any pick serial would not have made, in
+  // any position, breaks parity.
   // ---------------------------------------------------------------
   private val BpeBatchedMerges = 48
 
@@ -712,7 +711,7 @@ object TrainEntry {
     import graft.text.Bpe
     val words = Bpe.wordCounts(
       t(s, dir, "documents").select("text"), "text")
-    val merges = Bpe.trainAuto(s, words, BpeBatchedMerges)
+    val merges = Bpe.train(s, words, BpeBatchedMerges)
     s.createDataFrame(merges).select("iter", "lhs", "rhs", "cnt")
       .orderBy("iter")
   }
@@ -764,7 +763,7 @@ object TrainEntry {
     import graft.text.Bpe
     val words = Bpe.byteWordCounts(
       mixedDocs(t(s, dir, "documents")), "text")
-    val merges = Bpe.trainAuto(s, words, BpeByteMerges)
+    val merges = Bpe.train(s, words, BpeByteMerges)
     s.createDataFrame(merges).select("iter", "lhs", "rhs", "cnt")
       .orderBy("iter")
   }
@@ -773,7 +772,7 @@ object TrainEntry {
     import graft.text.Bpe
     val docs = mixedDocs(t(s, dir, "documents"))
     val words = Bpe.byteWordCounts(docs, "text")
-    val merges = Bpe.trainAuto(s, words, BpeByteFertMerges)
+    val merges = Bpe.train(s, words, BpeByteFertMerges)
     // per-(lang, word) byte-mapped counts: raw tokens counted first,
     // only the per-lang vocabulary maps (q340's lw mirror)
     val lw = docs

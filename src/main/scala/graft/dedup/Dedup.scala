@@ -47,26 +47,6 @@ object Dedup {
   // shingles + MinHash — q23
   // ----------------------------------------------------------------
 
-  /** Distinct word k-shingles, lowercased. Pure per-row expression
-    * work (no shuffle). Documents shorter than k words collapse to a
-    * single whole-document shingle.
-    */
-  def wordShingles(text: Column, k: Int): Column = {
-    val toks = split(lower(text), "\\s+")
-    when(size(toks) < k, array(concat_ws(" ", toks)))
-      .otherwise(array_distinct(transform(
-        sequence(lit(0), size(toks) - k),
-        i => concat_ws(" ", slice(toks, i + 1, lit(k))))))
-  }
-
-  /** The 64-bit hashed, sorted feature set of a document — all
-    * candidate verification runs on these (8-byte elements shuffle
-    * and intersect far cheaper than shingle strings; Jaccard on
-    * hashed sets equals Jaccard on the sets w.h.p.).
-    */
-  def hashedSet(features: Column): Column =
-    array_sort(array_distinct(transform(features, f => xxhash64(f))))
-
   /** LSH banding of a signature: array of (band_id, band_hash) where
     * band_hash covers `rowsPerBand` consecutive signature slots.
     */
@@ -363,15 +343,6 @@ object Dedup {
   // n-gram Jaccard via prefix filtering — q25
   // ----------------------------------------------------------------
 
-  /** Distinct character n-grams. Per-row expression work only. */
-  def charNgrams(text: Column, n: Int): Column = {
-    val t = lower(text)
-    when(length(t) <= n, array(t))
-      .otherwise(array_distinct(transform(
-        sequence(lit(1), length(t) - n + 1),
-        i => t.substr(i, lit(n)))))
-  }
-
   /** Exact set-similarity self-join at Jaccard ≥ tau using PREFIX
     * FILTERING (SSJoin/AllPairs/PPJoin): order every doc's gram set
     * by ascending document frequency (any global total order is
@@ -391,17 +362,12 @@ object Dedup {
       textCol: String,
       n: Int = 3,
       tau: Double = 0.8,
-      maxBucket: Int = 200,
-      charGrams: Boolean = false): DataFrame = {
-    // word n-grams by default: their df distribution is Zipf-sparse
-    // (median df ≈ 1 here), so rare-first prefixes stay in small
-    // buckets; char n-grams (charGrams=true) suit CJK/no-whitespace
-    // corpora but are denser per doc.
-    val featurize: Column => Column =
-      if (charGrams) t => hashedSet(charNgrams(t, n))
-      else t => graft.functions.TextHashes.wordShingleHashes(t, n)
+      maxBucket: Int = 200): DataFrame = {
+    // word n-grams: their df distribution is Zipf-sparse (median
+    // df ≈ 1 here), so rare-first prefixes stay in small buckets
     val base = barrier(docs.select(col(idCol).as("doc_id"),
-      featurize(col(textCol)).as("hs")))
+      graft.functions.TextHashes.wordShingleHashes(col(textCol), n)
+        .as("hs")))
     val exploded = base.select(col("doc_id"), explode(col("hs")).as("gram"))
     // document frequency via ONE partial-aggregated groupBy + join-
     // back: a window over partitionBy(gram) would serialize the

@@ -335,16 +335,4 @@ object Sampling {
     df.withColumn("_rn", org.apache.spark.sql.functions.row_number().over(w))
       .filter(col("_rn") <= k).drop("_rn")
   }
-
-  /** Column form of the stratified predicate (for reuse in SQL-side
-    * mirrors/tests).
-    */
-  def stratifiedPredicate(
-      strataCol: Column, keyCol: Column,
-      every: Map[String, Long], defaultEvery: Long): Column = {
-    val denom = every.toSeq.sortBy(_._1).foldLeft(lit(defaultEvery)) {
-      case (e, (s, d)) => when(strataCol === s, lit(d)).otherwise(e)
-    }
-    pmod(keyCol, denom) === 0
-  }
 }

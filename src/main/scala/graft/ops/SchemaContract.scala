@@ -121,18 +121,6 @@ object SchemaContract {
   private def castAll(df: DataFrame, casts: Seq[(String, DataType)]): DataFrame =
     casts.foldLeft(df) { case (d, (c, dt)) => d.withColumn(c, tryCast(c, dt)) }
 
-  /** Count of contract violations without enforcing — the "would
-    * freeze reject this batch?" probe, used by validation paths.
-    */
-  def typeViolations(target: Map[String, DataType], incoming: DataFrame): DataFrame = {
-    val casts = target.toSeq.filter { case (c, _) => incoming.columns.contains(c) }
-    val counts = casts.map { case (c, dt) =>
-      sum(when(col(c).isNotNull && tryCast(c, dt).isNull, 1L).otherwise(0L))
-        .as(s"${c}_violations")
-    }
-    incoming.agg(counts.head, counts.tail: _*)
-  }
-
   /** Evolve-union two table states (the `tables`/`columns` evolve
     * path): union by name, missing columns null on either side.
     */

@@ -30,7 +30,8 @@ object StagedSwap {
   /** Run `write` against a fresh staging path, then swap it into
     * `path` via rename-aside. `write` must produce a complete artifact
     * at the staging path it is given (e.g. `df.write.parquet(_)`); if
-    * it throws, the staging path is removed and `path` is untouched.
+    * it throws, the staging path is removed once the failed write's
+    * tasks have stopped, and `path` is untouched.
     */
   def overwrite(spark: SparkSession, path: String)(
       write: String => Unit): Unit = {
@@ -43,6 +44,7 @@ object StagedSwap {
     try write(staging.toString)
     catch {
       case e: Throwable =>
+        awaitStragglers(spark)
         fs.delete(staging, true)
         throw e
     }
@@ -57,5 +59,25 @@ object StagedSwap {
         s"staged swap: rename $staging -> $target failed")
     }
     if (hadTarget) fs.delete(old, true)
+  }
+
+  /** Waits, up to 10 s, until no job in the caller's job group has a
+    * running task. A failed write's job is aborted as soon as one task
+    * fails, but its other running tasks are only asked to stop: one
+    * still computing its first row in code that ignores interrupts goes
+    * on to open its writer, which re-creates `<staging>/_temporary/...`
+    * after the staging path is deleted. A concurrent job in the same
+    * group only adds to the wait.
+    */
+  private def awaitStragglers(spark: SparkSession): Unit = {
+    val tracker = spark.sparkContext.statusTracker
+    val group = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+    def running: Boolean = tracker.getJobIdsForGroup(group).iterator
+      .flatMap(j => tracker.getJobInfo(j).iterator)
+      .filter(_.status != org.apache.spark.JobExecutionStatus.SUCCEEDED)
+      .flatMap(_.stageIds.iterator)
+      .exists(s => tracker.getStageInfo(s).exists(_.numActiveTasks > 0))
+    val deadline = System.nanoTime() + 10L * 1000000000L
+    while (running && System.nanoTime() < deadline) Thread.sleep(50)
   }
 }

@@ -24,19 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object Checks {
 
-  def notNull(df: DataFrame, column: String): DataFrame =
-    result("not_null", column, df.filter(col(column).isNull).agg(count(lit(1))))
-
-  def unique(df: DataFrame, column: String): DataFrame =
-    result("unique", column,
-      df.filter(col(column).isNotNull)
-        .groupBy(col(column)).agg(count(lit(1)).as("n"))
-        .filter(col("n") > 1).agg(count(lit(1))))
-
-  def acceptedValues(df: DataFrame, column: String, values: Seq[Any]): DataFrame =
-    result("accepted_values", column,
-      df.filter(!col(column).isin(values: _*)).agg(count(lit(1))))
-
   def relationships(df: DataFrame, column: String, to: DataFrame, field: String): DataFrame = {
     // broadcast the parent keyset when it is a dimension; Catalyst
     // will still pick SMJ if the parent side is huge

@@ -46,14 +46,6 @@ object Incremental {
     }
   }
 
-  /** New watermark after a batch: max(cursor). Single-column agg —
-    * one partial-aggregate pass, no collect of data rows.
-    */
-  def nextState(df: DataFrame, cursorPath: String): State = {
-    val row = df.agg(max(col(cursorPath))).head()
-    State(if (row.isNullAt(0)) None else Some(row.get(0)))
-  }
-
   /** Persist the pipeline watermark between runs (dlt keeps pipeline
     * state across invocations; here it is a one-row parquet in the
     * cursor column's own type, so load round-trips losslessly).

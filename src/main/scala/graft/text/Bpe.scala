@@ -15,16 +15,13 @@ import graft.plans.Plans
   * map-side-combined (word, count) aggregation. Every merge
   * iteration then runs on the aggregated word table, whose size is
   * the corpus VOCABULARY (Zipf-bounded, millions of rows at any
-  * corpus scale, never corpus-sized). Per iteration: one
-  * partial-aggregated pair count → a 1-row argmax collect (a bounded
-  * driver scalar, the same pattern as PageRank's node count) → a
-  * codegen'd string replace over the word table. The plan is cut by
-  * a barrier every few rounds, so N merges never build an N-deep
-  * replay chain. At PRODUCTION vocabulary sizes (30k merges) use
-  * [[trainBatched]] — one pair-count pass commits a whole
-  * provably-serial-equal batch of symbol-disjoint merges — and
-  * [[applyMerges]]'s chunked encode,
-  * which bounds any single projection's replace depth.
+  * corpus scale, never corpus-sized). [[train]] collects that table
+  * in one bounded job and runs the merges in driver memory; only a
+  * vocabulary above the driver bound trains distributed, where one
+  * pair-count pass commits a whole provably-serial-equal batch of
+  * symbol-disjoint merges. At production merge counts (30k)
+  * [[applyMerges]]'s chunked encode bounds any single projection's
+  * replace depth.
   *
   * Exactness: symbol sequences are strings with TWO-space
   * separators, padded two spaces each end ("  c  a  t  "). A merge
@@ -66,90 +63,50 @@ object Bpe {
       .groupBy(col("p.lhs").as("lhs"), col("p.rhs").as("rhs"))
       .agg(sum("cnt").as("c"))
 
-  /** Learn `nMerges` merges. Returns the merge table (iter, lhs,
-    * rhs, cnt) — nMerges driver-side rows by construction.
-    *
-    * Each round costs ONE job (the pair-count argmax); the replace
-    * chain stays lazy on top of the barriered base and is re-folded
-    * into the next round's scan (replaces are codegen'd projections —
-    * replaying k of them is cheaper than materializing each round).
-    * Every `checkpointInterval` rounds the chain is cut with a
-    * barrier, which replaces the LOGICAL plan with a LogicalRDD, so a
-    * production-sized merge count (30k) never builds an unbounded
-    * Project chain. The cut is load-bearing: a persist-only cut left
-    * the analyzed plan (and every AQE explain-string of it) growing
-    * one Project per merge, which ran the planning JVM out of heap
-    * near merge ~900 at 100k vocab (BpeBench, r12) while the
-    * executors were healthy.
-    */
-  def train(spark: SparkSession, words: DataFrame, nMerges: Int,
-      checkpointInterval: Int = 16): Seq[Merge] = {
-    require(nMerges >= 0, s"nMerges must be >= 0, got $nMerges")
-    require(checkpointInterval >= 1,
-      s"checkpointInterval must be >= 1, got $checkpointInterval")
-    var cur = Plans.barrier(
-      words.select(col("cnt"), symbolize(col("word")).as("sym")))
-    val out = Seq.newBuilder[Merge]
-    var stop = false
-    for (k <- 1 to nMerges if !stop) {
-      val top = pairCounts(cur)
-        .orderBy(col("c").desc, col("lhs"), col("rhs"))
-        .limit(1).collect()
-      if (top.isEmpty) stop = true // corpus exhausted (all words fused)
-      else {
-        val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        out += Merge(k, l, r, c)
-        cur = cur.withColumn("sym",
-          replace(col("sym"), lit(s" $l  $r "), lit(s" $l$r ")))
-        if (k % checkpointInterval == 0 && k < nMerges)
-          cur = Plans.barrier(cur) // truncates the logical plan
-      }
-    }
-    out.result()
-  }
+  /** Vocabulary size up to which [[train]] collects the (word, cnt)
+    * table and trains in driver memory: 8M rows is under 1 GB on a
+    * driver sized for a 1000-executor cluster. */
+  private val CollectThreshold = 8000000
+  /** Pair counts one distributed pass fetches ([[trainBatched]]). */
+  private val ScanWidth = 4096
+  /** Committed merges between plan barriers on the distributed path. */
+  private val CheckpointInterval = 64
 
-  /** Size-dispatched production trainer (VERDICT r12 item 2): the
-    * (word, cnt) table is VOCABULARY-sized — Zipf-bounded to millions
-    * of rows at ANY corpus scale, including 100 TB — so when it fits
-    * the driver it is collected ONCE and the serial merge loop runs
-    * in memory with incremental pair-count updates ([[trainDriver]]),
-    * exactly how classic BPE trainers work and why they can afford
-    * 30k merges. Above `collectThreshold` distinct words the
-    * distributed batched path ([[trainBatched]]) takes over. Both
-    * paths emit the IDENTICAL merge sequence as [[train]] (property-
-    * pinned in BpeBatchPropertySpec against a serial simulator and
-    * Spark-level in BpeSpec), so the dispatch is a pure scheduling
-    * choice — q338 gates the collected path against the serial
-    * DuckDB CTE oracle end-to-end.
+  /** Learn `nMerges` merges of serial BPE: each merge is the argmax
+    * pair in (count DESC, lhs, rhs) order over the current word
+    * table. Returns the merge table (iter, lhs, rhs, cnt), nMerges
+    * driver-side rows by construction, fewer if the corpus runs out
+    * of pairs.
     *
-    * The collect here is a sanctioned bounded-driver-data one: at the
-    * default threshold 8M (word, cnt) rows ≈ under 1 GB on a
-    * driver sized for a 1000-executor cluster, and the threshold
-    * check is a count, never a fetch.
+    * The (word, cnt) table is VOCABULARY-sized, Zipf-bounded to
+    * millions of rows at ANY corpus scale, including 100 TB. ONE
+    * bounded job (`limit(threshold + 1)`) both decides and fetches:
+    * if the limit was not hit the table is the whole vocabulary, and
+    * the serial loop runs in memory with incremental pair-count
+    * updates ([[trainDriver]]), the classic trainer shape that affords
+    * 30k merges. A vocabulary above the 8M-row driver bound trains on
+    * the distributed batched path ([[trainBatched]]). Both halves emit
+    * the same merge sequence (pinned in BpeBatchPropertySpec and
+    * BpeSpec against a serial simulator), so the choice is pure
+    * scheduling; q338 gates the collected path against the serial
+    * DuckDB CTE oracle end to end.
     */
-  def trainAuto(spark: SparkSession, words: DataFrame, nMerges: Int,
-      collectThreshold: Long = 8000000L, scanWidth: Int = 4096,
-      checkpointInterval: Int = 64): Seq[Merge] = {
-    require(collectThreshold >= 0,
-      s"collectThreshold must be >= 0, got $collectThreshold")
-    // the decision needs limit(threshold+1) to be a FAITHFUL probe: at
-    // threshold >= Int.MaxValue the limit would clamp and the <= check
-    // below could accept a TRUNCATED vocabulary (ADVICE r13) — and a
-    // threshold that large defeats the bounded-driver contract anyway
-    require(collectThreshold < Int.MaxValue,
-      s"collectThreshold must be < Int.MaxValue, got $collectThreshold")
-    // ONE bounded job decides AND fetches: collect threshold+1 rows —
-    // if the limit wasn't hit the table is the whole vocabulary and
-    // we already hold it; a separate count() would run the full
-    // aggregation twice (r13 self-review)
+  def train(spark: SparkSession, words: DataFrame, nMerges: Int): Seq[Merge] =
+    train(spark, words, nMerges, CollectThreshold)
+
+  /** [[train]] with the driver bound as a parameter, so a spec can
+    * send a small vocabulary down the distributed half. */
+  private[text] def train(spark: SparkSession, words: DataFrame,
+      nMerges: Int, collectThreshold: Int): Seq[Merge] = {
+    require(nMerges >= 0, s"nMerges must be >= 0, got $nMerges")
     val sample = words.select(col("word"), col("cnt").cast("long"))
-      .limit(collectThreshold.toInt + 1)
+      .limit(collectThreshold + 1)
       .collect()
     if (sample.length <= collectThreshold)
       trainDriver(
         sample.map(r => (r.getString(0), r.getLong(1))).toIndexedSeq,
         nMerges)
-    else trainBatched(spark, words, nMerges, scanWidth, checkpointInterval)
+    else trainBatched(words, nMerges)
   }
 
   /** `word` split into its initial symbols, one per CODEPOINT —
@@ -173,8 +130,9 @@ object Bpe {
     * pair, ≥ U+10000) meets a char in U+E000..U+FFFF: the surrogate
     * unit sorts LOW though the codepoint is HIGHER. Neither library
     * word source emits such symbols (wordCounts is [a-z]+,
-    * byteWordCounts maps into ≤ U+0143), but [[trainDriver]] is a
-    * public API and its tie order must match [[train]] on ANY input.
+    * byteWordCounts maps into ≤ U+0143), but [[trainDriver]]'s tie
+    * order must match [[trainBatched]] and the DuckDB oracle on ANY
+    * input.
     */
   private[text] def cpCompare(a: String, b: String): Int = {
     var i = 0
@@ -216,8 +174,8 @@ object Bpe {
   }
 
   /** Driver-resident EXACT serial BPE over a collected (word, cnt)
-    * table — [[train]]'s merge sequence, in memory (VERDICT r12
-    * item 2). One pass builds the weighted adjacent-pair multiset
+    * table — [[train]]'s half for a vocabulary under the driver
+    * bound. One pass builds the weighted adjacent-pair multiset
     * counts and a pair → containing-words index; each merge then
     * touches ONLY the words containing the elected pair (classic
     * trainer shape), applying exact count deltas. The argmax is a
@@ -231,16 +189,16 @@ object Bpe {
     *
     * Cost: init O(Σ word length); per merge O(affected words × their
     * length + log #pairs). 30k merges over a million-word vocabulary
-    * is seconds-to-minutes (BpeBench's `driver` row), vs thousands
-    * of Spark jobs for the distributed loop.
+    * is seconds-to-minutes, vs hundreds to thousands of Spark jobs
+    * for [[trainBatched]].
     */
-  def trainDriver(words: IndexedSeq[(String, Long)], nMerges: Int)
+  private[text] def trainDriver(words: IndexedSeq[(String, Long)], nMerges: Int)
       : Seq[Merge] = {
     require(nMerges >= 0, s"nMerges must be >= 0, got $nMerges")
     // positive counts are the contract (wordCounts/byteWordCounts
     // can only emit them): a zero-count word would hold adjacencies
     // that the count map legitimately drops at zero, breaking the
-    // index invariants — and serial train() would happily ELECT a
+    // index invariants — and a serial argmax would happily ELECT a
     // count-0 pair, which is semantically meaningless. Fail loudly.
     require(words.forall(_._2 > 0L),
       "trainDriver requires strictly positive word counts")
@@ -339,72 +297,13 @@ object Bpe {
     out.result()
   }
 
-  /** Pass/batch telemetry from [[trainBatchedStats]]. */
-  final case class BatchTrainStats(
-      merges: Seq[Merge], passes: Int, largestBatch: Int)
-
-  /** Batched variant of [[train]] for PRODUCTION vocabulary sizes
-    * (VERDICT r11 item 2): one pair-count pass safely commits MANY
-    * merges, so a 30k-merge tokenizer costs O(hundreds–thousands) of
-    * Spark jobs instead of 30k. Returns EXACTLY [[train]]'s merge
-    * sequence — batching is a pure scheduling optimization,
-    * spec-pinned equal on fixtures engineered to diverge under
-    * naive top-B batching, and driver-gated on real data by q338.
-    *
-    * Why the accepted batch IS serial's next |batch| picks, in
-    * order — scan the snapshot's pair counts in serial tie-order
-    * (c DESC, lhs, rhs), greedily accepting pairs SYMBOL-DISJOINT
-    * from every prior accept:
-    *  1. a merge never changes the count of a pair disjoint from it
-    *     (counts move only through occurrences sharing a position,
-    *     and only pairs sharing a symbol can overlap), so every
-    *     accepted pair's snapshot count stays EXACT while earlier
-    *     batch merges apply;
-    *  2. a merge only CREATES pairs containing its fused symbol,
-    *     and each new pair (x, ab) / (ab, y) occurs at most as
-    *     often as the snapshot flank pair (x, a) / (b, y) it grew
-    *     from — always a pair SHARING a symbol with the accept set;
-    *  3. so serial's argmax after i accepted merges is accept i+1,
-    *     PROVIDED each accepted count is STRICTLY above every
-    *     sharing pair's count (those bound both the decayed old
-    *     pairs and the never-materialized new pairs — strictness
-    *     means new-pair NAMES can never matter in a tie) and above
-    *     the scan horizon (unscanned pairs bound unseen flanks at
-    *     `tailBound`).
-    * The sharing bound is computed to a FIXPOINT (a sharing pair
-    * scanned after an accept can tie its count; truncating the
-    * batch shrinks the sharing set, which can only lower the
-    * bound), and when nothing clears it the pass degenerates to
-    * serial's single argmax — correctness never depends on batch
-    * size. Worst case (all counts tied) every pass commits one
-    * merge, exactly [[train]]'s cost.
-    *
-    * STRING-CONFLATION GUARD: facts 1–3 reason about symbols as
-    * strings, and a merge whose fused string EQUALS an
-    * already-existing symbol would alias the two — an "old" pair on
-    * that symbol could then GAIN count from the merge, outside the
-    * threat bound. Under this engine's fixed global merge order and
-    * greedy left-to-right replace we believe every fusion string has
-    * a unique derivation (the creating pair's adjacencies are fully
-    * consumed at its merge, and an adjacency of two OLD symbols can
-    * never re-form), making the case unreachable — but the guard is
-    * O(1) and exact because the driver holds the complete merge
-    * history: a pass ends its batch at any accept whose fused string
-    * matches a prior fusion, falling back to serial pacing right
-    * where the proof would thin.
-    */
-  def trainBatched(spark: SparkSession, words: DataFrame, nMerges: Int,
-      scanWidth: Int = 4096, checkpointInterval: Int = 64): Seq[Merge] =
-    trainBatchedStats(spark, words, nMerges, scanWidth,
-      checkpointInterval).merges
-
   /** One pass's batch selection — the entire accept rule (greedy
     * symbol-disjoint scan under the running threat, the late-tie
     * FIXPOINT, the string-conflation guard, and the serial-argmax
     * fallback) as a PURE function of the scanned snapshot, so the
     * logic the serial-equality proof hangs on is property-testable
     * against an in-memory serial simulator at thousands of random
-    * corpora per second (BpeSpec), not just at Spark-job granularity.
+    * corpora per second (BpeBatchPropertySpec), not just at Spark-job granularity.
     * `scanned` must be the snapshot's pair counts in serial tie-order
     * (c DESC, lhs, rhs), truncated to the scan width; `tailBound` is
     * the count bound on unscanned pairs (0 when fully scanned);
@@ -452,15 +351,67 @@ object Bpe {
     if (batch.isEmpty) Vector(scanned.head) else batch
   }
 
-  /** [[trainBatched]] plus pass/batch-size telemetry (the
-    * tools/BpeBench readout). */
-  def trainBatchedStats(spark: SparkSession, words: DataFrame,
-      nMerges: Int, scanWidth: Int = 4096,
-      checkpointInterval: Int = 64): BatchTrainStats = {
-    require(nMerges >= 0, s"nMerges must be >= 0, got $nMerges")
-    require(scanWidth >= 1, s"scanWidth must be >= 1, got $scanWidth")
-    require(checkpointInterval >= 1,
-      s"checkpointInterval must be >= 1, got $checkpointInterval")
+  /** [[train]]'s distributed half, for vocabularies above the driver
+    * bound: one pair-count pass (one Spark job) safely commits MANY
+    * merges, so a 30k-merge tokenizer costs O(hundreds–thousands) of
+    * jobs instead of 30k. Returns EXACTLY serial BPE's merge
+    * sequence — batching is a pure scheduling optimization,
+    * spec-pinned equal on fixtures engineered to diverge under
+    * naive top-B batching.
+    *
+    * Why the accepted batch IS serial's next |batch| picks, in
+    * order — scan the snapshot's pair counts in serial tie-order
+    * (c DESC, lhs, rhs), greedily accepting pairs SYMBOL-DISJOINT
+    * from every prior accept:
+    *  1. a merge never changes the count of a pair disjoint from it
+    *     (counts move only through occurrences sharing a position,
+    *     and only pairs sharing a symbol can overlap), so every
+    *     accepted pair's snapshot count stays EXACT while earlier
+    *     batch merges apply;
+    *  2. a merge only CREATES pairs containing its fused symbol,
+    *     and each new pair (x, ab) / (ab, y) occurs at most as
+    *     often as the snapshot flank pair (x, a) / (b, y) it grew
+    *     from — always a pair SHARING a symbol with the accept set;
+    *  3. so serial's argmax after i accepted merges is accept i+1,
+    *     PROVIDED each accepted count is STRICTLY above every
+    *     sharing pair's count (those bound both the decayed old
+    *     pairs and the never-materialized new pairs — strictness
+    *     means new-pair NAMES can never matter in a tie) and above
+    *     the scan horizon (unscanned pairs bound unseen flanks at
+    *     `tailBound`).
+    * The sharing bound is computed to a FIXPOINT (a sharing pair
+    * scanned after an accept can tie its count; truncating the
+    * batch shrinks the sharing set, which can only lower the
+    * bound), and when nothing clears it the pass degenerates to
+    * serial's single argmax — correctness never depends on batch
+    * size. Worst case (all counts tied) every pass commits one
+    * merge, one job per merge.
+    *
+    * STRING-CONFLATION GUARD: facts 1–3 reason about symbols as
+    * strings, and a merge whose fused string EQUALS an
+    * already-existing symbol would alias the two — an "old" pair on
+    * that symbol could then GAIN count from the merge, outside the
+    * threat bound. Under this engine's fixed global merge order and
+    * greedy left-to-right replace we believe every fusion string has
+    * a unique derivation (the creating pair's adjacencies are fully
+    * consumed at its merge, and an adjacency of two OLD symbols can
+    * never re-form), making the case unreachable — but the guard is
+    * O(1) and exact because the driver holds the complete merge
+    * history: a pass ends its batch at any accept whose fused string
+    * matches a prior fusion, falling back to serial pacing right
+    * where the proof would thin.
+    *
+    * The replace chain stays lazy on the barriered word table and is
+    * re-folded into the next pass's scan. Every [[CheckpointInterval]]
+    * merges a barrier replaces the LOGICAL plan with a LogicalRDD, so
+    * 30k merges never build an unbounded Project chain: a persist-only
+    * cut left the analyzed plan (and every AQE explain string of it)
+    * growing one Project per merge, which ran the planning JVM out of
+    * heap near merge ~900 at 100k vocabulary while the executors were
+    * healthy.
+    */
+  private[text] def trainBatched(words: DataFrame, nMerges: Int,
+      scanWidth: Int = ScanWidth): Seq[Merge] = {
     var cur = Plans.barrier(
       words.select(col("cnt"), symbolize(col("word")).as("sym")))
     // every multi-char symbol in play is the fusion of a COMMITTED
@@ -468,8 +419,6 @@ object Bpe {
     // complete alphabet-of-fusions for the conflation guard
     val knownFusions = scala.collection.mutable.HashSet.empty[String]
     var sinceCkpt = 0
-    var passes = 0
-    var largestBatch = 0
     val out = Seq.newBuilder[Merge]
     var k = 0
     var stop = false
@@ -477,7 +426,6 @@ object Bpe {
       val top = pairCounts(cur)
         .orderBy(col("c").desc, col("lhs"), col("rhs"))
         .limit(scanWidth).collect()
-      passes += 1
       if (top.isEmpty) stop = true // corpus exhausted (all words fused)
       else {
         val scanned = top.map(r =>
@@ -493,7 +441,6 @@ object Bpe {
           out += Merge(k, l, r, c)
           knownFusions += l + r
         }
-        if (commit.length > largestBatch) largestBatch = commit.length
         // one folded projection applies the whole batch — replaces
         // run left-to-right in merge order, exactly serial's writes
         cur = commit.foldLeft(cur) { case (df, (l, r, _)) =>
@@ -501,14 +448,13 @@ object Bpe {
             replace(col("sym"), lit(s" $l  $r "), lit(s" $l$r ")))
         }
         sinceCkpt += commit.length
-        if (sinceCkpt >= checkpointInterval && k < nMerges) {
-          // truncates the logical plan (see [[train]])
+        if (sinceCkpt >= CheckpointInterval && k < nMerges) {
           cur = Plans.barrier(cur)
           sinceCkpt = 0
         }
       }
     }
-    BatchTrainStats(out.result(), passes, largestBatch)
+    out.result()
   }
 
   /** The fully-merged symbol string of `word` under a learned merge
@@ -558,7 +504,7 @@ object Bpe {
   // Latin-1 keep themselves, everything else (control bytes, SPACE,
   // 0x7F–0xA0, 0xAD) shifts to 0x100+n — so a byte-mapped word never
   // contains the space separator and the whole two-space replace
-  // machinery (train/trainBatched/trainDriver/applyMerges and the
+  // machinery (train, applyMerges and the
   // generated DuckDB oracle) carries over UNCHANGED. Reference shape:
   // GPT-2's bytes_to_unicode (Radford et al. 2019, public encoder.py
   // semantics re-derived here).

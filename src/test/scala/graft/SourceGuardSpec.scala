@@ -28,8 +28,7 @@ class SourceGuardSpec extends AnyFunSpec with Matchers {
     "main/scala/graft/Smoke.scala",
     "main/scala/graft/tools/StageProfile.scala",
     "main/scala/graft/tools/ProbeBench.scala",
-    "main/scala/graft/tools/PlanDump.scala",
-    "main/scala/graft/tools/BpeBench.scala")
+    "main/scala/graft/tools/PlanDump.scala")
 
   private val renamers = Set(
     "main/scala/graft/ops/StagedSwap.scala",

@@ -69,4 +69,41 @@ class SparkEntrySpec extends SparkSpec {
       stored shouldBe empty
     }
   }
+
+  describe("registry query jobs") {
+    it("q36 fires the same jobs whether or not an earlier run left its state") {
+      val dir = Runner.sfDir
+      val sc = spark.sparkContext
+      val state = new org.apache.hadoop.fs.Path(
+        s"target/scratch/q36_state_${Scratch.key(dir)}")
+      state.getFileSystem(sc.hadoopConfiguration).delete(state, true)
+      val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(j.properties)
+            .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => a + b))
+      }
+      def inGroup(group: String)(body: => Unit): Unit = {
+        sc.setJobGroup(group, group)
+        try body finally sc.clearJobGroup()
+      }
+      sc.addSparkListener(listener)
+      try {
+        for (run <- Seq("q36-first", "q36-second"))
+          inGroup(run) {
+            SparkEntry.queries("q36_incremental_state")(spark, dir).count()
+          }
+        // listener events arrive in order: once the probe's job is in,
+        // every job of both runs has been counted
+        inGroup("q36-probe") { spark.range(1).collect() }
+        val deadline = System.nanoTime() + 10L * 1000000000L
+        while (!jobs.containsKey("q36-probe") && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        jobs.containsKey("q36-probe") shouldBe true
+        jobs.get("q36-second") shouldBe jobs.get("q36-first")
+      } finally sc.removeSparkListener(listener)
+    }
+  }
 }

@@ -102,7 +102,7 @@ class WordNgramsSpec extends SparkSpec {
       // arrays; this pins the documented normalize-then-call contract
       // on adversarial inputs (duplicates, unsorted, empty) — the
       // set-semantics HOF form is the ground truth. Every production
-      // caller (hashedSet / wordShingleHashes) emits sorted-distinct
+      // caller (wordShingleHashes) emits sorted-distinct
       // by construction; an out-of-contract caller must normalize
       // exactly like this.
       val rnd = new scala.util.Random(11)

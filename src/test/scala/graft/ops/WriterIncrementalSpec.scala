@@ -38,11 +38,13 @@ class WriterIncrementalSpec extends SparkSpec {
 
   describe("Writer.write replace disposition") {
     import spark.implicits._
+    // clears the whole spec directory, so debris an earlier run left
+    // next to one table cannot fail a later run
     def fresh(name: String): String = {
-      val path = s"target/scratch/writer-spec-replace/$name"
-      val p = new org.apache.hadoop.fs.Path(path)
+      val dir = "target/scratch/writer-spec-replace"
+      val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      path
+      s"$dir/$name"
     }
 
     it("keeps the old table when the new batch fails") {
@@ -51,6 +53,30 @@ class WriterIncrementalSpec extends SparkSpec {
       val failing = spark.range(3).select(
         when(col("id") === 2L, raise_error(lit("boom"))).otherwise(col("id")).as("id"))
       an[Exception] should be thrownBy Writer.write(spark, failing, path, "replace")
+      spark.read.parquet(path).as[Long].collect().sorted shouldBe Array(1L, 2L)
+      debrisNextTo(path) shouldBe empty
+    }
+    it("keeps no staging debris when a task outlives the failed write") {
+      val path = fresh("straggler")
+      Writer.write(spark, Seq(1L, 2L).toDF("id"), path, "replace")
+      // partition 0 fails at once while partition 1 is still computing
+      // its first row: the job is aborted, and partition 1 then opens
+      // its writer under the staging path. It spins rather than sleeps,
+      // so the kill's thread interrupt cannot cut the wait short.
+      val slow = udf { (id: Long) =>
+        val end = System.nanoTime() + 1500L * 1000000L
+        while (System.nanoTime() < end) {}
+        id
+      }
+      val failing = spark.range(0, 2, 1, 2).select(
+        when(col("id") === 0L, raise_error(lit("boom")))
+          .otherwise(slow(col("id"))).as("id"))
+      an[Exception] should be thrownBy Writer.write(spark, failing, path, "replace")
+      val tracker = spark.sparkContext.statusTracker
+      val deadline = System.nanoTime() + 10L * 1000000000L
+      while (tracker.getExecutorInfos.exists(_.numRunningTasks > 0) &&
+          System.nanoTime() < deadline)
+        Thread.sleep(50)
       spark.read.parquet(path).as[Long].collect().sorted shouldBe Array(1L, 2L)
       debrisNextTo(path) shouldBe empty
     }
@@ -101,6 +127,8 @@ class WriterIncrementalSpec extends SparkSpec {
     }
     it("state round-trips through the typed parquet store") {
       val sp = "target/scratch/incremental-spec/state"
+      val p = new org.apache.hadoop.fs.Path(sp)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       Incremental.saveState(df, "c", sp)
       Incremental.loadState(spark, sp).lastValue shouldBe Some(4L)
       Incremental.saveState(df, "c", sp) // rewrite over the stored state
@@ -131,6 +159,31 @@ class WriterIncrementalSpec extends SparkSpec {
         onSchemaChange = IncrementalModel.AppendNewColumns)
       out.columns.toSet shouldBe Set("k", "a", "b")
       out.filter(col("k") === 1L).head().getAs[String]("b") shouldBe null
+    }
+  }
+
+  describe("IncrementalModel.isIncrementalFilter") {
+    import spark.implicits._
+    val batch = Seq((1L, 5L), (2L, 10L), (3L, 11L), (4L, 20L))
+      .toDF("k", "updated_at")
+    def keys(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select("k").as[Long].collect().toSeq.sorted
+
+    it("passes the whole batch when the existing table is empty") {
+      val existing = batch.limit(0)
+      keys(IncrementalModel.isIncrementalFilter(existing, batch,
+        "updated_at")) shouldBe Seq(1L, 2L, 3L, 4L)
+    }
+    it("passes only rows strictly newer than the existing max(updated_at)") {
+      val existing = Seq((9L, 3L), (8L, 10L)).toDF("k", "updated_at")
+      keys(IncrementalModel.isIncrementalFilter(existing, batch,
+        "updated_at")) shouldBe Seq(3L, 4L)
+    }
+    it("passes the whole batch when every existing updated_at is NULL") {
+      val existing = Seq[(Long, Option[Long])]((9L, None), (8L, None))
+        .toDF("k", "updated_at")
+      keys(IncrementalModel.isIncrementalFilter(existing, batch,
+        "updated_at")) shouldBe Seq(1L, 2L, 3L, 4L)
     }
   }
 

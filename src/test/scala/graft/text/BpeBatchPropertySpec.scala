@@ -11,65 +11,12 @@ import org.scalatest.matchers.should.Matchers
   * identical at every position, for every scan width. No Spark — a
   * trial costs microseconds, so coverage is ~1000x the Spark-level
   * equality fixtures in BpeSpec (which remain the proof that the
-  * distributed plumbing applies the selected batch faithfully).
-  *
-  * The simulator mirrors the engine's exact semantics: multiset pair
-  * counts weighted by word count, (count DESC, lhs, rhs) tie order,
-  * greedy left-to-right non-overlapping merge application (the
-  * two-space replace convention, pinned by BpeSpec's 'aaa' case).
+  * distributed plumbing applies the selected batch faithfully). The
+  * serial simulator is [[SerialBpe]], shared with BpeSpec.
   */
 class BpeBatchPropertySpec extends AnyFunSpec with Matchers {
 
-  private type Word = (Vector[String], Long)
-  private type Pair = (String, String, Long)
-
-  private val pairOrd: Ordering[Pair] =
-    Ordering.by[Pair, (Long, String, String)](p => (-p._3, p._1, p._2))
-
-  private def pairCounts(ws: Seq[Word]): Vector[Pair] =
-    ws.iterator
-      .flatMap { case (syms, cnt) =>
-        (0 until syms.length - 1).iterator
-          .map(i => (syms(i), syms(i + 1)) -> cnt)
-      }
-      .toSeq.groupMapReduce(_._1)(_._2)(_ + _)
-      .iterator.map { case ((l, r), c) => (l, r, c) }
-      .toVector.sorted(pairOrd)
-
-  /** Greedy left-to-right non-overlapping fuse of adjacent (l, r). */
-  private def applyMerge(syms: Vector[String], l: String,
-      r: String): Vector[String] = {
-    val b = Vector.newBuilder[String]
-    var i = 0
-    while (i < syms.length) {
-      if (i + 1 < syms.length && syms(i) == l && syms(i + 1) == r) {
-        b += l + r; i += 2
-      } else { b += syms(i); i += 1 }
-    }
-    b.result()
-  }
-
-  private def applyToAll(ws: Seq[Word], l: String, r: String): Seq[Word] =
-    ws.map { case (s, c) => (applyMerge(s, l, r), c) }
-
-  /** Reference serial BPE: argmax by tie-order, one merge per round. */
-  private def serial(words0: Seq[Word], nMerges: Int): Vector[Pair] = {
-    var ws = words0
-    val out = Vector.newBuilder[Pair]
-    var k = 0
-    var stop = false
-    while (k < nMerges && !stop) {
-      val pc = pairCounts(ws)
-      if (pc.isEmpty) stop = true
-      else {
-        val (l, r, c) = pc.head
-        out += ((l, r, c))
-        ws = applyToAll(ws, l, r)
-        k += 1
-      }
-    }
-    out.result()
-  }
+  import SerialBpe.{Pair, Word, applyToAll, pairCounts, serial}
 
   /** Batched BPE driven by the ENGINE's selectBatch. */
   private def batched(words0: Seq[Word], nMerges: Int,

@@ -7,6 +7,8 @@ import graft.text.Bpe.Merge
 
 /** BPE training semantics (q143/q144): merge election, greedy
   * left-to-right replace, tie-breaking, early stop, encode+census.
+  * Both halves of `Bpe.train` are pinned against the in-memory serial
+  * simulator [[SerialBpe]].
   */
 class BpeSpec extends SparkSpec {
   import spark.implicits._
@@ -54,10 +56,10 @@ class BpeSpec extends SparkSpec {
 
   describe("trainBatched (production-vocab path, VERDICT r11 item 2)") {
     def pin(w: Seq[(String, Long)], n: Int, scans: Seq[Int] = Seq(4096)): Unit = {
-      val serial = Bpe.train(spark, w.toDF("word", "cnt"), n)
+      val serial = SerialBpe.merges(w, n)
       for (sw <- scans)
         withClue(s"scanWidth=$sw nMerges=$n words=$w: ") {
-          Bpe.trainBatched(spark, w.toDF("word", "cnt"), n,
+          Bpe.trainBatched(w.toDF("word", "cnt"), n,
             scanWidth = sw) shouldBe serial
         }
     }
@@ -123,10 +125,13 @@ class BpeSpec extends SparkSpec {
         "merges on a spread-count fixture") {
       val w = Seq(("ab", 9L), ("cd", 8L), ("ef", 7L), ("gh", 6L),
         ("ij", 5L), ("kl", 4L))
-      val st = Bpe.trainBatchedStats(spark, w.toDF("word", "cnt"), 6)
-      st.merges shouldBe Bpe.train(spark, w.toDF("word", "cnt"), 6)
-      st.passes should be < 6
-      st.largestBatch should be > 1
+      // the first snapshot's pairs are symbol-disjoint with spread
+      // counts, so one pass commits all 6 merges
+      val snapshot = SerialBpe.pairCounts(
+        w.map { case (s, c) => (s.map(_.toString).toVector, c) })
+      Bpe.selectBatch(snapshot, 0L, _ => false) shouldBe snapshot
+      snapshot.length shouldBe 6
+      pin(w, 6)
     }
   }
 
@@ -141,17 +146,17 @@ class BpeSpec extends SparkSpec {
         Seq(("aaa", 1L), ("aaaa", 1L))))
         withClue(s"words=$w: ") {
           Bpe.trainDriver(w.toIndexedSeq, 8) shouldBe
-            Bpe.train(spark, w.toDF("word", "cnt"), 8)
+            SerialBpe.merges(w, 8)
         }
     }
 
     it("trainAuto picks the collected path by default and the " +
         "distributed path under a zero threshold — same merges") {
       val w = Seq(("mnz", 5L), ("mn", 1L), ("pq", 5L), ("abab", 3L))
-      val serial = Bpe.train(spark, w.toDF("word", "cnt"), 6)
-      Bpe.trainAuto(spark, w.toDF("word", "cnt"), 6) shouldBe serial
-      Bpe.trainAuto(spark, w.toDF("word", "cnt"), 6,
-        collectThreshold = 0L) shouldBe serial
+      val serial = SerialBpe.merges(w, 6)
+      Bpe.train(spark, w.toDF("word", "cnt"), 6) shouldBe serial
+      Bpe.train(spark, w.toDF("word", "cnt"), 6,
+        collectThreshold = 0) shouldBe serial
     }
   }
 
@@ -259,8 +264,10 @@ class BpeSpec extends SparkSpec {
         "machinery (driver == Spark train)") {
       val docs = Seq("ab ab ab! é é", "ab é日").toDF("text")
       val words = Bpe.byteWordCounts(docs, "text")
-      val serial = Bpe.train(spark, words, 6)
-      Bpe.trainAuto(spark, words, 6) shouldBe serial
+      val serial = SerialBpe.merges(
+        words.collect().map(r => (r.getString(0), r.getLong(1))).toSeq, 6)
+      Bpe.train(spark, words, 6) shouldBe serial
+      Bpe.train(spark, words, 6, collectThreshold = 0) shouldBe serial
       serial should not be empty
     }
   }
