@@ -324,9 +324,6 @@ object CorpusEntry {
     "q87_pit_join" -> (q87 _),
     "q88_vacuum" -> (q88 _))
 
-  private[graft] val WsTok =
-    "(length(trim(text)) - length(replace(trim(text), ' ', '')) + 1)"
-
   private val StratumSql =
     s"""CASE WHEN source IN (${WebSrcs.map("'" + _ + "'").mkString(",")}) THEN 'web'
        |     WHEN source IN (${BookSrcs.map("'" + _ + "'").mkString(",")}) THEN 'books'
@@ -401,7 +398,7 @@ object CorpusEntry {
         |ORDER BY t.doc_id""".stripMargin,
     "q82_sequence_packing" ->
       s"""WITH d AS (
-         |  SELECT doc_id, CAST($WsTok AS BIGINT) AS tok
+         |  SELECT doc_id, CAST(${PipelineEntry.WsTokSql} AS BIGINT) AS tok
          |  FROM documents WHERE length(trim(text)) > 0
          |), c AS (
          |  SELECT doc_id, tok,
@@ -420,7 +417,7 @@ object CorpusEntry {
          |FROM s GROUP BY seq_id ORDER BY seq_id""".stripMargin,
     "q83_mixture_sampling" ->
       s"""WITH d AS (
-         |  SELECT doc_id, $StratumSql AS stratum, CAST($WsTok AS BIGINT) AS tok
+         |  SELECT doc_id, $StratumSql AS stratum, CAST(${PipelineEntry.WsTokSql} AS BIGINT) AS tok
          |  FROM documents
          |), sup AS (
          |  SELECT stratum, CAST(sum(tok) AS BIGINT) AS t, min($WeightSql) AS w
@@ -558,7 +555,7 @@ object CorpusEntry {
     "q92_truncate_tokens" ->
       s"""WITH t AS (
          |  SELECT doc_id, string_split(trim(text), ' ') AS w,
-         |    CAST($WsTok AS BIGINT) AS n, trim(text) AS tt
+         |    CAST(${PipelineEntry.WsTokSql} AS BIGINT) AS n, trim(text) AS tt
          |  FROM documents
          |), c AS (
          |  SELECT doc_id, n, least(n, $MaxTokens) AS kept,
@@ -620,10 +617,10 @@ object CorpusEntry {
     */
   private lazy val Bm25Cte: String =
     s"""lens AS (
-       |  SELECT doc_id, CAST($WsTok AS BIGINT) AS len FROM documents
+       |  SELECT doc_id, CAST(${PipelineEntry.WsTokSql} AS BIGINT) AS len FROM documents
        |), corpus AS (
        |  SELECT CAST(count(*) AS BIGINT) AS n,
-       |    (CAST(sum($WsTok) AS DOUBLE) / CAST(count(*) AS BIGINT)) AS avg_len
+       |    (CAST(sum(${PipelineEntry.WsTokSql}) AS DOUBLE) / CAST(count(*) AS BIGINT)) AS avg_len
        |  FROM documents
        |), tf AS (
        |  SELECT doc_id, term, count(*) AS tf FROM (

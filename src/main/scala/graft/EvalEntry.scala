@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextHashes
 import graft.ml.{Eval, LogRegGd, NaiveBayes, Stump}
 import graft.ops.{IdentityStitch, Sampling}
 import graft.quality.Did
@@ -513,8 +514,7 @@ object EvalEntry {
     }
     val toks = t(s, dir, "documents")
       .select(col("lang"),
-        size(filter(split(lower(col("text")), "\\s+"),
-          t => length(t) > 0)).cast("long").as("n_toks"))
+        size(TextHashes.wordNgrams(col("text"), 1)).cast("long").as("n_toks"))
       .groupBy("lang").agg(sum(col("n_toks")).as("n_tokens"))
     val tot = toks.agg(sum(col("n_tokens")).as("t_all"))
     val share = col("n_tokens").cast("double") / col("t_all").cast("double")
@@ -1421,7 +1421,7 @@ object EvalEntry {
          |FROM pz_out ORDER BY cohort""".stripMargin,
     "q324_packing_efficiency" ->
       s"""WITH d AS (
-         |  SELECT doc_id, CAST(${CorpusEntry.WsTok} AS BIGINT) AS tok
+         |  SELECT doc_id, CAST(${PipelineEntry.WsTokSql} AS BIGINT) AS tok
          |  FROM documents WHERE length(trim(text)) > 0
          |), c AS (
          |  SELECT doc_id, tok,
@@ -1664,9 +1664,7 @@ object EvalEntry {
         s"WHEN lang = '$l' THEN $pm"
       }.mkString(" ") + " END"
       s"""WITH toks AS (
-         |  SELECT lang, CAST(sum(len(list_filter(
-         |      string_split_regex(lower(text), '\\s+'),
-         |      x -> x <> ''))) AS BIGINT) AS n_tokens
+         |  SELECT lang, CAST(sum(len(${TextHashes.wordTokensSql("text")})) AS BIGINT) AS n_tokens
          |  FROM documents GROUP BY lang
          |), tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS t_all
          |  FROM toks)

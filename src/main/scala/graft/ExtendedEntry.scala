@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
+import graft.functions.TextHashes
 import graft.ops.{Sampling, Skew}
 import graft.sources.Tables
 import graft.sources.Tables.{load => t}
@@ -418,12 +419,12 @@ object ExtendedEntry {
 
   // ---------------------------------------------------------------
   // q65 — repetition scoring (Gopher rule): max bigram multiplicity
-  // per doc, computed per-row (sort + run-length scan — no shuffle).
+  // per doc, computed per-row (one native hash-count loop — no shuffle).
   // ---------------------------------------------------------------
   private def q65(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents").select(col("doc_id"),
-        size(TextAnalysis.wordBigrams(col("text"))).cast("long").as("n_bigrams"),
-        TextAnalysis.maxBigramMultiplicity(col("text")).as("max_rep"),
+        size(TextHashes.wordBigrams(col("text"))).cast("long").as("n_bigrams"),
+        TextHashes.bigramMaxMultiplicity(col("text")).as("max_rep"),
         TextAnalysis.repetitionRatio(col("text")).as("rep_ratio"))
       .orderBy("doc_id")
 
@@ -1041,7 +1042,7 @@ object ExtendedEntry {
     * same computation through the bloom-prefiltered two-phase plan.
     */
   private val decontaminateSql: String =
-    """WITH ev AS (
+    s"""WITH ev AS (
       |  SELECT doc_id, text FROM documents WHERE doc_id % 25 = 0
       |), tr AS (
       |  SELECT doc_id, text FROM documents WHERE doc_id % 25 <> 0
@@ -1053,7 +1054,7 @@ object ExtendedEntry {
       |           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]))
       |    END AS g
       |  FROM (SELECT doc_id,
-      |          list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t
+      |          ${TextHashes.wordTokensSql("text")} AS t
       |        FROM ev)
       |), tsets AS (
       |  SELECT doc_id,
@@ -1062,7 +1063,7 @@ object ExtendedEntry {
       |           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]))
       |    END AS g
       |  FROM (SELECT doc_id,
-      |          list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t
+      |          ${TextHashes.wordTokensSql("text")} AS t
       |        FROM tr)
       |)
       |SELECT t.doc_id AS train_id, e.doc_id AS eval_id,

@@ -8,14 +8,12 @@ import org.apache.spark.sql.types.IntegerType
 import graft.functions.TextHashExprs._
 
 /** Spark session extension registering graft's native expressions as
-  * SQL functions, so `spark.sql("SELECT graft_simhash64(text) ...")`
-  * works in the SQL-editor path too:
+  * SQL functions, so `spark.sql("SELECT graft_simhash_poly64(text) ...")`
+  * works in the SQL-editor path too. `Session.local` installs it in
+  * every session graft builds:
   *
   *   SparkSession.builder()
   *     .config("spark.sql.extensions", "graft.GraftExtensions")
-  *
-  * (For an already-built session, `GraftExtensions.register(spark)`
-  * installs the same functions imperatively.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -49,13 +47,6 @@ object GraftExtensions {
         case Seq(h, n) => MinHashSignature(h, intLit(n, "n"))
         case _ => throw new IllegalArgumentException(
           "graft_minhash_signature(hashes, n) takes 2 arguments")
-      }),
-    (FunctionIdentifier("graft_simhash64"),
-      info("graft_simhash64", "_FUNC_(text) - 64-bit SimHash fingerprint"),
-      (children: Seq[Expression]) => children match {
-        case Seq(t) => SimHash64(t)
-        case _ => throw new IllegalArgumentException(
-          "graft_simhash64(text) takes 1 argument")
       }),
     (FunctionIdentifier("graft_simhash_poly64"),
       info("graft_simhash_poly64",
@@ -136,10 +127,4 @@ object GraftExtensions {
         case _ => throw new IllegalArgumentException(
           "graft_freq_top_k(sketch, k) takes 2 arguments")
       }))
-
-  /** Imperative registration into a live session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    functions.foreach { case (id, inf, builder) =>
-      org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, id, inf, builder)
-    }
 }

@@ -1046,9 +1046,6 @@ object MiningEntry {
     "q188_lexical_stats" -> (q188 _),
     "q189_ab_ttest" -> (q189 _))
 
-  private val WsTokSqlM =
-    "(length(trim(text)) - length(replace(trim(text), ' ', '')) + 1)"
-
   val oracleSql: Map[String, String] = Map(
     "q224_merge_conflicts" ->
       """WITH base AS (
@@ -1268,7 +1265,7 @@ object MiningEntry {
         |ORDER BY model_name""".stripMargin,
     "q214_pack_provenance" ->
       s"""WITH d AS (
-         |  SELECT doc_id, source, CAST($WsTokSqlM AS BIGINT) AS tok
+         |  SELECT doc_id, source, CAST(${PipelineEntry.WsTokSql} AS BIGINT) AS tok
          |  FROM documents WHERE length(trim(text)) > 0
          |), c AS (
          |  SELECT doc_id, source, tok,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ann.Ann
 import graft.dag.Dag
 import graft.dedup.Dedup
+import graft.functions.TextHashes
 import graft.multimodal.Multimodal
 import graft.sources.{Catalog, CatalogEntries, Database, Incremental, Tables}
 import graft.sources.Tables.{load => t}
@@ -70,10 +71,8 @@ object PipelineEntry {
     // agree on one of d+1 chunks) and bucketPairs' splitting keeps
     // recall full under the production cap, so the whole pipeline is
     // oracle-gated — the oracle recomputes every fingerprint from SQL
-    // (char polynomial + mix30) and brute-forces all pairs. xxhash64
-    // fingerprints stay the production default (Dedup.simhashPairs).
-    Dedup.simhashPairs(nearCorpus(s, dir), "doc_id", "text", maxHamming = 7,
-        fingerprint = graft.functions.TextHashes.simhashPoly64)
+    // (char polynomial + mix30) and brute-forces all pairs.
+    Dedup.simhashPairs(nearCorpus(s, dir), "doc_id", "text", maxHamming = 7)
       .orderBy("a", "b")
 
   private def q25(s: SparkSession, dir: String): DataFrame =
@@ -500,13 +499,13 @@ object PipelineEntry {
     * oracles). No leading WITH so callers can prepend RECURSIVE.
     */
   private[graft] val NgramPairsCte =
-    """corpus AS (
+    s"""corpus AS (
       |  SELECT doc_id, text FROM documents
       |  UNION ALL
       |  SELECT doc_id + 1000000, 'zq ' || text FROM documents WHERE doc_id % 25 = 0
       |), toks AS (
       |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t
+      |    ${TextHashes.wordTokensSql("text")} AS t
       |  FROM corpus
       |), sets AS (
       |  SELECT doc_id,
@@ -526,13 +525,13 @@ object PipelineEntry {
     * NgramPairsCte but k=3 — MinHash shingles default to 3).
     */
   private[graft] val TrigramPairsCte =
-    """corpus AS (
+    s"""corpus AS (
       |  SELECT doc_id, text FROM documents
       |  UNION ALL
       |  SELECT doc_id + 1000000, 'zq ' || text FROM documents WHERE doc_id % 25 = 0
       |), toks AS (
       |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t
+      |    ${TextHashes.wordTokensSql("text")} AS t
       |  FROM corpus
       |), sets AS (
       |  SELECT doc_id,
@@ -559,13 +558,13 @@ object PipelineEntry {
     * recall is exact; bucketPairs splitting is full-recall).
     */
   private val SimhashPolyFpsCte =
-    """corpus AS (
+    s"""corpus AS (
       |  SELECT doc_id, text FROM documents
       |  UNION ALL
       |  SELECT doc_id + 1000000, 'zq ' || text FROM documents WHERE doc_id % 25 = 0
       |), tk AS (
       |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t
+      |    ${TextHashes.wordTokensSql("text")} AS t
       |  FROM corpus
       |), toks AS (
       |  SELECT doc_id,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dag.Dag
+import graft.functions.TextHashes
 import graft.ops.{Snapshot, StagedSwap}
 import graft.sources.Tables.{load => t}
 
@@ -417,14 +418,14 @@ object PlatformEntry {
        |      ELSE list_distinct(list_transform(range(1, len(t) - 1),
        |        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) END AS g
        |  FROM (SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS t
+       |    ${TextHashes.wordTokensSql("text")} AS t
        |    FROM corpus)
        |), bsets AS (
        |  SELECT doc_id, CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
        |      ELSE list_distinct(list_transform(range(1, len(t) - 1),
        |        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) END AS g
        |  FROM (SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS t
+       |    ${TextHashes.wordTokensSql("text")} AS t
        |    FROM batch)
        |), pairs AS (
        |  SELECT x.doc_id AS a, y.doc_id AS b,

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextHashes
 import graft.sources.Tables.{load => t}
 
 /** q225+: the round-8 statistics/time-series/graph tail —
@@ -384,10 +385,9 @@ object StatsEntry {
     * even-half-trained add-one bigram LM scoring the odd half.
     */
   private[graft] val LmScoreCte: String =
-    """toksall AS (
+    s"""toksall AS (
       |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '\s+'),
-      |      x -> x <> '') AS t
+      |    ${TextHashes.wordTokensSql("text")} AS t
       |  FROM documents
       |), ref AS (SELECT * FROM toksall WHERE doc_id % 2 = 0),
       |tgt AS (SELECT * FROM toksall WHERE doc_id % 2 = 1),
@@ -438,8 +438,7 @@ object StatsEntry {
     val lam = s"($JmLambdaPermille / 1000.0)"
     s"""toksall AS (
        |  SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '\\s+'),
-       |      x -> x <> '') AS t
+       |    ${TextHashes.wordTokensSql("text")} AS t
        |  FROM documents
        |), ref AS (SELECT * FROM toksall WHERE doc_id % 2 = 0),
        |tgt AS (SELECT * FROM toksall WHERE doc_id % 2 = 1),
@@ -502,8 +501,7 @@ object StatsEntry {
     val d = s"($KnDiscountPermille / 1000.0)"
     s"""toksall AS (
        |  SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '\\s+'),
-       |      x -> x <> '') AS t
+       |    ${TextHashes.wordTokensSql("text")} AS t
        |  FROM documents
        |), ref AS (SELECT * FROM toksall WHERE doc_id % 2 = 0),
        |tgt AS (SELECT * FROM toksall WHERE doc_id % 2 = 1),
@@ -588,8 +586,7 @@ object StatsEntry {
          |      END""".stripMargin
     s"""toksall AS (
        |  SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '\\s+'),
-       |      x -> x <> '') AS t
+       |    ${TextHashes.wordTokensSql("text")} AS t
        |  FROM documents
        |), ref AS (SELECT * FROM toksall WHERE doc_id % 2 = 0),
        |tgt AS (SELECT * FROM toksall WHERE doc_id % 2 = 1),
@@ -694,8 +691,7 @@ object StatsEntry {
        |           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
        |    END AS g
        |  FROM (SELECT doc_id,
-       |      list_filter(string_split_regex(lower(text), '\\s+'),
-       |        x -> x <> '') AS t
+       |      ${TextHashes.wordTokensSql("text")} AS t
        |    FROM $rel)""".stripMargin
 
   val oracleSql: Map[String, String] = Map(
@@ -936,9 +932,8 @@ object StatsEntry {
         |    AS encoding
         |FROM per CROSS JOIN g ORDER BY category""".stripMargin,
     "q236_feature_hash" ->
-      """WITH w0 AS (
-        |  SELECT unnest(list_filter(
-        |    string_split_regex(lower(text), '\s+'), x -> x <> '')) AS w
+      s"""WITH w0 AS (
+        |  SELECT unnest(${TextHashes.wordTokensSql("text")}) AS w
         |  FROM documents
         |), h AS (
         |  SELECT w, list_reduce(list_prepend(CAST(0 AS BIGINT),

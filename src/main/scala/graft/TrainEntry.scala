@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextHashes
 import graft.ops.StagedSwap
 import graft.sources.Tables.{load => t}
 
@@ -1164,7 +1165,7 @@ object TrainEntry {
     // scoring = the identical (tf/m)·ln(k/df) with the 9dp round
     // BEFORE ranking so ln's last-ulp wobble cannot reorder.
     "q180_cluster_terms" ->
-      """WITH cents AS MATERIALIZED (
+      s"""WITH cents AS MATERIALIZED (
         |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cid,
         |    list_transform(embedding, v -> CAST(v AS DOUBLE)) AS c
         |  FROM embeddings
@@ -1188,8 +1189,7 @@ object TrainEntry {
         |    FROM d) WHERE rn = 1),
         |toks AS MATERIALIZED (
         |  SELECT a.cid AS cl,
-        |    unnest(list_filter(string_split_regex(lower(text), '\s+'),
-        |      x -> x <> '')) AS w
+        |    unnest(${TextHashes.wordTokensSql("text")}) AS w
         |  FROM documents doc JOIN a ON a.vid = doc.doc_id),
         |tf AS MATERIALIZED (
         |  SELECT cl, w, count(*) AS tf FROM toks GROUP BY 1, 2),
@@ -1283,7 +1283,7 @@ object TrainEntry {
     // 8-grams, whole-text gram under 8 tokens); owner = min doc id
     // per gram, n_seen counts grams with a strictly-smaller owner.
     "q164_substring_report" ->
-      """WITH corpus AS MATERIALIZED (
+      s"""WITH corpus AS MATERIALIZED (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
         |  SELECT doc_id + 1000000,
@@ -1298,8 +1298,7 @@ object TrainEntry {
         |                t[i+6] || ' ' || t[i+7]))
         |    END) AS gram
         |  FROM (SELECT doc_id,
-        |          list_filter(string_split_regex(lower(text), '\s+'),
-        |            x -> x <> '') AS t
+        |          ${TextHashes.wordTokensSql("text")} AS t
         |        FROM corpus)
         |), o AS MATERIALIZED (
         |  SELECT gram, min(doc_id) AS owner FROM g GROUP BY gram
@@ -1486,9 +1485,9 @@ object TrainEntry {
     // whole-text gram under 4 tokens); benchmark text = first
     // len//2 tokens of every 23rd doc, same slice both engines.
     "q129_contamination_report" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT array_to_string(t[1 : len(t)//2], ' ') AS text
-        |  FROM (SELECT list_filter(string_split_regex(text, '\s+'),
+        |  FROM (SELECT list_filter(string_split_regex(text, '\\s+'),
         |                 x -> x <> '') AS t
         |        FROM documents WHERE doc_id % 23 = 0)
         |), eg AS (
@@ -1497,8 +1496,7 @@ object TrainEntry {
         |         ELSE list_distinct(list_transform(range(1, len(t) - 2),
         |           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]))
         |    END) AS gram
-        |  FROM (SELECT list_filter(string_split_regex(lower(text), '\s+'),
-        |                 x -> x <> '') AS t
+        |  FROM (SELECT ${TextHashes.wordTokensSql("text")} AS t
         |        FROM ev)
         |), tg AS (
         |  SELECT doc_id, unnest(
@@ -1507,8 +1505,7 @@ object TrainEntry {
         |           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]))
         |    END) AS gram
         |  FROM (SELECT doc_id,
-        |          list_filter(string_split_regex(lower(text), '\s+'),
-        |            x -> x <> '') AS t
+        |          ${TextHashes.wordTokensSql("text")} AS t
         |        FROM documents)
         |)
         |SELECT t.doc_id, count(*) AS n_grams,
@@ -1555,7 +1552,7 @@ object TrainEntry {
            |      ELSE list_distinct(list_transform(range(1, len(t) - 1),
            |        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) END AS g
            |  FROM (SELECT doc_id,
-           |    list_filter(string_split_regex(lower(x), '\\s+'), v -> v <> '') AS t
+           |    ${TextHashes.wordTokensSql("x")} AS t
            |    FROM $src)""".stripMargin
       s"""WITH corpus AS (
          |  SELECT doc_id, $ctext AS x FROM documents

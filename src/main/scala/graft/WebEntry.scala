@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextHashes
 import graft.sources.Tables.{load => t}
 
 /** q130+: the web-graph / warehouse-metadata / product-analytics
@@ -1924,14 +1925,13 @@ object WebEntry {
          |GROUP BY dst_domain, txt ORDER BY dst_domain, txt""".stripMargin
     },
     "q137_lm_unseen" ->
-      """WITH rg AS (
+      s"""WITH rg AS (
         |  SELECT DISTINCT unnest(
         |    CASE WHEN len(t) < 2 THEN [array_to_string(t, ' ')]
         |         ELSE list_distinct(list_transform(range(1, len(t)),
         |           i -> t[i] || ' ' || t[i+1]))
         |    END) AS gram
-        |  FROM (SELECT list_filter(string_split_regex(lower(text), '\s+'),
-        |                 x -> x <> '') AS t
+        |  FROM (SELECT ${TextHashes.wordTokensSql("text")} AS t
         |        FROM documents WHERE lang = 'en' AND doc_id % 3 <> 0)
         |), sg AS (
         |  SELECT doc_id, unnest(
@@ -1940,8 +1940,7 @@ object WebEntry {
         |           i -> t[i] || ' ' || t[i+1]))
         |    END) AS gram
         |  FROM (SELECT doc_id,
-        |          list_filter(string_split_regex(lower(text), '\s+'),
-        |            x -> x <> '') AS t
+        |          ${TextHashes.wordTokensSql("text")} AS t
         |        FROM documents WHERE doc_id % 3 = 0)
         |)
         |SELECT s.doc_id, count(*) AS n_grams,

@@ -202,11 +202,37 @@ object Dag {
     *    unique_key, rewritten, read back
     * Writes happen eagerly in topological order; each is one Spark
     * job, so independent subtrees pipeline on a busy cluster.
-    */
-  /** @param fullRefresh dbt's --full-refresh: incremental models
+    *
+    * @param fullRefresh dbt's --full-refresh: incremental models
     *                     rebuild from scratch instead of merging into
     *                     persisted state
     */
+  def runMaterialized(
+      spark: SparkSession,
+      models: Seq[Model],
+      warehouseDir: String,
+      inputs: Map[String, DataFrame] = Map.empty,
+      fullRefresh: Boolean = false): Map[String, DataFrame] = {
+    topoSort(models).foldLeft(inputs) { (built, m) =>
+      val frame = m.build(built)
+      val path = s"$warehouseDir/${m.name}"
+      val result = m.materialization match {
+        case Ephemeral => frame
+        case View =>
+          frame.createOrReplaceTempView(m.name)
+          frame
+        case Table =>
+          Writer.write(spark, frame, path, "replace")
+          spark.read.parquet(path)
+        case Incremental(uniqueKey) =>
+          val disposition = if (fullRefresh) "replace" else "merge"
+          Writer.write(spark, frame, path, disposition, uniqueKey)
+          spark.read.parquet(path)
+      }
+      built + (m.name -> result)
+    }
+  }
+
   // ---- model removal lifecycle (reference dbt_project.remove_model,
   // ---- services/dbt_project.py:490-500: delete the model file; here
   // ---- the registered model AND its warehouse artifact)
@@ -238,31 +264,5 @@ object Dag {
     val p = new org.apache.hadoop.fs.Path(s"$warehouseDir/$name")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p) && fs.delete(p, true)
-  }
-
-  def runMaterialized(
-      spark: SparkSession,
-      models: Seq[Model],
-      warehouseDir: String,
-      inputs: Map[String, DataFrame] = Map.empty,
-      fullRefresh: Boolean = false): Map[String, DataFrame] = {
-    topoSort(models).foldLeft(inputs) { (built, m) =>
-      val frame = m.build(built)
-      val path = s"$warehouseDir/${m.name}"
-      val result = m.materialization match {
-        case Ephemeral => frame
-        case View =>
-          frame.createOrReplaceTempView(m.name)
-          frame
-        case Table =>
-          Writer.write(spark, frame, path, "replace")
-          spark.read.parquet(path)
-        case Incremental(uniqueKey) =>
-          val disposition = if (fullRefresh) "replace" else "merge"
-          Writer.write(spark, frame, path, disposition, uniqueKey)
-          spark.read.parquet(path)
-      }
-      built + (m.name -> result)
-    }
   }
 }

@@ -290,9 +290,11 @@ object Dedup {
   // SimHash — q24
   // ----------------------------------------------------------------
 
-  /** Near-duplicate pairs with Hamming distance ≤ `maxHamming`,
-    * found via the chunk pigeonhole (Manku/Jain/Sarma WWW'07): split
-    * the 64-bit fingerprint into `maxHamming + 1` chunks — any pair
+  /** Near-duplicate pairs with Hamming distance ≤ `maxHamming`
+    * between the oracle-computable SimHash fingerprints
+    * (`TextHashes.simhashPoly64`), found via the chunk pigeonhole
+    * (Manku/Jain/Sarma WWW'07): split the 64-bit fingerprint (its
+    * top 4 bits are always 0) into `maxHamming + 1` chunks — any pair
     * within distance d must agree on ≥ 1 chunk — bucket on
     * (chunk_id, chunk_val), verify with bit_count(xor). As in the
     * paper's multiple permuted tables, a second, bit-rotated chunking
@@ -305,15 +307,14 @@ object Dedup {
       idCol: String,
       textCol: String,
       maxHamming: Int = 3,
-      maxBucket: Int = 100,
-      fingerprint: Column => Column = graft.functions.TextHashes.simhash64): DataFrame = {
+      maxBucket: Int = 100): DataFrame = {
     val chunks = maxHamming + 1
     require(64 % chunks == 0, s"64 bits not divisible into $chunks chunks")
     val width = 64 / chunks
     val mask = if (width == 64) -1L else (1L << width) - 1
 
     val fps = barrier(docs.select(col(idCol).as("doc_id"),
-      fingerprint(col(textCol)).as("fp")))
+      graft.functions.TextHashes.simhashPoly64(col(textCol)).as("fp")))
     // second table: fingerprint rotated by half a chunk
     val rot = width / 2
     val rotated =

@@ -75,44 +75,6 @@ object TextHashExprs {
     new GenericArrayData(sig)
   }
 
-  /** 64-bit SimHash voting over word-BIGRAM features (adjacent token
-    * pairs; a single-token document votes with that token). Bigrams,
-    * not single tokens, are load-bearing on low-vocabulary corpora: a
-    * corpus drawing from V distinct words spans ≤ V distinct
-    * single-token vote vectors, so fingerprints of UNRELATED docs
-    * collapse toward each other (measured on the synthetic testdata:
-    * 31-word vocab ⇒ mean pairwise Hamming 16/60 and 2,002 spurious
-    * pairs at ≤ 7; bigram features ⇒ mean 28.9 and 34 — near the
-    * ideal 30 of an unbiased fingerprint). A near-dup edit still
-    * touches only the bigrams overlapping the edit site.
-    */
-  def simhashEval(s: UTF8String): Long = {
-    val toks = tokenHashes(s)
-    val tally = new Array[Int](64)
-    @inline def vote(h: Long): Unit = {
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) tally(b) += 1 else tally(b) -= 1
-        b += 1
-      }
-    }
-    if (toks.length == 1) vote(toks(0))
-    else {
-      var i = 0
-      while (i < toks.length - 1) {
-        vote(XXH64.hashLong(toks(i + 1), toks(i))) // bigram feature
-        i += 1
-      }
-    }
-    var fp = 0L
-    var b = 0
-    while (b < 64) {
-      if (tally(b) > 0) fp |= (1L << b)
-      b += 1
-    }
-    fp
-  }
-
   /** SimHash over CROSS-ENGINE-COMPUTABLE word-bigram features: each
     * feature string "tokA tokB" hashes to mix30(h1)·2³⁰ + mix30(h2)
     * where h1/h2 are char-polynomial hashes mod two primes
@@ -120,6 +82,16 @@ object TextHashExprs {
     * fingerprint pattern), packing 60 usable bits. Bits 60–63 are
     * constant 0 for every document, so Hamming distances are
     * unaffected and the Manku chunk pigeonhole stays exact.
+    *
+    * Features are word BIGRAMS (adjacent token pairs; a single-token
+    * document votes with that token), not single tokens: a corpus
+    * drawing from V distinct words spans ≤ V distinct single-token
+    * vote vectors, so fingerprints of UNRELATED docs collapse toward
+    * each other on low-vocabulary corpora (measured on the synthetic
+    * testdata: 31-word vocab ⇒ mean pairwise Hamming 16/60 and 2,002
+    * spurious pairs at ≤ 7; bigram features ⇒ mean 28.9 and 34 —
+    * near the ideal 30 of an unbiased fingerprint). A near-dup edit
+    * still touches only the bigrams overlapping the edit site.
     *
     * mix30 is load-bearing: RAW polynomial hashes of short features
     * concentrate in the low bits, leaving high fingerprint bits voted
@@ -131,8 +103,7 @@ object TextHashExprs {
     * (xor, >>, *, % — every intermediate < 2⁶²), so DuckDB recomputes
     * the identical fingerprint and the whole pipeline — fingerprint,
     * pigeonhole candidate generation, Hamming verify — is gated by a
-    * SQL oracle. xxhash64-based `simhashEval` remains the production
-    * default (full 64 bits, cheaper per feature).
+    * SQL oracle.
     */
   def simhashPolyEval(s: UTF8String): Long = {
     val str = s.toString.toLowerCase(java.util.Locale.ROOT)
@@ -155,8 +126,8 @@ object TextHashExprs {
         b += 1
       }
     }
-    // char polynomial over "tokA tokB" (the word-bigram feature — see
-    // simhashEval for why bigrams, not single tokens), then mix30
+    // char polynomial over "tokA tokB" (the word-bigram feature),
+    // then mix30
     def featHash(s1: Int, e1: Int, s2: Int, e2: Int): Long = {
       var h1 = 0L
       var h2 = 0L
@@ -317,12 +288,12 @@ object TextHashExprs {
     * lowercase, then maximal runs of non-`\s` chars where `\s` is the
     * JAVA REGEX class [ \t\n\x0B\f\r] — NOT Character.isWhitespace,
     * which is wider and would drift from split(lower(c), "\\s+") and
-    * from DuckDB's string_split_regex('\s+'). It lowercases with
+    * from the oracle's `TextHashes.wordTokensSql`. It lowercases with
     * `Locale.ROOT`, so equality with Spark's `lower` (which uses the
     * JVM default locale) relies on the en_US locale pinned in build.sbt.
     *
     * `joinFallback` pins the under-n-tokens rule the two HOF families
-    * use: false → empty array (LmFilter.bigrams/trigrams, Rouge);
+    * use: false → empty array (LmFilter, Rouge);
     * true → one gram = all tokens joined by ' ' (Dsir's
     * array(array_join(toks, ' ')) — [""] on a token-free document).
     */
@@ -559,24 +530,6 @@ object TextHashExprs {
       copy(child = c)
   }
 
-  /** 64-bit SimHash: each bit of each token hash votes ±1; the
-    * fingerprint bit is the tally's sign. One pass over tokens.
-    */
-  case class SimHash64(child: Expression)
-      extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def prettyName: String = "graft_simhash64"
-
-    override protected def nullSafeEval(input: Any): Any =
-      simhashEval(input.asInstanceOf[UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$Helper.simhashEval($c)")
-
-    override protected def withNewChildInternal(c: Expression): SimHash64 =
-      copy(child = c)
-  }
-
   /** SimHash over polynomial token hashes (see simhashPolyEval) —
     * the oracle-computable fingerprint variant.
     */
@@ -607,9 +560,6 @@ object TextHashes {
   def minhashSignature(hashedSet: Column, numHashes: Int): Column =
     column(MinHashSignature(expression(hashedSet), numHashes))
 
-  def simhash64(text: Column): Column =
-    column(SimHash64(expression(text)))
-
   def simhashPoly64(text: Column): Column =
     column(SimHashPoly64(expression(text)))
 
@@ -621,6 +571,14 @@ object TextHashes {
     * true → all tokens joined as one gram — the Dsir fallback). */
   def wordNgrams(text: Column, n: Int, joinFallback: Boolean = false): Column =
     column(TextHashExprs.WordNgrams(expression(text), n, joinFallback))
+
+  /** DuckDB restatement of `wordNgrams(text, 1)` — the one place the
+    * oracle SQL tokenizes: the lowercase tokens of the SQL expression
+    * `text` as a list, in order, empty tokens dropped. RE2's `\s` lacks
+    * the vertical tab that Java's `\s` (and [[wordNgramsEval]]) has,
+    * hence `[\s\v]`. */
+  def wordTokensSql(text: String): String =
+    s"list_filter(string_split_regex(lower($text), '[\\s\\v]+'), x -> x <> '')"
 
   /** Exact Jaccard of two sorted-distinct long arrays (one merge
     * pass; equals size(array_intersect)/size(array_union) on such

@@ -280,7 +280,8 @@ object VectorExprs {
   }
 }
 
-/** Column wrappers; used by VectorOps when the fast path applies. */
+/** Column wrappers for the fused vector kernels above — the one
+  * implementation of cosine, sign codes and centroid assignment. */
 object VectorColumns {
   import org.apache.spark.sql.GraftSqlBridge.{column, expression}
   import VectorExprs._

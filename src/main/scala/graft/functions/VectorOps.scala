@@ -9,18 +9,16 @@ import org.apache.spark.sql.functions._
   *
   * The reference stores embeddings opaquely; similarity math is a
   * mandated graft addition for training-data pipelines (ANN /
-  * near-dup over `embeddings.parquet`).
+  * near-dup over `embeddings.parquet`). Cosine and sign codes are the
+  * fused kernels in [[VectorColumns]]; this object keeps the dot
+  * product `RandomProjection` composes, and the hyperplane and
+  * banding helpers around the sign codes.
   */
 object VectorOps {
 
   /** Σ aᵢ·bᵢ — one fused pass over the two arrays. */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Cosine similarity; NaN on zero vectors (callers filter). */
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   /** Deterministic pseudo-random Gaussian hyperplanes (fixed seed so
     * every executor and every run agrees without shipping state).
@@ -29,15 +27,6 @@ object VectorOps {
     val rnd = new scala.util.Random(seed)
     Seq.fill(h)(Seq.fill(dim)(rnd.nextGaussian()))
   }
-
-  /** Random-hyperplane LSH code: bit i of the result is set when
-    * dot(v, planeᵢ) ≥ 0. For unit-ish vectors, P[bit differs] =
-    * angle/π — Hamming distance on codes estimates cosine distance.
-    */
-  def signCode(v: Column, planes: Seq[Seq[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      when(dot(v, typedlit(p)) >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _) // disjoint bits: sum == bitwise OR, no overflow
 
   /** Split an h-bit code into `bands` equal chunks as an array of
     * (band_id, band_val) structs — the LSH OR-amplification step:

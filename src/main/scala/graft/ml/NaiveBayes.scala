@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextHashes
 import graft.plans.Plans.barrier
 
 /** Multinomial Naive Bayes text classifier — the fastText-style
@@ -33,9 +34,6 @@ import graft.plans.Plans.barrier
   */
 object NaiveBayes {
 
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "\\s+"), t => length(t) > 0)
-
   /** Train on `train` (binary 0/1 `labelCol`) and score `test`:
     * returns (idCol, label, n_tokens, margin_mu, pred) where
     * margin_mu = (logP₁ − logP₀)·1e6 as an exact BIGINT and
@@ -51,7 +49,7 @@ object NaiveBayes {
     // one materialized pass: token-class counts feed the join AND
     // both per-class token totals
     val tokCounts = barrier(train
-      .select(lbl.as("y"), explode(toks(col(textCol))).as("w"))
+      .select(lbl.as("y"), explode(TextHashes.wordNgrams(col(textCol), 1)).as("w"))
       .groupBy("w")
       .agg(sum(when(col("y") === 1, 1L).otherwise(0L)).as("c_t1"),
         sum(when(col("y") === 0, 1L).otherwise(0L)).as("c_t0")))
@@ -72,7 +70,7 @@ object NaiveBayes {
 
     test
       .select(col(idCol), lbl.as("label"),
-        explode(toks(col(textCol))).as("w"))
+        explode(TextHashes.wordNgrams(col(textCol), 1)).as("w"))
       .join(tokCounts, Seq("w"), "left")
       .crossJoin(broadcast(scalars))
       .groupBy(col(idCol), col("label"))
@@ -91,10 +89,9 @@ object NaiveBayes {
     * `nbtrain(id, text, label01)` / `nbtest(id, text, label01)`;
     * ends in `nb_out(id, label, n_tokens, margin_mu, pred)`. */
   def trainScoreSql: String =
-    """nbtok AS (
+    s"""nbtok AS (
       |  SELECT id, label01,
-      |    list_filter(string_split_regex(lower(text), '\s+'),
-      |      x -> x <> '') AS t
+      |    ${TextHashes.wordTokensSql("text")} AS t
       |  FROM nbtrain
       |), nbcounts AS (
       |  SELECT w,
@@ -110,8 +107,7 @@ object NaiveBayes {
       |  FROM nbcounts
       |), nbtest_tok AS (
       |  SELECT id, label01, unnest(
-      |    list_filter(string_split_regex(lower(text), '\s+'),
-      |      x -> x <> '')) AS w
+      |    ${TextHashes.wordTokensSql("text")}) AS w
       |  FROM nbtest
       |), nbterms AS (
       |  SELECT s.id, s.label01,

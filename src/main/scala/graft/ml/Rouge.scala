@@ -3,6 +3,8 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextHashes
+
 /** ROUGE-N overlap scoring between paired texts (Lin 2004) — the
   * summarization/generation eval every synthetic-data pipeline runs
   * between a model output and its reference (and the dedup-adjacent
@@ -250,8 +252,7 @@ object Rouge {
                   if (j == 0) "t[i]" else s"t[i+$j]")
                   .mkString(" || ' ' || ")})) AS gram
          |  FROM (SELECT pair_id,
-         |      list_filter(string_split_regex(lower(text), '\\s+'),
-         |        x -> x <> '') AS t
+         |      ${TextHashes.wordTokensSql("text")} AS t
          |    FROM $rel) WHERE len(t) >= $n""".stripMargin
     s"""cg AS (
        |  SELECT pair_id, gram, CAST(count(*) AS BIGINT) AS c_cand

@@ -68,11 +68,8 @@ object SchemaContract {
     */
   def applyTypes(target: Map[String, DataType], incoming: DataFrame, mode: Mode): DataFrame = {
     val casts = target.toSeq.filter { case (c, _) => incoming.columns.contains(c) }
-    if (casts.isEmpty || mode == Evolve) return incoming
-
-    def failed(c: String, dt: DataType): Column =
-      col(c).isNotNull && tryCast(c, dt).isNull
-    val anyFailed = casts.map { case (c, dt) => failed(c, dt) }.reduce(_ || _)
+    if (casts.isEmpty) return incoming
+    val anyFailed = casts.map { case (c, dt) => castFailed(c, dt) }.reduce(_ || _)
 
     mode match {
       case Evolve => incoming

@@ -104,20 +104,6 @@ object Snapshot {
     }
   }
 
-  /** Point-in-time read of an SCD2 history — "the table AS OF `at`"
-    * (the lakehouse TIMESTAMP-AS-OF primitive, answered from the
-    * history the snapshot strategies build; the reference's dbt
-    * snapshots, datanika `services/dbt_project.py:529-580`, exist
-    * precisely to answer this question). One row per key whose
-    * validity interval contains `at`: `valid_from <= at < valid_to`,
-    * open rows (`valid_to IS NULL`) unbounded on the right. Keys
-    * first seen after `at` are absent — the table didn't hold them
-    * then.
-    *
-    * Scale shape: a pure scan-level predicate — no shuffle, no join;
-    * on a partitioned/sorted history (e.g. Z-ordered on valid_from)
-    * it prunes to the files overlapping `at`.
-    */
   /** SCD TYPE 3 apply — the previous-value column pattern between
     * type 1 (overwrite, q05) and type 2 (full history, [[timestamp]]/
     * [[check]]): the dimension keeps ONE step of history inline
@@ -156,6 +142,20 @@ object Snapshot {
           .otherwise(lit(null)).as("prev_value")): _*)
   }
 
+  /** Point-in-time read of an SCD2 history — "the table AS OF `at`"
+    * (the lakehouse TIMESTAMP-AS-OF primitive, answered from the
+    * history the snapshot strategies build; the reference's dbt
+    * snapshots, datanika `services/dbt_project.py:529-580`, exist
+    * precisely to answer this question). One row per key whose
+    * validity interval contains `at`: `valid_from <= at < valid_to`,
+    * open rows (`valid_to IS NULL`) unbounded on the right. Keys
+    * first seen after `at` are absent — the table didn't hold them
+    * then.
+    *
+    * Scale shape: a pure scan-level predicate — no shuffle, no join;
+    * on a partitioned/sorted history (e.g. Z-ordered on valid_from)
+    * it prunes to the files overlapping `at`.
+    */
   def asOf(history: DataFrame, at: Column): DataFrame =
     history.filter(col(ValidFrom) <= at &&
       (col(ValidTo).isNull || col(ValidTo) > at))

@@ -32,38 +32,12 @@ object Plans {
     * AQE, building the barrier already runs the upstream shuffle
     * stages (see `SkewReport.topKeys`).
     */
-  def barrier(df: DataFrame): DataFrame =
-    if (explainMode) df else df.localCheckpoint(eager = false)
+  def barrier(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
 
   /** Eager barrier: computes the rows NOW, before the caller goes on —
     * for results that must not be re-read later, such as a source
     * served by a fixture that stops when the function returns, or a
-    * probe taken before the data it reads is rewritten. Unaffected by
-    * [[explainMode]]: skipping it would change what the query returns.
+    * probe taken before the data it reads is rewritten.
     */
   def materialize(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
-
-  /** DIAGNOSTIC ONLY (graft.tools.PlanDump): a localCheckpoint cuts
-    * `explain` at the barrier — the dumped plan shows `Scan
-    * ExistingRDD` instead of the upstream pipeline. Setting this
-    * makes [[barrier]] the identity so a plan dump shows the WHOLE
-    * operator shape (the barrier is semantics-neutral: it only pins
-    * shared materialization). Never set on an executing session —
-    * self-join branches would recompute their upstream.
-    */
-  @volatile private[graft] var explainMode: Boolean = false
-
-  /** The ONLY sanctioned way to set [[explainMode]]: scopes the flag to
-    * `f` and restores the prior value even on throw, so a diagnostic
-    * dump can never leave a live session with identity barriers.
-    * Inside `f`, every [[barrier]] is the identity, but Spark actions
-    * still run — a query build's eager counts execute as usual, only
-    * without the shared materialization — and [[materialize]] still
-    * checkpoints.
-    */
-  private[graft] def withExplainMode[T](on: Boolean)(f: => T): T = {
-    val prev = explainMode
-    explainMode = on
-    try f finally explainMode = prev
-  }
 }

@@ -123,48 +123,120 @@ object Profile {
       Seq(
         percentile_approx(col(c).cast("double"), qArr, lit(accuracy))
           .as(s"${c}__a"),
-        count(col(c)).as(s"${c}__n"),
-        // bounds ride the same scan: they seed the exact harness's
-        // range buckets below for free
-        min(col(c).cast("double")).as(s"${c}__lo"),
-        max(col(c).cast("double")).as(s"${c}__hi"))
+        count(col(c)).as(s"${c}__n"))
     }
-    val (counts, first, hitsF) = overlapCounts(df, cols, qs) {
-      df.agg(pass1.head, pass1.tail: _*).head()
+    val counts = meltCounts(df, cols)
+    // the two lanes are independent: the rank-hit chain derives its
+    // bucket bounds and rank targets IN the plan from the counts
+    // slice itself ([[planHits]]), so it waits on neither the sketch
+    // scan nor the rank check that reads the sketch's values. The hit
+    // lane materializes the lazy checkpoint; the rank check reuses
+    // the checkpointed slice by RDD identity.
+    val (hits, (first, ranks)) = lanes(df.sparkSession)({
+      counts.count()
+      planHits(counts, qs).collect()
+    }) {
+      val first = df.agg(pass1.head, pass1.tail: _*).head()
+      val checks = rankChecks(first, cols, qs)
+      (first, counts.agg(checks.head, checks.tail: _*).head())
     }
-    quantilesFrom(df, counts, hitsF, cols, qs, accuracy, first)
+    val exactByQ = exactMap(hits, cols)
+
+    val rows = cols.flatMap { c =>
+      val n = first.getLong(first.fieldIndex(s"${c}__n"))
+      val tol = n.toDouble / accuracy + 1
+      qs.zipWithIndex.map { case (q, i) =>
+        val target = math.max(1L, math.ceil(q * n).toLong)
+        val exact = exactByQ(c).get(q)
+        def get(name: String) = {
+          val fi = ranks.fieldIndex(name)
+          if (ranks.isNullAt(fi)) 0L else ranks.getLong(fi)
+        }
+        val lo = get(s"${c}__lo$i") + 1 // first rank the value occupies
+        val hi = get(s"${c}__hi$i")     // last rank the value occupies
+        val ok = n > 0 && hi >= lo &&
+          target >= lo - tol && target <= hi + tol
+        (c, q, exact, ok)
+      }
+    }
+    df.sparkSession.createDataFrame(rows)
+      .toDF("column_name", "q", "exact_v", "approx_ok")
   }
 
-  /** Build the melted (cn, v, cnt) distinct-value slice, materialize
-    * it and run the whole rank-hit chain ([[planHits]]) CONCURRENTLY
-    * with the caller's scalar aggregate (guide §1.2/§2.6): the two
-    * lanes are independent — since r15 the hit chain derives its
-    * bucket bounds and rank targets IN the plan from the counts table
-    * itself (min/max/Σcnt per column are value-identical to the
-    * bounds row's min/max/count), so nothing in the exact-quantile
-    * lane waits on the sketch scan. The second driver thread
-    * materializes the lazy checkpoint and collects the hits; every
-    * later consumer (the sketch rank check) reuses the checkpointed
-    * slice by RDD identity.
-    *
-    * @return (counts ckpt, the caller's scalar row, the in-flight
-    *         hits collect — rows (cn, v, cnt, cum) whose cumulative
-    *         interval contains a rank target)
+  /** The sketch rank check's aggregates over the (cn, v, cnt) slice: a
+    * tied value occupies the rank INTERVAL [count(x < v) + 1,
+    * count(x <= v)], so the sketch honors its bound iff that interval
+    * comes within n/accuracy of the target rank (+1 for rank
+    * convention). sum(cnt) over v < a equals a full-scan sum of
+    * [x < a] row flags (nulls are absent here; NaN rows are present
+    * but NaN < a and NaN <= a are both false, contributing the same
+    * 0), so the check costs no scan of the raw table.
     */
-  private def overlapCounts(df: DataFrame, cols: Seq[String],
-      qs: Seq[Double])(firstJob: => org.apache.spark.sql.Row)
-      : (DataFrame, org.apache.spark.sql.Row,
-         scala.concurrent.Future[Array[org.apache.spark.sql.Row]]) = {
-    val counts = meltCounts(df, cols)
-    import scala.concurrent.Future
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val hitsF = Future {
-      counts.count() // materialize the ckpt once, then the hit chain
-      planHits(counts, qs).collect()
+  private def rankChecks(first: org.apache.spark.sql.Row,
+      cols: Seq[String], qs: Seq[Double]): Seq[Column] =
+    cols.flatMap { c =>
+      // an all-null column has no sketch: emit empty interval (flag false)
+      val approx = Option(first.getSeq[Any](first.fieldIndex(s"${c}__a")))
+      qs.indices.flatMap { i =>
+        approx match {
+          case Some(a) =>
+            Seq(
+              sum(when(col("cn") === c && col("v") < lit(a(i)), col("cnt"))
+                .otherwise(0L)).as(s"${c}__lo$i"),
+              sum(when(col("cn") === c && col("v") <= lit(a(i)), col("cnt"))
+                .otherwise(0L)).as(s"${c}__hi$i"))
+          case None =>
+            Seq(max(lit(0L)).as(s"${c}__lo$i"), max(lit(0L)).as(s"${c}__hi$i"))
+        }
+      }
     }
-    val first = firstJob
-    (counts, first, hitsF)
+
+  /** Runs `a` on a new driver thread and `b` on the caller's, at the
+    * same time, and returns both results. The new thread inherits the
+    * caller's local properties when it is created, so the jobs of
+    * both lanes carry the caller's job group, description and tags.
+    * Each lane also tags its own jobs: when one lane throws, the
+    * other lane's jobs are cancelled — again every 50 ms until that
+    * lane returns, so a job it starts after the first cancel goes too
+    * — and the first failure is rethrown. No job of either lane
+    * outlives the call.
+    */
+  private def lanes[A, B](spark: org.apache.spark.sql.SparkSession)(a: => A)(
+      b: => B): (A, B) = {
+    val sc = spark.sparkContext
+    val tag = s"graft-lane-${java.util.UUID.randomUUID()}"
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val bDone = new java.util.concurrent.CountDownLatch(1)
+    def cancelUntil(laneTag: String, done: => Boolean): Unit =
+      while (!done) { sc.cancelJobsWithTag(laneTag); Thread.sleep(50) }
+    @volatile var resultA: Option[A] = None
+    // created before the caller adds b's tag, so a does not inherit it
+    val threadA = new Thread(() => {
+      sc.addJobTag(s"$tag-a")
+      try resultA = Some(a)
+      catch {
+        case e: Throwable =>
+          failure.compareAndSet(null, e)
+          cancelUntil(s"$tag-b", bDone.getCount == 0)
+      }
+    }, tag)
+    threadA.setDaemon(true)
+    threadA.start()
+    sc.addJobTag(s"$tag-b")
+    val resultB =
+      try Some(b)
+      catch {
+        case e: Throwable =>
+          failure.compareAndSet(null, e)
+          None
+      } finally {
+        sc.removeJobTag(s"$tag-b")
+        bDone.countDown()
+      }
+    if (resultB.isEmpty) cancelUntil(s"$tag-a", !threadA.isAlive)
+    threadA.join()
+    Option(failure.get).foreach(e => throw e)
+    (resultA.get, resultB.get)
   }
 
   /** The barrier'd (cn, v, cnt) distinct-value slice of `cols`, one
@@ -280,121 +352,5 @@ object Profile {
     val rows = cols.flatMap(c => qs.map(q => (c, q, byQ(c).get(q))))
     df.sparkSession.createDataFrame(rows)
       .toDF("column_name", "q", "exact_v")
-  }
-
-  /** The exact type-1 quantile harness shared by [[quantiles]] and
-    * [[exactQuantiles]]: ONE melt+aggregate pass over the table
-    * collapses rows to (column, value, count) with map-side partial
-    * aggregation FIRST (tie-dense columns shrink by orders of
-    * magnitude); the running count over each column's sorted
-    * distinct values is a TWO-PHASE prefix sum — NOT a window
-    * partitioned only by column, which would sort every distinct
-    * value of a high-cardinality column in one reducer (the classic
-    * 100×-scale killer): values range-bucket on fixed bounds from
-    * the caller's bounds row, per-(column,bucket) subtotal prefix
-    * sums fold on the driver (≤ cols·nBuckets scalars), and the
-    * within-bucket running sum is a window partitioned by
-    * (column, bucket) — every bucket sorts in parallel. The element
-    * at target rank t is the value whose cumulative interval
-    * (cum-cnt, cum] contains t.
-    *
-    * r15 shape (guide §1.2 — remove passes first): the (cn, v, cnt)
-    * table materializes ONCE (barrier) and feeds all three consumers
-    * — the bucket subtotals, the ranked window, and [[quantiles]]'s
-    * sketch rank check — where the r14 shape paid a separate
-    * full-table scan for each. Bucket assignment moved AFTER the
-    * aggregate: the bucket is a pure function of (cn, v), so
-    * post-aggregation assignment is value-identical but runs on the
-    * collapsed distinct values, not every row.
-    *
-    * @param counts the barrier'd (cn, v, cnt) distinct-value table
-    *        from [[overlapCounts]]
-    * @param hitsF the in-flight [[planHits]] collect from
-    *        [[overlapCounts]] — already running concurrently with
-    *        the caller's bounds/sketch scan
-    * @return (exact value per (column, q), the extra-aggs scalar row)
-    */
-  private def exactTypeOne(counts: DataFrame,
-      hitsF: scala.concurrent.Future[Array[org.apache.spark.sql.Row]],
-      cols: Seq[String],
-      extraAggs: Seq[Column] = Nil)
-      : (Map[String, Map[Double, Double]],
-         Option[org.apache.spark.sql.Row]) = {
-    // the caller's scalar aggregates over `counts` (the sketch rank
-    // check) run as ANOTHER concurrent job on the checkpointed slice
-    // (r15, guide §1.2/§2.6) while the hit chain's collect is still
-    // in flight — the r14 shape chained broadcast-exchange job →
-    // crossJoin → collect serially behind the sketch scan.
-    val scalarsF =
-      if (extraAggs.isEmpty) None
-      else {
-        import scala.concurrent.{ExecutionContext, Future}
-        Some(Future {
-          counts.agg(extraAggs.head, extraAggs.tail: _*).head()
-        }(ExecutionContext.global))
-      }
-    import scala.concurrent.Await
-    import scala.concurrent.duration.Duration
-    val hitsRaw = Await.result(hitsF, Duration.Inf)
-    val ranks = scalarsF.map(Await.result(_, Duration.Inf))
-    (exactMap(hitsRaw, cols), ranks)
-  }
-
-  private def quantilesFrom(df: DataFrame, counts: DataFrame,
-      hitsF: scala.concurrent.Future[Array[org.apache.spark.sql.Row]],
-      cols: Seq[String], qs: Seq[Double], accuracy: Int,
-      first: org.apache.spark.sql.Row): DataFrame = {
-
-    // rank check: a tied value occupies the rank INTERVAL
-    // [count(x < v) + 1, count(x <= v)], so the sketch honors its
-    // bound iff that interval comes within n/accuracy of the target
-    // rank (+1 for rank convention). Since r15 the counting runs on
-    // the barrier'd (cn, v, cnt) DISTINCT-VALUE table the exact
-    // harness already built — sum(cnt) over v < a equals the old
-    // full-scan sum of [x < a] row flags (nulls are absent here;
-    // NaN rows are present but NaN < a and NaN <= a are both false,
-    // contributing the same 0) — so the fourth full-table scan this
-    // method used to pay is gone (guide §1.2: remove passes before
-    // tuning them), and the scalars run concurrently with the hit
-    // chain's collect.
-    val checks = cols.flatMap { c =>
-      // an all-null column has no sketch: emit empty interval (flag false)
-      val approx = Option(first.getSeq[Any](first.fieldIndex(s"${c}__a")))
-      qs.indices.flatMap { i =>
-        approx match {
-          case Some(a) =>
-            Seq(
-              sum(when(col("cn") === c && col("v") < lit(a(i)), col("cnt"))
-                .otherwise(0L)).as(s"${c}__lo$i"),
-              sum(when(col("cn") === c && col("v") <= lit(a(i)), col("cnt"))
-                .otherwise(0L)).as(s"${c}__hi$i"))
-          case None =>
-            Seq(max(lit(0L)).as(s"${c}__lo$i"), max(lit(0L)).as(s"${c}__hi$i"))
-        }
-      }
-    }
-    val (exactByQ, ranksOpt) =
-      exactTypeOne(counts, hitsF, cols, extraAggs = checks)
-    val ranks = ranksOpt.get
-
-    val rows = cols.flatMap { c =>
-      val n = first.getLong(first.fieldIndex(s"${c}__n"))
-      val tol = n.toDouble / accuracy + 1
-      qs.zipWithIndex.map { case (q, i) =>
-        val target = math.max(1L, math.ceil(q * n).toLong)
-        val exact = exactByQ(c).get(q)
-        def get(name: String) = {
-          val fi = ranks.fieldIndex(name)
-          if (ranks.isNullAt(fi)) 0L else ranks.getLong(fi)
-        }
-        val lo = get(s"${c}__lo$i") + 1 // first rank the value occupies
-        val hi = get(s"${c}__hi$i")     // last rank the value occupies
-        val ok = n > 0 && hi >= lo &&
-          target >= lo - tol && target <= hi + tol
-        (c, q, exact, ok)
-      }
-    }
-    df.sparkSession.createDataFrame(rows)
-      .toDF("column_name", "q", "exact_v", "approx_ok")
   }
 }

@@ -201,6 +201,23 @@ object Streams {
     * path serves a batch frame (verify/oracle, q79) and a
     * readStream/MemoryStream input (StreamsSpec parity + late-drop).
     */
+  def decontaminateStream(
+      docs: DataFrame,
+      evalGrams: DataFrame,
+      nGram: Int = 4,
+      minShared: Int = 1): DataFrame = {
+    val trainGrams = docs.select(col("train_id"), col("event_time"),
+      explode(graft.functions.TextHashes.wordShingleHashes(col("text"), nGram))
+        .as("gram"))
+    trainGrams
+      .join(broadcast(evalGrams), "gram")
+      .groupBy(window(col("event_time"), "1 hour"),
+        col("train_id"), col("eval_id"))
+      .agg(count(lit(1)).as("n_shared"))
+      .filter(col("n_shared") >= minShared)
+      .select("train_id", "eval_id", "n_shared")
+  }
+
   // --- streaming funnel (incremental twin of q95) ---
 
   /** One event: `step` is the 0-based index of the matched funnel
@@ -308,22 +325,5 @@ object Streams {
           state.update(st)
           UpsertOut(user, st.eid, st.et, st.n)
       }
-  }
-
-  def decontaminateStream(
-      docs: DataFrame,
-      evalGrams: DataFrame,
-      nGram: Int = 4,
-      minShared: Int = 1): DataFrame = {
-    val trainGrams = docs.select(col("train_id"), col("event_time"),
-      explode(graft.functions.TextHashes.wordShingleHashes(col("text"), nGram))
-        .as("gram"))
-    trainGrams
-      .join(broadcast(evalGrams), "gram")
-      .groupBy(window(col("event_time"), "1 hour"),
-        col("train_id"), col("eval_id"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-      .select("train_id", "eval_id", "n_shared")
   }
 }

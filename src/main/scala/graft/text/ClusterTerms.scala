@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextHashes
+
 /** Cluster labeling by distinguishing terms (the BERTopic/c-TF-IDF
   * recipe, Grootendorst 2022: embeddings cluster the corpus — q150's
   * k-means — and the clusters get human-readable labels from the
@@ -32,8 +34,7 @@ object ClusterTerms {
       topK: Int): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     val toks = docs.select(col(clCol).as("cl"),
-      explode(filter(split(lower(col(textCol)), "\\s+"), t => t =!= ""))
-        .as("w"))
+      explode(TextHashes.wordNgrams(col(textCol), 1)).as("w"))
     val tf = graft.plans.Plans.barrier(
       toks.groupBy("cl", "w").agg(count(lit(1)).as("tf")))
     val mass = tf.groupBy("cl").agg(sum(col("tf")).as("m"))

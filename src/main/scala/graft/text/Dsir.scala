@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextHashes
+
 /** DSIR-style importance weighting (Xie et al. 2023, "Data Selection
   * for Language Models via Importance Resampling", arXiv:2302.03169):
   * score every corpus doc by how much its word-bigram distribution
@@ -263,8 +265,7 @@ object Dsir {
        |         ELSE list_transform(range(1, len(t)),
        |           i -> t[i] || ' ' || t[i+1])
        |    END) AS g
-       |  FROM (SELECT ${idSel}list_filter(
-       |          string_split_regex(lower(text), '\\s+'), x -> x <> '') AS t
+       |  FROM (SELECT ${idSel}${TextHashes.wordTokensSql("text")} AS t
        |        FROM ($src))""".stripMargin
   }
 

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextHashes
+
 /** Hashing-trick feature vectorization census (Weinberger et al.
   * 2009 — the fixed-width bag-of-words every large-scale linear/
   * embedding baseline starts from): token → portable polynomial
@@ -32,9 +34,7 @@ object FeatureHash {
     */
   def census(docs: DataFrame, textCol: String, buckets: Int): DataFrame = {
     require(buckets >= 2, s"need >= 2 buckets: $buckets")
-    docs.select(explode(
-        filter(split(lower(col(textCol)), "\\s+"), t => length(t) > 0))
-        .as("w"))
+    docs.select(explode(TextHashes.wordNgrams(col(textCol), 1)).as("w"))
       .select(col("w"), bucketOf(col("w"), buckets).as("bucket"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_occurrences"),

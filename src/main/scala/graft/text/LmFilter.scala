@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextHashes.wordNgrams
+
 /** Language-model quality filtering, the counting-proxy variant —
   * CCNet/C4 score pages with a reference LM (KenLM perplexity) and
   * drop the worst tail; the engine-portable, integer-exact proxy for
@@ -152,9 +154,9 @@ object LmFilter {
     // barrier: `uni` feeds BOTH the vocabulary scalar and the c_a
     // join — without the cut the reference tokenize+count runs twice
     val uni = graft.plans.Plans.barrier(
-      reference.select(explode(toks(col(textCol))).as("w"))
+      reference.select(explode(wordNgrams(col(textCol), 1)).as("w"))
         .groupBy("w").agg(count(lit(1)).as("c_a")))
-    val bi0 = reference.select(explode(bigrams(col(textCol))).as("ab"))
+    val bi0 = reference.select(explode(wordNgrams(col(textCol), 2)).as("ab"))
       .groupBy("ab").agg(count(lit(1)).as("c_ab"))
     // the KN branch reads the bi table three more times (N1+/N_ctx/B)
     // — barrier it HERE so the fresh-train path computes the corpus
@@ -168,22 +170,6 @@ object LmFilter {
     }
     scoreDocs(docs, idCol, textCol, uni, bi, smoothing, hashKeys)
   }
-
-  // native codegen'd n-gram loops (graft.functions.TextHashExprs
-  // .WordNgrams) — the HOF transform/element_at forms they replace
-  // re-evaluated the token split once per OUTPUT GRAM (interpreted
-  // CodegenFallback): O(tokens²) regex work per row, measured as the
-  // dominant serial stage of every LM query at sf0.1 (r14 profile).
-  // Identical output contract: `\s+`-run tokens of lower(text);
-  // under-n documents yield an empty gram array.
-  private def toks(c: org.apache.spark.sql.Column) =
-    graft.functions.TextHashes.wordNgrams(c, 1)
-
-  private def bigrams(c: org.apache.spark.sql.Column) =
-    graft.functions.TextHashes.wordNgrams(c, 2)
-
-  private def trigrams(c: org.apache.spark.sql.Column) =
-    graft.functions.TextHashes.wordNgrams(c, 3)
 
   /** Shared scoring chain over prepared count tables `uni(w, c_a)` /
     * `bi(ab, c_ab)` — the batch-probe leg both [[bigramLogprob]]
@@ -238,7 +224,7 @@ object LmFilter {
       case _ => uni.select(key(col("w")).as("ak"), col("c_a"))
     }
     val joined0 = docs
-      .select(col(idCol), explode(bigrams(col(textCol))).as("ab"))
+      .select(col(idCol), explode(wordNgrams(col(textCol), 2)).as("ab"))
       .withColumn("a", split(col("ab"), " ").getItem(0))
       .withColumn("abk", key(col("ab")))
       .withColumn("ak", key(col("a")))
@@ -356,7 +342,7 @@ object LmFilter {
       smoothing: KneserNey,
       hashKeys: Boolean = false): DataFrame = {
     val uni = graft.plans.Plans.barrier(
-      reference.select(explode(toks(col(textCol))).as("w"))
+      reference.select(explode(wordNgrams(col(textCol), 1)).as("w"))
         .groupBy("w").agg(count(lit(1)).as("c_a")))
     // bi/tri each feed several consumers in the KN-3 chain — barrier
     // them HERE so the fresh-train path computes each corpus groupBy
@@ -364,10 +350,10 @@ object LmFilter {
     // filters (re-scanning a vocabulary-sized artifact beats a
     // checkpoint job on the critical path — r15, guide §1.2/§5)
     val bi = graft.plans.Plans.barrier(
-      reference.select(explode(bigrams(col(textCol))).as("ab"))
+      reference.select(explode(wordNgrams(col(textCol), 2)).as("ab"))
         .groupBy("ab").agg(count(lit(1)).as("c_ab")))
     val tri = graft.plans.Plans.barrier(
-      reference.select(explode(trigrams(col(textCol))).as("abc"))
+      reference.select(explode(wordNgrams(col(textCol), 3)).as("abc"))
         .groupBy("abc").agg(count(lit(1)).as("c_abc")))
     scoreDocs3(docs, idCol, textCol, uni, bi, tri, smoothing, hashKeys)
   }
@@ -415,7 +401,7 @@ object LmFilter {
       .groupBy("c2").agg(count(lit(1)).as("nctx2"))
       .select(key(col("c2")).as("ck"), col("nctx2"))
     val joined = docs
-      .select(col(idCol), explode(trigrams(col(textCol))).as("abc"))
+      .select(col(idCol), explode(wordNgrams(col(textCol), 3)).as("abc"))
       .withColumn("p", split(col("abc"), " "))
       .withColumn("ab",
         concat(col("p").getItem(0), lit(" "), col("p").getItem(1)))
@@ -496,10 +482,10 @@ object LmFilter {
     * (ArtifactIndex.TokenRows, token). */
   def bigramLmIndex(reference: DataFrame, textCol: String,
       smoothing: Smoothing, sig: (Long, Long)): DataFrame = {
-    val uni = reference.select(explode(toks(col(textCol))).as("g"))
+    val uni = reference.select(explode(wordNgrams(col(textCol), 1)).as("g"))
       .groupBy("g").agg(count(lit(1)).as("c"))
       .withColumn("kind", lit("uni"))
-    val bi = reference.select(explode(bigrams(col(textCol))).as("g"))
+    val bi = reference.select(explode(wordNgrams(col(textCol), 2)).as("g"))
       .groupBy("g").agg(count(lit(1)).as("c"))
       .withColumn("kind", lit("bi"))
     val fp = sig
@@ -527,13 +513,13 @@ object LmFilter {
     * caller — the freshness seam, exactly [[bigramLmIndex]]'s. */
   def trigramLmIndex(reference: DataFrame, textCol: String,
       smoothing: KneserNey, sig: (Long, Long)): DataFrame = {
-    val uni = reference.select(explode(toks(col(textCol))).as("g"))
+    val uni = reference.select(explode(wordNgrams(col(textCol), 1)).as("g"))
       .groupBy("g").agg(count(lit(1)).as("c"))
       .withColumn("kind", lit("uni"))
-    val bi = reference.select(explode(bigrams(col(textCol))).as("g"))
+    val bi = reference.select(explode(wordNgrams(col(textCol), 2)).as("g"))
       .groupBy("g").agg(count(lit(1)).as("c"))
       .withColumn("kind", lit("bi"))
-    val tri = reference.select(explode(trigrams(col(textCol))).as("g"))
+    val tri = reference.select(explode(wordNgrams(col(textCol), 3)).as("g"))
       .groupBy("g").agg(count(lit(1)).as("c"))
       .withColumn("kind", lit("tri"))
     uni.unionByName(bi).unionByName(tri)

@@ -1,8 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.functions.TextHashes
 
 /** Unigram negative-sampling table (word2vec's f^{3/4} distribution,
   * Mikolov 2013) — the smoothed-frequency draw table every
@@ -24,14 +25,11 @@ import org.apache.spark.sql.functions._
   */
 object NegSampling {
 
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "\\s+"), t => length(t) > 0)
-
   /** Build the table over `textCol`; report the top `k` tokens by
     * (frequency DESC, token). Returns (token, f, weight, share). */
   def table(docs: DataFrame, textCol: String, k: Int): DataFrame = {
     val freq = docs
-      .select(explode(toks(col(textCol))).as("token"))
+      .select(explode(TextHashes.wordNgrams(col(textCol), 1)).as("token"))
       .groupBy("token").agg(count(lit(1)).as("f"))
       .withColumn("weight",
         round(sqrt(sqrt((col("f") * col("f") * col("f"))
@@ -56,9 +54,7 @@ object NegSampling {
   def tableSql(rel: String, k: Int): String =
     s"""neg_freq AS (
        |  SELECT token, CAST(count(*) AS BIGINT) AS f
-       |  FROM (SELECT unnest(list_filter(
-       |      string_split_regex(lower(text), '\\s+'),
-       |      x -> x <> '')) AS token FROM $rel)
+       |  FROM (SELECT unnest(${TextHashes.wordTokensSql("text")}) AS token FROM $rel)
        |  GROUP BY token
        |), neg_w AS (
        |  SELECT token, f,

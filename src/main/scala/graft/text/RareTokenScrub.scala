@@ -1,8 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.functions.TextHashes
 
 /** Rare-token scrubbing — drop tokens whose DOCUMENT frequency is
   * below a floor and reconstruct the text: the memorization-
@@ -24,9 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object RareTokenScrub {
 
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "\\s+"), t => length(t) > 0)
-
   /** Scrub tokens with df < `minDf` from `textCol`. Returns
     * (idCol, n_kept, n_scrubbed, scrubbed_text). */
   def scrub(
@@ -35,7 +33,7 @@ object RareTokenScrub {
       textCol: String,
       minDf: Int = 2): DataFrame = {
     val exploded = docs.select(col(idCol),
-      posexplode(toks(col(textCol))).as(Seq("pos", "token")))
+      posexplode(TextHashes.wordNgrams(col(textCol), 1)).as(Seq("pos", "token")))
     val df = exploded.groupBy("token")
       .agg(count_distinct(col(idCol)).as("df"))
     exploded.join(df, Seq("token"))
@@ -54,12 +52,8 @@ object RareTokenScrub {
   def scrubSql(minDf: Int = 2): String =
     s"""sc_tok AS (
        |  SELECT id, t.pos, t.token FROM (
-       |    SELECT id, unnest(list_filter(
-       |        string_split_regex(lower(text), '\\s+'),
-       |        x -> x <> '')) AS token,
-       |      unnest(range(1, len(list_filter(
-       |        string_split_regex(lower(text), '\\s+'),
-       |        x -> x <> '')) + 1)) AS pos
+       |    SELECT id, unnest(${TextHashes.wordTokensSql("text")}) AS token,
+       |      unnest(range(1, len(${TextHashes.wordTokensSql("text")}) + 1)) AS pos
        |    FROM sc_docs) t
        |), sc_df AS (
        |  SELECT token, CAST(count(DISTINCT id) AS BIGINT) AS df

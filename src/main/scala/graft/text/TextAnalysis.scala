@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextHashes
+
 /** Text analysis for LLM data pipelines: language ID, quality
   * scoring, token counting, fingerprinting. All pure `functions._`
   * compositions (codegen'd, no UDFs), and all expressible in ANSI-ish
@@ -48,35 +50,6 @@ object TextAnalysis {
 
   def langScore(text: Column, markers: Seq[String]): Column =
     markers.map(m => substrCount(padded(text), m)).reduce(_ + _)
-
-  /** argmax over per-language score columns; ties break
-    * alphabetically, zero everywhere → "und". Expressed as a CASE
-    * chain so the DuckDB oracle states the exact same decision
-    * procedure. Each language's score expression appears ~2·|langs|
-    * times in the chain, so callers on a hot path should materialize
-    * the scores as columns first (`score = col("s_" + lang)`) behind
-    * a plan barrier — CollapseProject otherwise re-inlines them.
-    */
-  def predictedFromScores(score: String => Column): Column = {
-    val scores = LangMarkers.map { case (l, _) => l -> score(l) }
-    val zero = scores.map(_._2).reduce(_ + _) === 0
-    val cases = scores.zipWithIndex.map { case ((l, s), i) =>
-      val beatsAll = scores.zipWithIndex.collect {
-        case ((_, o), j) if j != i => if (j < i) s > o else s >= o
-      }.reduce(_ && _)
-      (l, beatsAll)
-    }
-    cases.foldRight(lit("und")) { case ((l, cond), e) => when(cond, lit(l)).otherwise(e) }
-      .pipe(c => when(zero, lit("und")).otherwise(c))
-  }
-
-  /** One-expression form (scores inlined — fine off the hot path). */
-  def predictedLang(text: Column): Column =
-    predictedFromScores(l => langScore(text, LangMarkers.toMap.apply(l)))
-
-  private implicit class Pipe[A](private val a: A) {
-    def pipe[B](f: A => B): B = f(a)
-  }
 
   // ------------------------------------------------------------
   // quality score (q30)
@@ -152,19 +125,11 @@ object TextAnalysis {
         expr("percentile(__tok, 0.95)").as("p95_tokens"),
         (sum(col("__q")).cast("double") / count(lit(1))).as("avg_quality"))
 
-  /** Word bigrams of single-space text — occurrence rows (not
-    * per-doc distinct), for frequency profiling. Native expression
-    * (graft.functions.TextHashExprs.WordBigrams); same strings as
-    * the transform/concat_ws HOF form.
-    */
-  def wordBigrams(text: Column): Column =
-    graft.functions.TextHashes.wordBigrams(text)
-
   /** Top-k n-grams by raw occurrence count, ties broken by gram text
     * so the cut at rank k is deterministic.
     */
   def topNgrams(docs: org.apache.spark.sql.DataFrame, textCol: String, k: Int): org.apache.spark.sql.DataFrame =
-    docs.select(explode(wordBigrams(col(textCol))).as("gram"))
+    docs.select(explode(TextHashes.wordBigrams(col(textCol))).as("gram"))
       .groupBy("gram").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("gram"))
       .limit(k)
@@ -173,22 +138,17 @@ object TextAnalysis {
   // repetition scoring (q65) — Gopher-style repetition rule
   // ------------------------------------------------------------
 
-  /** Highest multiplicity among a doc's word bigrams, computed
-    * per-row (no shuffle, unlike the explode+groupBy formulation, so
-    * scoring 100 TB of docs is pure map-side work). Native fused
-    * hash-count loop (`TextHashExprs.BigramMaxMultiplicity`).
-    */
-  def maxBigramMultiplicity(text: Column): Column =
-    graft.functions.TextHashes.bigramMaxMultiplicity(text)
-
   /** Fraction of bigram occurrences taken by the single most-repeated
     * bigram — the cheap repetition filter (a doc whose top 2-gram
     * covers >10–20% of it is boilerplate/spam under Gopher rules).
+    * The max multiplicity is one per-row native hash-count loop (no
+    * shuffle, unlike the explode+groupBy formulation, so scoring
+    * 100 TB of docs is pure map-side work).
     */
   def repetitionRatio(text: Column): Column = {
-    val n = size(wordBigrams(text))
+    val n = size(TextHashes.wordBigrams(text))
     when(n === 0, lit(0.0))
-      .otherwise(maxBigramMultiplicity(text).cast("double") / n)
+      .otherwise(TextHashes.bigramMaxMultiplicity(text).cast("double") / n)
   }
 
   // ------------------------------------------------------------

@@ -1,7 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.functions.TextHashes
 
 /** Vocabulary coverage curve — "how much of the corpus does a top-K
   * vocabulary cover": the tokenizer-budget design tool (pick the
@@ -27,15 +29,12 @@ import org.apache.spark.sql.functions._
   */
 object VocabCoverage {
 
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "\\s+"), t => length(t) > 0)
-
   /** Coverage at each cutoff over `textCol`. Returns
     * (vocab_k, n_types, covered_occ, total_occ, coverage, oov_rate). */
   def curve(docs: DataFrame, textCol: String, cutoffs: Seq[Int])
       : DataFrame = {
     require(cutoffs.nonEmpty && cutoffs == cutoffs.sorted)
-    val freq = docs.select(explode(toks(col(textCol))).as("token"))
+    val freq = docs.select(explode(TextHashes.wordNgrams(col(textCol), 1)).as("token"))
       .groupBy("token").agg(count(lit(1)).as("f"))
     val bucketed = graft.ops.PrefixSum.rangeBucket(
       freq, col("f"), 256, "__vb")
@@ -90,9 +89,7 @@ object VocabCoverage {
     }.mkString("\n  UNION ALL ")
     s"""vc_freq AS (
        |  SELECT token, CAST(count(*) AS BIGINT) AS f
-       |  FROM (SELECT unnest(list_filter(
-       |      string_split_regex(lower(text), '\\s+'),
-       |      x -> x <> '')) AS token FROM vc_docs)
+       |  FROM (SELECT unnest(${TextHashes.wordTokensSql("text")}) AS token FROM vc_docs)
        |  GROUP BY token
        |), vc_ranked AS (
        |  SELECT f,

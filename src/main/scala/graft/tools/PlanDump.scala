@@ -18,24 +18,14 @@ object PlanDump {
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_OUT", "plans/r14")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
     val spark = graft.Runner.session(sfDir, "ERROR")
-    // SPARK_GRAFT_PLAN_NOBARRIER=1 dumps the FULL operator shape:
-    // barriers (localCheckpoint) otherwise cut explain at `Scan
-    // ExistingRDD`, hiding everything upstream of the cut. The
-    // barrier is semantics-neutral, so the no-barrier plan is the
-    // executed plan with the cuts inlined.
-    val noBarrier = sys.env.get("SPARK_GRAFT_PLAN_NOBARRIER").contains("1")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    // explainMode is scoped (ADVICE r14): restored even on throw, so
-    // no session can outlive a dump with identity barriers
-    graft.plans.Plans.withExplainMode(noBarrier) {
-      graft.Runner.select(args.mkString(",")).foreach { name =>
-        graft.Runner.run(spark, sfDir, name, "plandump") { df =>
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
-          println(s"[plandump] $name -> $outDir/${name}_$suffix.txt")
-        }
+    graft.Runner.select(args.mkString(",")).foreach { name =>
+      graft.Runner.run(spark, sfDir, name, "plandump") { df =>
+        val plan = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
+        println(s"[plandump] $name -> $outDir/${name}_$suffix.txt")
       }
     }
     spark.stop()

@@ -47,11 +47,26 @@ object StageProfile {
         Thread.sleep(150)
         (sec, jobs.get(), stages.get(), tasks.get(), taskMs.get())
       }
-      val best = samples.minBy(_._1)
-      println(f"[profile] $name min=${best._1}%.3fs jobs=${best._2} " +
-        s"stages=${best._3} tasks=${best._4} taskTimeMs=${best._5} " +
-        s"runs=${samples.map(s => f"${s._1}%.2f").mkString(",")}")
+      println(line(name, samples))
     }
     spark.stop()
+  }
+
+  /** The `[profile]` line for one query's samples of (seconds, jobs,
+    * stages, tasks, task ms): counts and task time of the fastest
+    * sample, every sample's seconds, and — only when the samples
+    * disagree on jobs/stages/tasks — every sample's counts as
+    * `counts=jobs/stages/tasks,...` in run order, so a count that
+    * changes between runs is not hidden behind the fastest one.
+    */
+  private[tools] def line(name: String,
+      samples: Seq[(Double, Int, Int, Int, Long)]): String = {
+    val best = samples.minBy(_._1)
+    val counts = samples.map(s => s"${s._2}/${s._3}/${s._4}")
+    val perSample =
+      if (counts.distinct.size > 1) s" counts=${counts.mkString(",")}" else ""
+    f"[profile] $name min=${best._1}%.3fs jobs=${best._2} " +
+      s"stages=${best._3} tasks=${best._4} taskTimeMs=${best._5} " +
+      s"runs=${samples.map(s => f"${s._1}%.2f").mkString(",")}$perSample"
   }
 }

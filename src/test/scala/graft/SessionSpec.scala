@@ -3,11 +3,11 @@ package graft
 class SessionSpec extends SparkSpec {
 
   describe("Session.local") {
-    it("installs GraftExtensions: graft_simhash64 resolves without register") {
+    it("installs GraftExtensions: graft_simhash_poly64 resolves in a new session") {
       // a new session starts from the builtin registry plus the injected
-      // extensions, so functions register() added elsewhere are absent
+      // extensions, so only the extensions can supply it
       val fresh = spark.newSession()
-      fresh.sql("SELECT graft_simhash64('a b c') = graft_simhash64('a b c')")
+      fresh.sql("SELECT graft_simhash_poly64('a b c') = graft_simhash_poly64('a b c')")
         .head().getBoolean(0) shouldBe true
     }
     it("runs in UTC with shuffle.partitions = cpus") {

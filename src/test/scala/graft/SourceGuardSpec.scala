@@ -16,7 +16,12 @@ import org.scalatest.matchers.should.Matchers
   * commits and the q63 seed fixture). KLL and theta sketches are
   * Spark's own functions: no `src/main` file touches DataSketches'
   * theta classes, and only `SketchAgg` (for its rank-error bound) its
-  * KLL ones. Comment lines are ignored; code is not.
+  * KLL ones. Text kernels have one implementation each: every
+  * lowercase `\s+` token array is the native `TextHashes.wordNgrams`
+  * and every DuckDB restatement of it is `TextHashes.wordTokensSql`,
+  * and the removed xxhash SimHash, imperative function registration
+  * and barrier-bypass switch stay gone. Comment lines are ignored;
+  * code is not.
   */
 class SourceGuardSpec extends AnyFunSpec with Matchers {
 
@@ -42,6 +47,10 @@ class SourceGuardSpec extends AnyFunSpec with Matchers {
   private val Rename = """\.\s*rename\s*\("""
   private val ThetaLib = """\borg\.apache\.datasketches\.theta\b"""
   private val KllLib = """\borg\.apache\.datasketches\.kll\b"""
+  private val HofTokenizer = """split\s*\(\s*lower\s*\(.*"\\\\s\+"""
+  private val SqlTokenizer = """string_split_regex\s*\(\s*lower\s*\("""
+  private val RemovedTwins =
+    """(?<![A-Za-z])(SimHash64|simhash64|registerFunction|explainMode)\b"""
 
   /** Source path relative to `src/` (with `/` separators) → code. */
   private lazy val sources: Map[String, String] = {
@@ -98,6 +107,13 @@ class SourceGuardSpec extends AnyFunSpec with Matchers {
       filesMatching(KllLib).filter(_.startsWith("main/")) shouldBe
         Set("main/scala/graft/functions/SketchAgg.scala")
     }
+    it("tokenizes text one way: the native wordNgrams in Scala, " +
+        "wordTokensSql in the oracle SQL, and keeps no kernel twins") {
+      filesMatching(HofTokenizer).filter(_.startsWith("main/")) shouldBe empty
+      filesMatching(SqlTokenizer).filter(_.startsWith("main/")) shouldBe
+        Set("main/scala/graft/functions/TextHashExprs.scala")
+      filesMatching(RemovedTwins).filter(_.startsWith("main/")) shouldBe empty
+    }
   }
 
   describe("the comment filter") {
@@ -121,6 +137,16 @@ class SourceGuardSpec extends AnyFunSpec with Matchers {
       calls.filterNot(c => found(Rename, codeLines(s"val ok = $c"))) shouldBe empty
       found(Rename, codeLines("// fs.rename(a, b)\n * fs.rename(a, b)")) shouldBe false
       found(Rename, codeLines("df.withColumnRenamed(a, b).renamed(c)")) shouldBe false
+    }
+    it("sees every tokenizer form, but not the space split or comments") {
+      val hof = Seq("filter(split(lower(c), \"\\\\s+\"), t => length(t) > 0)",
+        "split(lower(col(textCol)), \"\\\\s+\")",
+        "split( lower(col(\"text\")) , \"\\\\s+\")")
+      hof.filterNot(c => found(HofTokenizer, codeLines(s"val t = $c"))) shouldBe empty
+      found(HofTokenizer, codeLines("val t = split(lower(c), \" \")")) shouldBe false
+      val sql = "string_split_regex" + "(lower(text), '\\s+')"
+      found(SqlTokenizer, codeLines(s"  |  SELECT $sql")) shouldBe true
+      found(SqlTokenizer, codeLines(s"// $sql")) shouldBe false
     }
     it("ignores line and block comments") {
       val code = s"// $builder\n/* $main\n * $builder\n */\nval x = 1\n"

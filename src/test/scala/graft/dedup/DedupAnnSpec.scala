@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.ann.Ann
-import graft.functions.{TextHashes, VectorOps}
+import graft.functions.{TextHashes, VectorColumns}
 
 class DedupAnnSpec extends SparkSpec {
 
@@ -37,9 +37,9 @@ class DedupAnnSpec extends SparkSpec {
         .as[Array[Long]].head()
       out.length shouldBe 1
     }
-    it("simhash64 is identical for identical token streams") {
+    it("simhashPoly64 is identical for identical token streams") {
       val fps = docs(1L -> "x y z", 2L -> "X  y z")
-        .select(TextHashes.simhash64(col("text"))).as[Long].collect()
+        .select(TextHashes.simhashPoly64(col("text"))).as[Long].collect()
       fps(0) shouldBe fps(1)
     }
     it("simhashPoly64 matches independently computed golden vectors (cross-engine contract)") {
@@ -163,7 +163,7 @@ class DedupAnnSpec extends SparkSpec {
       val out = vecs.filter(col("vec_id").isin(1L, 2L))
         .crossJoin(vecs.filter(col("vec_id") === 0L)
           .select(col("embedding").as("q")))
-        .select(VectorOps.cosine(col("embedding"), col("q")).as("c"))
+        .select(VectorColumns.cosine(col("embedding"), col("q")).as("c"))
         .as[Double].collect().sorted
       out(0) shouldBe 0.0 +- 1e-6
       out(1) shouldBe 1.0 +- 1e-6

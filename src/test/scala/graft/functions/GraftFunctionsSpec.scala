@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import graft.{GraftExtensions, SparkSpec}
 
@@ -8,16 +7,15 @@ class GraftFunctionsSpec extends SparkSpec {
 
   describe("SQL registration") {
     it("registers graft_* functions usable from spark.sql") {
-      // every session already holds the injected functions, so drop one
-      // from a new session: only register can bring it back
+      // a new session starts from the builtin registry plus the
+      // injected extensions: every graft function is already there
       val fresh = spark.newSession()
       import fresh.implicits._
-      fresh.sql("DROP TEMPORARY FUNCTION graft_simhash64")
-      an[AnalysisException] should be thrownBy fresh.sql("SELECT graft_simhash64('a')")
-      GraftExtensions.register(fresh)
+      GraftExtensions.functions.map(_._1.funcName)
+        .filterNot(fresh.catalog.functionExists) shouldBe empty
       Seq("a b c d").toDF("text").createOrReplaceTempView("gfs_docs")
       val viaSql = fresh.sql(
-        """SELECT graft_simhash64(text) AS fp,
+        """SELECT graft_simhash_poly64(text) AS fp,
           |  size(graft_word_shingle_hashes(text, 2)) AS n,
           |  size(graft_minhash_signature(
           |    graft_word_shingle_hashes(text, 2), 8)) AS sig_n
@@ -25,11 +23,11 @@ class GraftFunctionsSpec extends SparkSpec {
         .as[(Long, Int, Int)].head()
       // the full registered surface resolves from SQL
       fresh.sql(
-        """SELECT graft_simhash_poly64(text), size(graft_word_bigrams(text)),
+        """SELECT size(graft_word_bigrams(text)),
           |  graft_bigram_max_mult(text), graft_lang_predict(text)
           |FROM gfs_docs""".stripMargin).collect().length shouldBe 1
       val viaColumns = Seq("a b c d").toDF("text")
-        .select(Seq(TextHashes.simhash64(col("text")).as("fp"),
+        .select(Seq(TextHashes.simhashPoly64(col("text")).as("fp"),
           org.apache.spark.sql.functions.size(
             TextHashes.wordShingleHashes(col("text"), 2)).as("n")): _*)
         .as[(Long, Int)].head()
@@ -38,7 +36,6 @@ class GraftFunctionsSpec extends SparkSpec {
       assert(viaSql._3 == 8)
     }
     it("registers graft_cosine over float and double arrays") {
-      GraftExtensions.register(spark)
       val r = spark.sql(
         """SELECT graft_cosine(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
           |  array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS same,
@@ -48,7 +45,6 @@ class GraftFunctionsSpec extends SparkSpec {
       r.getDouble(1) shouldBe 0.0 +- 1e-12
     }
     it("registers graft_mix30, matching the JVM mix and the Column form") {
-      GraftExtensions.register(spark)
       val viaSql = spark.sql(
         "SELECT graft_mix30(12345L) AS m, graft_mix30(0L) AS z").head()
       viaSql.getLong(0) shouldBe
@@ -56,7 +52,6 @@ class GraftFunctionsSpec extends SparkSpec {
       viaSql.getLong(1) shouldBe graft.functions.TextHashExprs.mix30(0L)
     }
     it("rejects a non-literal shingle size") {
-      GraftExtensions.register(spark)
       an[Exception] should be thrownBy
         spark.sql("SELECT graft_word_shingle_hashes('a', length('xx'))").collect()
     }
@@ -65,7 +60,6 @@ class GraftFunctionsSpec extends SparkSpec {
   describe("sketch family SQL surface") {
     it("KLL, heavy-hitters, and theta resolve and compute from spark.sql") {
       import spark.implicits._
-      GraftExtensions.register(spark)
       (1 to 100).map(i => (i % 4, i.toDouble, s"tok${i % 5}", i % 10))
         .toDF("g", "x", "tok", "u").createOrReplaceTempView("gfs_sk")
 
@@ -103,19 +97,19 @@ class GraftFunctionsSpec extends SparkSpec {
       val df = spark.range(1, 101)
         .select(concat(lit("tok"), col("id"), lit(" alpha beta gamma tok"),
           pmod(col("id"), lit(7))).as("text"))
-        .select(TextHashes.simhash64(col("text")).as("fp"),
+        .select(TextHashes.simhashPoly64(col("text")).as("fp"),
           TextHashes.wordShingleHashes(col("text"), 3).as("hs"))
       // the "*(n)" prefix marks operators inside a WholeStageCodegen
       // stage — the sketch projection must carry it (a CodegenFallback
       // expression would strip it from its Project)
       val plan = df.queryExecution.executedPlan.toString
-      plan.linesIterator.find(_.contains("graft_simhash64"))
+      plan.linesIterator.find(_.contains("graft_simhash_poly64"))
         .getOrElse(fail("sketch projection not found in plan"))
         .trim should startWith("*(")
       val rows = df.as[(Long, Array[Long])].collect()
       rows.length shouldBe 100
       // spot-check one row against the direct helper
-      val direct = TextHashExprs.simhashEval(
+      val direct = TextHashExprs.simhashPolyEval(
         org.apache.spark.unsafe.types.UTF8String.fromString(
           "tok1 alpha beta gamma tok1"))
       assert(rows.head._1 == direct)

@@ -69,13 +69,25 @@ class WordNgramsSpec extends SparkSpec {
       }
     }
     it("n=1 equals the exploded token stream (LmFilter.toks)") {
-      val rows = fixtures.select(
+      // the inputs the n=1 call sites (the tokenizer every operator
+      // shares) see beyond the n-gram fixtures: NULL, each Java `\s`
+      // separator alone, leading/trailing runs, non-ASCII uppercase
+      val edge = Seq[String](null, "", "\t\n\u000B\f\r ",
+        "a\tb\nc\u000Bd\fe\rf", "  lead and trail  ",
+        "ÀÉÎ ÜNÏ ΣΟΦΊΑ Straße", "z y x y z").toDF("text")
+      val rows = fixtures.union(edge).select(
         hofToks(col("text")).as("hof"),
         TextHashes.wordNgrams(col("text"), 1).as("native"))
         .collect()
       rows.foreach { r =>
         r.getSeq[String](0) shouldBe r.getSeq[String](1)
       }
+      edge.select(TextHashes.wordNgrams(col("text"), 1))
+        .as[Option[Seq[String]]].collect() shouldBe Array(
+          None, Some(Nil), Some(Nil), Some(Seq("a", "b", "c", "d", "e", "f")),
+          Some(Seq("lead", "and", "trail")),
+          Some(Seq("àéî", "ünï", "σοφία", "straße")),
+          Some(Seq("z", "y", "x", "y", "z")))
     }
     it("SortedJaccard equals size(intersect)/size(union) on sorted sets") {
       val rnd = new scala.util.Random(7)

@@ -94,4 +94,59 @@ class ProfileSpec extends SparkSpec {
       va shouldBe vb // bitwise equal, not approx
     }
   }
+
+  describe("Profile.quantiles lanes") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+
+    /** Runs `f` while recording (job id → start event) and the ids of
+      * ended jobs; returns both after letting the listener bus drain. */
+    def recordingJobs(f: => Unit)
+        : (Map[Int, SparkListenerJobStart], Set[Int]) = {
+      val started = new java.util.concurrent.ConcurrentHashMap[Int, SparkListenerJobStart]
+      val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          started.put(j.jobId, j)
+        override def onJobEnd(j: SparkListenerJobEnd): Unit =
+          ended.add(j.jobId)
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try { f; Thread.sleep(1500) }
+      finally spark.sparkContext.removeSparkListener(listener)
+      (started.asScala.toMap, ended.asScala.toSet)
+    }
+
+    it("cancels the rank-hit lane's jobs when the sketch lane throws") {
+      // ~1 s per scan, so the hit lane is still busy when the sketch
+      // aggregate fails: accuracy 0 is out of percentile_approx's
+      // range, which analysis rejects at once
+      val slow = org.apache.spark.sql.functions.udf { (x: Long) =>
+        Thread.sleep(5); x.toDouble }
+      val df = spark.range(0, 800, 1, 4)
+        .select(slow(org.apache.spark.sql.functions.col("id")).as("x"))
+      @volatile var thrownAt = Long.MaxValue
+      val (started, ended) = recordingJobs {
+        an[org.apache.spark.sql.AnalysisException] should be thrownBy
+          Profile.quantiles(df, Seq("x"), Seq(0.5), accuracy = 0)
+        thrownAt = System.currentTimeMillis()
+      }
+      started.keySet.filterNot(ended) shouldBe empty
+      started.values.filter(_.time > thrownAt).map(_.jobId) shouldBe empty
+      spark.sparkContext.statusTracker.getActiveJobIds() shouldBe empty
+    }
+    it("runs both lanes under the caller's job group") {
+      val df = (1 to 200).map(_.toDouble).toDF("x")
+      val sc = spark.sparkContext
+      val (started, _) = recordingJobs {
+        sc.setJobGroup("profile-lanes", "quantiles under a caller group")
+        try Profile.quantiles(df, Seq("x"), Seq(0.5, 0.9)).collect()
+        finally sc.clearJobGroup()
+      }
+      started should not be empty
+      started.values.map(j => Option(j.properties)
+        .map(_.getProperty("spark.jobGroup.id")).orNull).toSet shouldBe
+        Set("profile-lanes")
+    }
+  }
 }

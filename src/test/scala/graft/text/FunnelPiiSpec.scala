@@ -1,16 +1,40 @@
 package graft.text
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.functions.TextHashes
+
+object FunnelPiiSpec {
+
+  /** Reference form of the native `TextHashes.langPredict`: the
+    * marker-count argmax composed from Columns, one CASE chain whose
+    * decision procedure the DuckDB oracle states too — ties break
+    * alphabetically, zero hits everywhere → "und".
+    */
+  def predictedLang(text: Column): Column = {
+    import TextAnalysis.{LangMarkers, langScore}
+    val scores = LangMarkers.map { case (l, ms) => l -> langScore(text, ms) }
+    val zero = scores.map(_._2).reduce(_ + _) === 0
+    val chain = scores.zipWithIndex.foldRight(lit("und")) {
+      case (((l, s), i), e) =>
+        val beatsAll = scores.zipWithIndex.collect {
+          case ((_, o), j) if j != i => if (j < i) s > o else s >= o
+        }.reduce(_ && _)
+        when(beatsAll, lit(l)).otherwise(e)
+    }
+    when(zero, lit("und")).otherwise(chain)
+  }
+}
 
 class FunnelPiiSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Reference form of TextAnalysis.maxBigramMultiplicity as a Spark
+  /** Reference form of TextHashes.bigramMaxMultiplicity as a Spark
     * higher-order-function chain: sort the bigrams, then fold the runs.
     */
-  private def maxBigramMultiplicityHof(text: org.apache.spark.sql.Column) = {
-    val sorted = array_sort(TextAnalysis.wordBigrams(text))
+  private def maxBigramMultiplicityHof(text: Column) = {
+    val sorted = array_sort(TextHashes.wordBigrams(text))
     val scanned = aggregate(
       sorted,
       struct(lit("").as("prev"), lit(0).as("run"), lit(0).as("best")),
@@ -77,7 +101,7 @@ class FunnelPiiSpec extends SparkSpec {
     it("native scan agrees with the HOF reference on the documents table") {
       val docs = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "documents")
       docs.select(
-          TextAnalysis.maxBigramMultiplicity(col("text")).as("native"),
+          TextHashes.bigramMaxMultiplicity(col("text")).as("native"),
           maxBigramMultiplicityHof(col("text")).as("hof"))
         .filter(col("native") =!= col("hof")).count() shouldBe 0L
     }
@@ -87,7 +111,7 @@ class FunnelPiiSpec extends SparkSpec {
         "all distinct words here",  // all bigrams unique → 1
         "one")                      // no bigrams → 0
         .toDF("text")
-        .select(TextAnalysis.maxBigramMultiplicity(col("text")).as("m"),
+        .select(TextHashes.bigramMaxMultiplicity(col("text")).as("m"),
           TextAnalysis.repetitionRatio(col("text")).as("r"))
         .as[(Long, Double)].collect()
       out(0) shouldBe ((3L, 3.0 / 5.0))
@@ -146,13 +170,13 @@ class FunnelPiiSpec extends SparkSpec {
     it("agrees with the composed-Column argmax on the documents table") {
       val docs = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "documents")
       val both = docs.select(
-        graft.functions.TextHashes.langPredict(col("text")).as("native"),
-        TextAnalysis.predictedLang(col("text")).as("composed"))
+        TextHashes.langPredict(col("text")).as("native"),
+        FunnelPiiSpec.predictedLang(col("text")).as("composed"))
       both.filter(col("native") =!= col("composed")).count() shouldBe 0L
     }
     it("returns 'und' when no marker hits") {
       val out = Seq("xyzzy plugh", "").toDF("text")
-        .select(graft.functions.TextHashes.langPredict(col("text"))).as[String].collect()
+        .select(TextHashes.langPredict(col("text"))).as[String].collect()
       out shouldBe Array("und", "und")
     }
   }

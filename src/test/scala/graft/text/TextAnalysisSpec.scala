@@ -24,10 +24,14 @@ class TextAnalysisSpec extends SparkSpec {
     }
     it("predictedLang picks the language with the most markers") {
       import spark.implicits._
-      Seq("the cat and a dog", "der hund und die katze",
-        "le chat et les autres", "xyzzy plugh")
-        .toDF("text").select(predictedLang(col("text")))
-        .as[String].collect() shouldBe Array("en", "de", "fr", "und")
+      val out = Seq("the cat and a dog", "der hund und die katze",
+          "le chat et les autres", "xyzzy plugh")
+        .toDF("text").select(
+          graft.functions.TextHashes.langPredict(col("text")),
+          FunnelPiiSpec.predictedLang(col("text")))
+        .as[(String, String)].collect()
+      out.map(_._1) shouldBe Array("en", "de", "fr", "und")
+      out.map(_._2) shouldBe out.map(_._1)
     }
     it("rollingFingerprint matches the hand-computed polynomial") {
       import spark.implicits._
