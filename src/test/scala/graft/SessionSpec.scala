@@ -3,7 +3,7 @@ package graft
 class SessionSpec extends SparkSpec {
 
   describe("Session.local") {
-    it("installs GraftExtensions: graft_simhash_poly64 resolves in a new session") {
+    it("installs GraftExtensions: graft_simhash_poly64 in a new session") {
       // a new session starts from the builtin registry plus the injected
       // extensions, so only the extensions can supply it
       val fresh = spark.newSession()

@@ -37,7 +37,7 @@ class DedupAnnSpec extends SparkSpec {
         .as[Array[Long]].head()
       out.length shouldBe 1
     }
-    it("simhashPoly64 is identical for identical token streams") {
+    it("simhashPoly64 agrees on identical token streams") {
       val fps = docs(1L -> "x y z", 2L -> "X  y z")
         .select(TextHashes.simhashPoly64(col("text"))).as[Long].collect()
       fps(0) shouldBe fps(1)
