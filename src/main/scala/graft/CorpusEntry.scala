@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.SegmentDedup
 import graft.ops.{Packing, Sampling}
+import graft.sources.Tables
 import graft.sources.Tables.{load => t}
 import graft.text.TextAnalysis
 
@@ -190,7 +191,7 @@ object CorpusEntry {
     debris.write.parquet(s"$base/docs2.staging") // fresh: must survive
     val st = Vacuum.vacuum(s, base, retentionMs = 3600 * 1000L, now = now)
     import s.implicits._
-    Seq((s.read.parquet(s"$base/docs").count(),
+    Seq((Tables.parquet(s, s"$base/docs").count(),
         st.nCandidates, st.nDeleted,
         fs.exists(new Path(s"$base/docs2.staging")),
         fs.exists(new Path(s"$base/docs"))))

@@ -7,6 +7,7 @@ import graft.functions.TextHashes
 import graft.ml.{Eval, LogRegGd, NaiveBayes, Stump}
 import graft.ops.{IdentityStitch, Sampling}
 import graft.quality.Did
+import graft.sources.Tables
 import graft.sources.Tables.{load => t}
 
 /** q274+: model-evaluation and distributed-training operators — the
@@ -358,7 +359,7 @@ object EvalEntry {
     val path = s"target/scratch/q292_${Scratch.key(dir)}"
     s1.write.mode("overwrite").parquet(path)
     val merged = Moments.merge(
-      Seq(s.read.parquet(path),
+      Seq(Tables.parquet(s, path),
         Moments.state(ev.filter(col("ts") >= cutoff), keys, "cents")),
       keys)
     Moments.finalize(merged).orderBy("event_type")
@@ -551,7 +552,7 @@ object EvalEntry {
     val replayed = graft.streaming.StreamSink.appendExactlyOnce(
       t(s, dir, "events"), 0L, target, ledger)
     require(!replayed, "ledger must skip a replayed batch id")
-    s.read.parquet(target)
+    Tables.parquet(s, target)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(18,6)")).cast("double")

@@ -275,7 +275,7 @@ object ExtendedEntry {
         target, ckpt, "merge", Seq("event_id"))
       try q.processAllAvailable() finally q.stop()
     }
-    s.read.parquet(target)
+    Tables.parquet(s, target)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
@@ -869,7 +869,7 @@ object ExtendedEntry {
     laid.repartition(col("pid")).sortWithinPartitions("zv")
       .write.mode("overwrite").partitionBy("pid").parquet(base)
     // the skipping index is computed over the layout AS WRITTEN
-    val back = s.read.parquet(base)
+    val back = Tables.parquet(s, base)
     ZOrder.skippingStats(back, "o_custkey", "o_totalprice",
         xlo + 0.4 * (xhi - xlo), xlo + 0.6 * (xhi - xlo),
         ylo + 0.4 * (yhi - ylo), ylo + 0.6 * (yhi - ylo))
@@ -947,7 +947,7 @@ object ExtendedEntry {
       .sortWithinPartitions("pid", "l_extendedprice")
       .write.partitionBy("pid").parquet(base)
     // stats come from the WRITTEN layout, not the pre-write plan
-    val back = s.read.parquet(base)
+    val back = Tables.parquet(s, base)
       .groupBy(col("pid").cast("long").as("pid"))
       .agg(count(lit(1)).as("n_rows"),
         min(col("l_extendedprice")).as("v_min"),

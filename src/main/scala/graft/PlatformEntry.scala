@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.dag.Dag
 import graft.functions.TextHashes
 import graft.ops.{Snapshot, StagedSwap}
+import graft.sources.Tables
 import graft.sources.Tables.{load => t}
 
 /** q107+: the platform-surface tail — live JDBC database extraction,
@@ -202,7 +203,7 @@ object PlatformEntry {
     // corpus sketched once; persisted as the reusable index artifact
     StagedSwap.overwrite(s, idxPath)(
       Dedup.minhashIndex(docs, "doc_id", "text").write.parquet(_))
-    val index = s.read.parquet(idxPath)
+    val index = Tables.parquet(s, idxPath)
     val batch = docs.filter(col("doc_id") % 25 === 0)
       .withColumn("doc_id", col("doc_id") + 1000000L)
       .withColumn("text", concat(lit("zq "), col("text")))
@@ -278,7 +279,7 @@ object PlatformEntry {
       .withColumn("doc_id", col("doc_id") + 3000000L)
       .withColumn("text", concat(lit("qv "), col("text")))
     def probe() = Dedup.minhashLshAgainstIndex(
-      s.read.parquet(idxDir), batch, "doc_id", "text")
+      Tables.parquet(s, idxDir), batch, "doc_id", "text")
     // EAGER checkpoint: the pre-OPTIMIZE probe must materialize NOW —
     // a lazy plan would re-read the directory after the rewrite and
     // vacuously "agree" with itself

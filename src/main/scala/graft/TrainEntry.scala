@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextHashes
 import graft.ops.StagedSwap
+import graft.sources.Tables
 import graft.sources.Tables.{load => t}
 
 /** q113+: the training-data tail — leakage-safe splits, mergeable
@@ -521,7 +522,7 @@ object TrainEntry {
     // corpus pages extracted + sketched once; persisted index artifact
     StagedSwap.overwrite(s, idxPath)(
       Dedup.minhashIndex(extracted(docs), "doc_id", "text").write.parquet(_))
-    val index = s.read.parquet(idxPath)
+    val index = Tables.parquet(s, idxPath)
     // the new crawl: near-dup re-crawls under fresh crawl ids
     val batch = extracted(
       docs.filter(col("doc_id") % 25 === 0)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextHashes
+import graft.sources.Tables
 import graft.sources.Tables.{load => t}
 
 /** q130+: the web-graph / warehouse-metadata / product-analytics
@@ -252,7 +253,7 @@ object WebEntry {
     ZoneMap.write(t(s, dir, "orders"), path, "o_orderdate", 12)
     val from = lit("1995-01-01").cast("timestamp")
     val until = lit("1996-01-01").cast("timestamp")
-    val total = s.read.parquet(ZoneMap.manifestPath(path)).count()
+    val total = Tables.parquet(s, ZoneMap.manifestPath(path)).count()
     val cand = ZoneMap.candidateFiles(s, path, from, until).size
     require(cand >= 1 && cand < total,
       s"zone-map pruning ineffective: $cand of $total files")

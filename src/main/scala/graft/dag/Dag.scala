@@ -2,6 +2,7 @@ package graft.dag
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ops.Writer
+import graft.sources.Tables
 
 /** DAG orchestration — the reference's dependency graph with
   * topological execution and cycle detection (datanika
@@ -223,11 +224,11 @@ object Dag {
           frame
         case Table =>
           Writer.write(spark, frame, path, "replace")
-          spark.read.parquet(path)
+          Tables.parquet(spark, path)
         case Incremental(uniqueKey) =>
           val disposition = if (fullRefresh) "replace" else "merge"
           Writer.write(spark, frame, path, disposition, uniqueKey)
-          spark.read.parquet(path)
+          Tables.parquet(spark, path)
       }
       built + (m.name -> result)
     }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** The shared discipline of every persisted derived-artifact index
   * (the q325 LM count tables, the q331 DSIR corpus distribution, the
@@ -185,7 +186,7 @@ object ArtifactIndex {
     val reused: Option[(DataFrame, Row)] =
       if (!exists) None
       else try {
-        val idx = spark.read.parquet(path)
+        val idx = Tables.parquet(spark, path)
         if (metaCols.forall(idx.columns.contains))
           idx.select(metaCols.map(col): _*).head(1).find(accept)
             .map(r => (idx, r))
@@ -202,7 +203,7 @@ object ArtifactIndex {
       case Some((idx, r)) => (idx, Some(r))
       case None =>
         StagedSwap.overwrite(spark, path)(build)
-        val idx = spark.read.parquet(path)
+        val idx = Tables.parquet(spark, path)
         val meta =
           if (metaCols.forall(idx.columns.contains))
             idx.select(metaCols.map(col): _*).head(1).headOption

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.SparkSession
 import org.apache.hadoop.fs.Path
+import graft.sources.Tables
 
 /** Small-file compaction — the lakehouse OPTIMIZE/bin-pack
   * maintenance op (Delta OPTIMIZE, Iceberg rewrite_data_files). A
@@ -39,13 +40,13 @@ object Compaction {
     val before = dataFiles(spark, dir)
     val bytes = before.map(_.getLen).sum
     val want = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val df = spark.read.parquet(dir)
+    val df = Tables.parquet(spark, dir)
     if (before.length <= want)
       return Stats(before.length, bytes, before.length, df.count())
     // coalesce, not repartition: partition merge without an exchange
     StagedSwap.overwrite(spark, dir)(df.coalesce(want).write.parquet(_))
     val after = dataFiles(spark, dir)
     Stats(before.length, bytes, after.length,
-      spark.read.parquet(dir).count())
+      Tables.parquet(spark, dir).count())
   }
 }

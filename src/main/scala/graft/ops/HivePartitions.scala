@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Hive-style directory partitioning (`dt=.../`) — the physical
   * layout every lakehouse table starts from, and the one layout
@@ -26,6 +27,6 @@ object HivePartitions {
     */
   def readRange(spark: SparkSession, path: String, partCol: String,
       lo: Column, hi: Column): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .filter(col(partCol) >= lo && col(partCol) < hi)
 }

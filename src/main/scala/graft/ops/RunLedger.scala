@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sources.Tables
 
 /** Run ledger — the reference's ExecutionService run lifecycle
   * (datanika `services/execution_service.py`: create/start/complete/
@@ -69,7 +70,7 @@ final class RunLedger(spark: SparkSession, path: String) {
       target: Option[String] = None,
       status: Option[String] = None): DataFrame = {
     val all =
-      if (exists) spark.read.parquet(path)
+      if (exists) Tables.parquet(spark, path)
       else spark.createDataFrame(new java.util.ArrayList[Row](), runSchema)
     val t = target.fold(all)(v => all.filter(col("target") === v))
     status.fold(t)(v => t.filter(col("status") === v))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.Tables
 
 /** Versioned parquet table with a commit log — the minimal lakehouse
   * time-travel primitive (`VERSION AS OF` / `TIMESTAMP AS OF`),
@@ -173,7 +174,7 @@ object VersionedTable {
     val all = versions(spark, path)
     val c = pick(all).getOrElse(throw new NoSuchElementException(
       s"$path has no version $what (log has ${all.size} commits)"))
-    spark.read.parquet(new Path(path, c.dir).toString)
+    Tables.parquet(spark, new Path(path, c.dir).toString)
   }
 
   /** VERSION AS OF n. */

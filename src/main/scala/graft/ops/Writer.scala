@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Write dispositions — the reference's dlt `write_disposition`
   * (`append` / `replace` / `merge`, datanika
@@ -67,7 +68,7 @@ object Writer {
       // a file:// or hdfs:// defaultFS)
       val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
       swap(
-        if (fs.exists(target)) merge(spark.read.parquet(path), batch, primaryKey)
+        if (fs.exists(target)) merge(Tables.parquet(spark, path), batch, primaryKey)
         else batch)
     case other => throw new IllegalArgumentException(s"Unknown write_disposition: $other")
     }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** File-level zone maps (min/max data skipping) — the lakehouse
   * primitive behind Delta/Iceberg file pruning, and the batch-read
@@ -36,7 +37,7 @@ object ZoneMap {
       .sortWithinPartitions(sortCol)
       .write.mode("overwrite").parquet(path)
     val spark = df.sparkSession
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .select(input_file_name().as("file"), col(sortCol))
       .groupBy("file")
       .agg(min(sortCol).as("lo"), max(sortCol).as("hi"),
@@ -51,7 +52,7 @@ object ZoneMap {
     */
   def candidateFiles(spark: SparkSession, path: String,
       from: Column, until: Column): Seq[String] =
-    spark.read.parquet(manifestPath(path))
+    Tables.parquet(spark, manifestPath(path))
       .filter(col("lo").isNull || (col("hi") >= from && col("lo") < until))
       .select("file").collect().map(_.getString(0)).toSeq
 
@@ -65,8 +66,8 @@ object ZoneMap {
     val base =
       if (files.isEmpty)
         // empty selection: preserve schema via a zero-row filter
-        spark.read.parquet(path).filter(lit(false))
-      else spark.read.parquet(files: _*)
+        Tables.parquet(spark, path).filter(lit(false))
+      else Tables.parquet(spark, files: _*)
     base.filter(col(sortCol) >= from && col(sortCol) < until)
   }
 }

@@ -7,9 +7,11 @@ import org.apache.spark.sql.functions._
   * (warn_after / error_after vs max(loaded_at); datanika
   * `services/dbt_project.py:637-655,729-742`).
   *
-  * One max() aggregate per source (metadata-only on parquet when
-  * statistics are present). `asOfMs` is an explicit parameter so runs
-  * are reproducible — production callers pass the wall clock.
+  * One max() aggregate per source. Spark does not answer it from
+  * parquet footer statistics: the check scans the loaded-at column of
+  * every row, so its cost grows with the table. `asOfMs` is an
+  * explicit parameter so runs are reproducible — production callers
+  * pass the wall clock.
   */
 object Freshness {
   val Pass = "pass"

@@ -38,7 +38,7 @@ final class CatalogEntries(spark: SparkSession, path: String) {
   }
 
   private def all(): DataFrame =
-    if (exists) spark.read.parquet(path)
+    if (exists) Tables.parquet(spark, path)
     else spark.createDataFrame(new java.util.ArrayList[Row](), entrySchema)
 
   /** Insert or update, preserving created_at on update (reference

@@ -61,6 +61,6 @@ object Database {
     frames.toSeq.sortBy(_._1).map { case (name, df) =>
       val cfg = perTable.getOrElse(name, TableConfig())
       Writer.write(spark, df, s"$destDir/$name", cfg.disposition, cfg.primaryKey)
-      name -> spark.read.parquet(s"$destDir/$name").count()
+      name -> Tables.parquet(spark, s"$destDir/$name").count()
     }.toMap
 }

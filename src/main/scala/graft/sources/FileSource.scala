@@ -26,6 +26,7 @@ object FileSource {
       schema: Option[StructType] = None): DataFrame = {
     require(SupportedTypes.contains(format), s"Unsupported file type: $format")
     val full = glob.map(g => s"$path/$g").getOrElse(path)
+    if (format == "parquet" && schema.isEmpty) return Tables.parquet(spark, full)
     var r = spark.read.format(format)
     schema.foreach(sc => r = r.schema(sc))
     format match {

@@ -1,6 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.concurrent.TrieMap
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Cursor-based incremental extraction — the reference's
@@ -9,10 +12,15 @@ import org.apache.spark.sql.functions._
   * validation in `services/upload_service.py:156-173`).
   *
   * Re-expressed as a predicate on the cursor column so the bound is
-  * PUSHED INTO THE SCAN (parquet row-group skipping / partition
-  * pruning at scale) — the engine never reads rows at or below the
-  * watermark, which is what makes incremental ingestion O(new data)
-  * instead of O(table) on a 100 TB table partitioned by the cursor.
+  * PUSHED INTO THE SCAN. Only a source that can skip by the cursor
+  * makes that O(new data): parquet row-group statistics or a table
+  * partitioned by the cursor let the engine leave rows at or below the
+  * watermark unread. A CSV or JSON landing glob has neither, so every
+  * landed file is parsed again on each run and the predicate only
+  * drops rows after parsing: O(landed data), not O(new data).
+  *
+  * The watermark itself costs no Spark job to read back while it is
+  * the one this session saved (see [[loadState]]).
   */
 object Incremental {
   final case class State(lastValue: Option[Any])
@@ -55,6 +63,10 @@ object Incremental {
     * clobber the stored watermark with null, and a late re-run of an
     * old batch must not move the watermark backwards — the persisted
     * value is greatest(previous, batch max).
+    *
+    * The value swapped in is remembered for this session together with
+    * the state path's listing, so [[loadState]] answers it without a
+    * read-back job until the files at the path change.
     */
   def saveState(df: DataFrame, cursorPath: String, statePath: String): Unit = {
     val spark = df.sparkSession
@@ -67,22 +79,56 @@ object Incremental {
     }
     // head() decides whether there is a watermark to store at all
     val row = merged.head()
-    if (!row.isNullAt(0))
+    if (!row.isNullAt(0)) {
       graft.ops.StagedSwap.overwrite(spark, statePath)(
         spark.createDataFrame(java.util.Collections.singletonList(row), merged.schema)
           .coalesce(1).write.parquet(_))
+      val (key, listing) = stateFiles(spark, statePath)
+      listing.foreach(l => written(spark).put(key, (l, row.get(0))))
+    }
   }
 
   /** Load the persisted watermark; None when no state exists yet
-    * (first run) or the stored value is null.
+    * (first run) or the stored value is null. State this session
+    * swapped in, still as it left it, is answered from memory without
+    * a Spark job; any other state is read from its parquet.
     */
-  def loadState(spark: org.apache.spark.sql.SparkSession, statePath: String): State = {
-    val p = new org.apache.hadoop.fs.Path(statePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) State(None)
-    else {
-      val row = spark.read.parquet(statePath).head()
-      State(if (row.isNullAt(0)) None else Some(row.get(0)))
+  def loadState(spark: SparkSession, statePath: String): State = {
+    val (key, listing) = stateFiles(spark, statePath)
+    listing match {
+      case None => State(None)
+      case Some(l) => written(spark).get(key) match {
+        case Some((`l`, value)) => State(Some(value))
+        case _ =>
+          val row = Tables.parquet(spark, statePath).head()
+          State(if (row.isNullAt(0)) None else Some(row.get(0)))
+      }
     }
+  }
+
+  /** Per session, since the watermark's Java type follows the
+    * session's conf: qualified state path → (its listing, the watermark
+    * [[saveState]] wrote there). A listing that no longer matches
+    * means the state was rewritten or removed since.
+    */
+  private val sessions =
+    new java.util.WeakHashMap[SparkSession, TrieMap[String, (Seq[(String, Long, Long)], Any)]]()
+
+  private def written(spark: SparkSession) = sessions.synchronized {
+    sessions.computeIfAbsent(spark, _ => TrieMap.empty)
+  }
+
+  /** The qualified state path and its files (name, length, mtime),
+    * None when nothing is at the path.
+    */
+  private def stateFiles(spark: SparkSession,
+      statePath: String): (String, Option[Seq[(String, Long, Long)]]) = {
+    val p = new Path(statePath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listing =
+      try Some(fs.listStatus(p).toSeq
+        .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted)
+      catch { case _: java.io.FileNotFoundException => None }
+    (fs.makeQualified(p).toString, listing)
   }
 }

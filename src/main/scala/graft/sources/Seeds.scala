@@ -30,7 +30,7 @@ object Seeds {
         val df = FileSource.normalizeColumns(
           FileSource.read(spark, "csv", s"$seedsDir/$name.csv"))
         Writer.write(spark, df, s"$warehouseDir/$name", "replace")
-        name -> spark.read.parquet(s"$warehouseDir/$name")
+        name -> Tables.parquet(spark, s"$warehouseDir/$name")
       }.toMap
   }
 }

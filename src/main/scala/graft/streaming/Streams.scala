@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import graft.sources.Tables
 
 /** Structured Streaming surface for the events table.
   *
@@ -40,7 +41,7 @@ object Streams {
     // no files yet (stream declared before the first ingest lands):
     // fall back to the epoch-ns-long contract type — the declared
     // schema then matches what normalizeTsNs would have produced
-    try spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+    try Tables.parquet(spark, s"$dir/events.parquet").schema("ts").dataType
     catch { case _: org.apache.spark.sql.AnalysisException => LongType }
   }
 

@@ -20,8 +20,9 @@ import org.scalatest.matchers.should.Matchers
   * lowercase `\s+` token array is the native `TextHashes.wordNgrams`
   * and every DuckDB restatement of it is `TextHashes.wordTokensSql`,
   * and the removed xxhash SimHash, imperative function registration
-  * and barrier-bypass switch stay gone. Comment lines are ignored;
-  * code is not.
+  * and barrier-bypass switch stay gone. Parquet is read only by
+  * `Tables.parquet`, which takes schemas from footers on the driver.
+  * Comment lines are ignored; code is not.
   */
 class SourceGuardSpec extends AnyFunSpec with Matchers {
 
@@ -45,6 +46,8 @@ class SourceGuardSpec extends AnyFunSpec with Matchers {
   private val Materialize =
     """\.\s*(persist|unpersist|localCheckpoint)\s*\(|\.\s*cache\s*\(\s*\)"""
   private val Rename = """\.\s*rename\s*\("""
+  private val ParquetRead =
+    """\bread\s*\.\s*(parquet\s*\(|format\s*\(\s*"parquet"\s*\))"""
   private val ThetaLib = """\borg\.apache\.datasketches\.theta\b"""
   private val KllLib = """\borg\.apache\.datasketches\.kll\b"""
   private val HofTokenizer = """split\s*\(\s*lower\s*\(.*"\\\\s\+"""
@@ -101,6 +104,10 @@ class SourceGuardSpec extends AnyFunSpec with Matchers {
     it("renames paths only in StagedSwap, VersionedTable and the q63 fixture") {
       filesMatching(Rename).filter(_.startsWith("main/")) shouldBe renamers
     }
+    it("reads parquet only in Tables.parquet") {
+      filesMatching(ParquetRead).filter(_.startsWith("main/")) shouldBe
+        Set("main/scala/graft/sources/Tables.scala")
+    }
     it("uses DataSketches theta and KLL only through Spark's functions, " +
         "besides SketchAgg's rank-error bound") {
       filesMatching(ThetaLib).filter(_.startsWith("main/")) shouldBe empty
@@ -137,6 +144,15 @@ class SourceGuardSpec extends AnyFunSpec with Matchers {
       calls.filterNot(c => found(Rename, codeLines(s"val ok = $c"))) shouldBe empty
       found(Rename, codeLines("// fs.rename(a, b)\n * fs.rename(a, b)")) shouldBe false
       found(Rename, codeLines("df.withColumnRenamed(a, b).renamed(c)")) shouldBe false
+    }
+    it("sees every parquet read form, but not writes or comments") {
+      val reads = Seq("spark.read.parquet(p)", "s.read\n  .parquet(a, b)",
+        "spark.read.format(\"parquet\").load(p)", "spark.read . format( \"parquet\" )")
+      reads.filterNot(c => found(ParquetRead, codeLines(s"val df = $c"))) shouldBe empty
+      found(ParquetRead, codeLines("// spark.read.parquet(p)\n * s.read.parquet(p)")) shouldBe false
+      found(ParquetRead, codeLines("df.write.parquet(p); df.write.format(\"parquet\")")) shouldBe
+        false
+      found(ParquetRead, codeLines("spark.read.format(\"csv\").load(p)")) shouldBe false
     }
     it("sees every tokenizer form, but not the space split or comments") {
       val hof = Seq("filter(split(lower(c), \"\\\\s+\"), t => length(t) > 0)",
